@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .artifacts import artifact
+
 TABLES = (
     "region",
     "nation",
@@ -78,37 +80,17 @@ _TS_NS_TO_NTZ = (
 )
 
 
-# (applicationId, fixture_token, table) → UNMATERIALIZED DataFrame.
-# Memoizing the lazy plan object (r9, guide §1.2 step 2): every
-# `spark.read.parquet` call costs ~90 ms of driver work (py4j round
-# trips, file listing, footer schema read) and the engine issues
-# hundreds per bench pass. This is plan-construction memoization, NOT
-# result caching — nothing is persisted or computed here; every action
-# still scans the parquet inputs. The fixture token (file size+mtime)
-# keys the entry, so a driver-side fixture regeneration invalidates it
-# automatically, and the applicationId scopes it to one session.
-_TABLE_MEMO: dict[tuple[str, str, str, str], DataFrame] = {}
-
-
+# A session artifact holding the UNMATERIALIZED DataFrame (r9, guide
+# §1.2 step 2): every `spark.read.parquet` call costs ~90 ms of driver
+# work (py4j round trips, file listing, footer schema read) and the
+# engine issues hundreds per bench pass. This is plan-construction
+# memoization, NOT result caching — nothing is persisted or computed
+# here; every action still scans the parquet inputs.
+@artifact
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table with its canonical engine schema."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    memo_key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        fixture_token(sf_dir),
-        name,
-    )
-    got = _TABLE_MEMO.get(memo_key)
-    if got is not None:
-        return got
-    df = _load_table_uncached(spark, sf_dir, name)
-    _TABLE_MEMO[memo_key] = df
-    return df
-
-
-def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # Harmless when the file is micros; required when it is nanos.
@@ -139,6 +121,7 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     return spark.read.parquet(path)
 
 
+@artifact
 def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Like ``load_table`` but guaranteed ≥ defaultParallelism partitions.
 
@@ -150,15 +133,6 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     scale the scan already has thousands of splits and this is a no-op
     (the branch below does nothing when partitions ≥ cores).
     """
-    memo_key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        fixture_token(sf_dir),
-        name + ":parallel",
-    )
-    got = _TABLE_MEMO.get(memo_key)
-    if got is not None:
-        return got
     df = load_table(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
     # file count as the split proxy — len(inputFiles()) is a pure file
@@ -166,7 +140,6 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     # plan compile per call
     if len(df.inputFiles()) < target:
         df = df.repartition(target)
-    _TABLE_MEMO[memo_key] = df
     return df
 
 
@@ -174,21 +147,15 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-_VIEWS_REGISTERED: set[tuple[str, str]] = set()
-
-
+@artifact
 def register_sql_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose every fixture table as a temp view so users can drive the
     engine through plain ``spark.sql`` — the DataFrame registry and the
     SQL surface are the same Catalyst plans either way. Idempotent per
     (session, sf_dir): repeat calls (every sql_gateway invocation) skip
     the ~10-table re-read/re-register driver work."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _VIEWS_REGISTERED:
-        return
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    _VIEWS_REGISTERED.add(key)
 
 
 # ---------------------------------------------------------------------------

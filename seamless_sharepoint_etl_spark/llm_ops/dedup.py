@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io
+from ..artifacts import artifact
 from ..operators import bloom
 
 JACCARD_THRESHOLD = 0.8
@@ -88,17 +89,14 @@ def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", F.explode(F.expr(_SHINGLE_ARRAY)).alias("shingle"))
 
 
-# Session-scoped cache of the hashed-shingle relation, keyed by
-# (applicationId, sf_dir). Every dedup operator starts from this
-# relation — ngram_jaccard builds postings from it, minhash builds
+# Session artifact: the hashed-shingle relation. Every dedup operator
+# starts from it — ngram_jaccard builds postings from it, minhash builds
 # signatures from it, AND the LSH verify pass re-reads it — so in a
 # suite run (bench, driver grading) it was rebuilt from raw text up to
 # 4×, which round 1 measured as ~49% of total bench wall. Persisting
 # it once per (session, dataset) is the shared-scan pattern a 100 TB
 # dedup job uses anyway: shingle once, feed every candidate generator.
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@artifact
 def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_sh, h): doc's distinct-shingle count + 64-bit shingle keys.
 
@@ -107,10 +105,6 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte keys instead of ~50-byte strings. Collisions (~|sh|²/2⁶⁴)
     are the standard accepted error of hashed-shingle dedup.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = io.load_table_parallel(spark, sf_dir, "documents")
     sh = d.select(
         "doc_id", F.expr(_SHINGLE_ARRAY).alias("sh_arr")
@@ -121,9 +115,7 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark import StorageLevel
 
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    _SHINGLE_CACHE[key] = sh
-    return sh
+    return sh.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 # ordered pairs from one posting list, sizes carried along — pure array
@@ -997,21 +989,15 @@ _MH_HASH_DUCK = (
 )
 
 
-# Session-scoped cache of the PORTABLE hashed-shingle relation
+# Session artifact: the PORTABLE hashed-shingle relation
 # (doc_id, ph) — the polynomial-31 char fold both engines reproduce.
 # Shared by dedup_minhash_estimate and dedup_estimator_pr (which
 # consumes it twice more through the verify pass); the interpreted
 # char-fold over every shingle is the dominant cost, so like
-# _SHINGLE_CACHE it is built once per (session, corpus) and staged in
+# _hashed_shingles it is built once per (session, corpus) and staged in
 # bench setup with the other index-class artifacts.
-_PSHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@artifact
 def _portable_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PSHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
     psh = (
         _shingles_df(spark, sf_dir)
         .select("doc_id", F.expr(_MH_HASH_SPARK).alias("ph"))
@@ -1019,7 +1005,6 @@ def _portable_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     psh.count()  # eager: lazy shared caches flip later join strategies (trap 17)
-    _PSHINGLE_CACHE[key] = psh
     return psh
 
 
@@ -1207,7 +1192,7 @@ def simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums and CASEs, so the driver hash-matches every fingerprint.
 
     Scale shape: identical to the xxhash64 twin — the session token
-    spine (``text._TOKEN_CACHE``; this query's exploded-token subtree
+    spine (``text._token_relation``; this query's exploded-token subtree
     canonicalizes to it anyway, so consuming it explicitly keeps the
     plan cache-state-independent — trap 21), one map-side-combined
     groupBy carrying {SIMHASH_PORT_BITS} small ints per doc per

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io, portable
+from ..artifacts import artifact
 from .dedup import NGRAM_JACCARD_SQL
 from .similarity import (
     EMBEDDING_NEARDUP_SQL,
@@ -33,9 +34,12 @@ from .similarity import (
 )
 
 
+# The edge relations are session artifacts every graph query reads,
+# persisted lazily (the blocked-BLAS generator runs once per session).
+@artifact
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oriented (id_lo < id_hi) near-dup edge relation."""
-    return embedding_neardup(spark, sf_dir).select("id_lo", "id_hi")
+    return embedding_neardup(spark, sf_dir).select("id_lo", "id_hi").persist()
 
 
 # kcore-specific edge threshold, deliberately below NEARDUP_COS: the
@@ -49,13 +53,14 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 KCORE_EDGE_COS = 0.34
 
 
+@artifact
 def _kcore_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Denser oriented edge relation for the k-core peel (see
     KCORE_EDGE_COS). Same blocked-BLAS generator as _edges — only the
     admission threshold differs."""
     return embedding_neardup(spark, sf_dir, threshold=KCORE_EDGE_COS).select(
         "id_lo", "id_hi"
-    )
+    ).persist()
 
 
 def _degrees(e: DataFrame, out: str = "d") -> DataFrame:
@@ -93,7 +98,6 @@ def triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines, emitted as basis points.
     """
     e = _edges(spark, sf_dir)
-    e.persist()
     ab = e.select(F.col("id_lo").alias("a"), F.col("id_hi").alias("b"))
     bc = e.select(F.col("id_lo").alias("b"), F.col("id_hi").alias("c"))
     ac = e.select(F.col("id_lo").alias("a"), F.col("id_hi").alias("c"))
@@ -415,7 +419,6 @@ def jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (jaccard, a, b) is a total order, so the top-k is deterministic.
     """
     e = _edges(spark, sf_dir)
-    e.persist()
     adj = e.select(F.col("id_lo").alias("v"), F.col("id_hi").alias("w")).unionAll(
         e.select(F.col("id_hi").alias("v"), F.col("id_lo").alias("w"))
     )
@@ -511,7 +514,6 @@ def label_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture SF).
     """
     e = _edges(spark, sf_dir)
-    e.persist()
     lab = io.load_table_parallel(spark, sf_dir, "embeddings").select(
         "vec_id", "label"
     )
@@ -598,7 +600,6 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the near-dup graph's degrees are bounded by cluster sizes).
     """
     e = _edges(spark, sf_dir)
-    e.persist()
     deg = _degrees(e)
     da = deg.select(F.col("v").alias("id_lo"), F.col("d").alias("dj"))
     db = deg.select(F.col("v").alias("id_hi"), F.col("d").alias("dk"))
@@ -675,7 +676,6 @@ def local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing is quadratic in vertices.
     """
     e = _edges(spark, sf_dir)
-    e.persist()
     ab = e.select(F.col("id_lo").alias("a"), F.col("id_hi").alias("b"))
     bc = e.select(F.col("id_lo").alias("b"), F.col("id_hi").alias("c"))
     ac = e.select(F.col("id_lo").alias("a"), F.col("id_hi").alias("c"))
@@ -746,7 +746,6 @@ def edge_support_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     count) histogram, so result size is O(max support), not O(edges).
     """
     e = _edges(spark, sf_dir)
-    e.persist()
     ab = e.select(F.col("id_lo").alias("a"), F.col("id_hi").alias("b"))
     bc = e.select(F.col("id_lo").alias("b"), F.col("id_hi").alias("c"))
     ac = e.select(F.col("id_lo").alias("a"), F.col("id_hi").alias("c"))
@@ -844,7 +843,6 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached input (r9 diagnosis).
     """
     e = _edges(spark, sf_dir)
-    e.persist()
     bidir = e.select(
         F.col("id_lo").alias("src"), F.col("id_hi").alias("dst")
     ).unionAll(e.select(F.col("id_hi").alias("src"), F.col("id_lo").alias("dst")))
@@ -912,41 +910,16 @@ PAGERANK_EXACT_SQL = _pagerank_sql()
 
 CC_MAX_ROUNDS = 50
 
-# Session-scoped (k, label) relation of the n-gram-Jaccard near-dup
-# graph, keyed like the shingle/token caches: neardup_cc_exact and
-# dedup.keep_best_canonical cluster the IDENTICAL edge set, so the
-# fixpoint loop runs once per (session, corpus) and is served from the
-# final localCheckpoint thereafter.
-# Session cache of localCheckpoint-ed CC label relations, keyed by
-# (applicationId, sf_dir). Retention policy (ADVICE r6): NO eviction
-# by design — same as the shingle/token caches; a long-lived session
-# sweeping many fixture dirs accumulates one small checkpointed
-# relation per corpus (the label table is O(near-dup vertices), a few
-# hundred rows at fixture scale), and a lost executor invalidates the
-# non-reliable checkpoint for every consumer at once, which surfaces
-# as a recompute, not a wrong answer. clear_cc_label_cache() exists
-# for harnesses that need deterministic memory (trap-16 family).
-_CC_LABEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_cc_label_cache() -> None:
-    """Drop every cached CC label relation (the checkpointed RDD blocks
-    are reclaimed by the ContextCleaner once unreferenced)."""
-    _CC_LABEL_CACHE.clear()
-
-
-# Introspection: rounds the LAST _min_label_cc invocation took to
-# converge (set on every call; read by tests and the optimization log
-# to evidence the pointer-doubling round count).
-_CC_LAST_ROUNDS = 0
-
-
-def _min_label_cc(edges: DataFrame, max_rounds: int, what: str) -> DataFrame:
+def _min_label_cc(
+    edges: DataFrame, max_rounds: int, what: str
+) -> tuple[DataFrame, int]:
     """Exact min-label connected components over an undirected edge
-    relation (first column, second column) — returns ``(k, label)``
-    with ``label`` = the component's minimum member id, one row per
-    vertex that appears in ``edges`` (isolated vertices are absent;
-    callers coalesce to the vertex's own id).
+    relation (first column, second column) — returns ``(labels,
+    rounds)``: ``labels`` is ``(k, label)`` with ``label`` = the
+    component's minimum member id, one row per vertex that appears in
+    ``edges`` (isolated vertices are absent; callers coalesce to the
+    vertex's own id), and ``rounds`` is how many rounds the loop took
+    to converge.
 
     Scale: per round one vertex-keyed hash join + min-aggregate
     (relax) plus one label-keyed self-join (pointer doubling),
@@ -974,10 +947,8 @@ def _min_label_cc(edges: DataFrame, max_rounds: int, what: str) -> DataFrame:
     # aggregate per round instead of a join + count job. The agg also
     # materializes the round's LAZY checkpoint in the same job
     # (sum(label) touches every partition).
-    global _CC_LAST_ROUNDS
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     for rnd in range(max_rounds):
-        _CC_LAST_ROUNDS = rnd + 1
         msgs = sym.join(labels, sym.ka == labels.k).select(
             F.col("kb").alias("k"), "label"
         )
@@ -1014,23 +985,23 @@ def _min_label_cc(edges: DataFrame, max_rounds: int, what: str) -> DataFrame:
         prev_sum = new_sum
     else:
         raise RuntimeError(f"{what} did not converge in {max_rounds} rounds")
-    return labels
+    return labels, rnd + 1
 
 
+# The (k, label) relation is a session artifact: neardup_cc_exact and
+# dedup.keep_best_canonical cluster the IDENTICAL edge set, so the
+# fixpoint loop runs once per (session, corpus) and is served from the
+# final localCheckpoint thereafter.
+@artifact
 def neardup_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(k, label)`` min-label components of the n-gram-Jaccard
     near-dup graph, computed once per (session, corpus) — the shared
     partition behind ``graph_neardup_cc_exact`` and
     ``dedup_keep_best_canonical``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CC_LABEL_CACHE.get(key)
-    if cached is not None:
-        return cached
     from .dedup import ngram_jaccard_pairs
 
     e = ngram_jaccard_pairs(spark, sf_dir).select("doc_lo", "doc_hi")
-    labels = _min_label_cc(e, CC_MAX_ROUNDS, "neardup min-label CC")
-    _CC_LABEL_CACHE[key] = labels
+    labels, _rounds = _min_label_cc(e, CC_MAX_ROUNDS, "neardup min-label CC")
     return labels
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io, portable
+from ..artifacts import artifact
 from .dedup import _hashed_shingles, _SHINGLES_SQL
 
 # ---------------------------------------------------------------------------
@@ -254,15 +255,13 @@ _GRAM_TERMS_DUCK = " + ".join(
 )
 
 
-_WINNOW_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@artifact
 def _winnow_sel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_grams, n_windows, fps): the per-document winnowing
     fingerprint sets — ONE builder feeding both the per-doc reductions
     (`text_winnow_fingerprint`) and the cross-document span matcher
-    (`text_winnow_crossdoc`). Session-cached (same artifact class as
-    `_token_relation` / `_SHINGLE_CACHE`: at 100 TB the fingerprint
+    (`text_winnow_crossdoc`). A session artifact (same class as
+    `_token_relation` / `_hashed_shingles`: at 100 TB the fingerprint
     index is materialized once per corpus snapshot and every consumer
     reads it).
 
@@ -275,10 +274,6 @@ def _winnow_sel(spark: SparkSession, sf_dir: str) -> DataFrame:
     RegExpReplace.nullSafeEval under BinaryArithmetic.eval).
     Materializing here evaluates the normalization exactly once per
     document."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _WINNOW_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = io.load_table_parallel(spark, sf_dir, "documents")
     base = d.select(
         "doc_id",
@@ -316,7 +311,6 @@ def _winnow_sel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("fps"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     sel.count()  # eager fill: trap 17 (AQE reads cache stats)
-    _WINNOW_CACHE[key] = sel
     return sel
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io
+from ..artifacts import artifact
 
 TOP_K = 10
 QUERY_STRIDE = 50  # vec_id % 50 == 0 → the query subset
@@ -506,19 +507,13 @@ def _kmeans_buckets(v: DataFrame, k: int, iters: int) -> DataFrame:
     return assign.select("vec_id", "bucket"), cent
 
 
-# Session-scoped trained IVF index — (bucket assignment, centroids) per
-# (application, sf_dir). In production an IVF coarse quantizer is
+# Session artifact: the trained IVF index — (bucket assignment,
+# centroids). In production an IVF coarse quantizer is
 # trained once and served to every query; retraining per query would
 # re-run 3 Lloyd passes over the 100-TB embedding table each time. Both
 # the float (ivf_topk) and int8 (quantized_topk) paths share it.
-_IVF_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@artifact
 def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _IVF_CACHE.get(key)
-    if got is not None:
-        return got
     from pyspark import StorageLevel
 
     e = io.load_table_parallel(spark, sf_dir, "embeddings")
@@ -536,20 +531,16 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # happened to materialize the cache (AQE reads cached-relation
     # stats, so a lazy cache makes join strategies cache-state-dependent)
     buckets.count()
-    _IVF_CACHE[key] = (buckets, cent)
     return buckets, cent
 
 
-# Session-scoped router output — (probes, cand) per (application,
-# sf_dir). Five consumers (float IVF, int8, PQ, two-stage rerank,
+# Session artifact: the router output — (probes, cand). Five consumers (float IVF, int8, PQ, two-stage rerank,
 # SemDeDup) each reference probes/cand 2-3×; Catalyst inlines every
 # reference as its own subtree (plans are trees, not DAGs), so without
 # the cache the window-over-crossJoin probe assignment recomputes per
 # reference. In production this IS the serving layout: route the query
 # batch once, every scorer reads the routed relations.
-_ROUTER_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@artifact
 def _ivf_probes_and_candidates(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -564,10 +555,6 @@ def _ivf_probes_and_candidates(
     the base table is one equi-join on vec_id. Both relations are
     session-cached eagerly (trap 17).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _ROUTER_CACHE.get(key)
-    if got is not None:
-        return got
     e = io.load_table_parallel(spark, sf_dir, "embeddings")
     # zero-norm policy (matches _ivf_index): degenerate vectors are
     # excluded from both the query batch and the bucketed base table
@@ -607,7 +594,6 @@ def _ivf_probes_and_candidates(
     probes.count()
     cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
     cand.count()
-    _ROUTER_CACHE[key] = (probes, cand)
     return probes, cand
 
 
@@ -1005,10 +991,6 @@ PQ_K = 16  # codes per subspace (4-bit codes)
 PQ_ITERS = 2
 PQ_TRAIN_STRIDE = 5  # Lloyd runs on a 1/5 sample; encoding is full-table
 
-# Session-scoped trained PQ codebook + encoded table, keyed like the IVF
-# index: a PQ index is trained once and served, never retrained per query.
-_PQ_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
 
 def _subvectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, m, sv): the vector cut into PQ_M contiguous sub-vectors."""
@@ -1034,6 +1016,10 @@ def _l2sq(a, b):
     )
 
 
+# The trained PQ codebook + encoded table is a session artifact like the
+# IVF index: a PQ index is trained once and served, never retrained per
+# query.
+@artifact
 def _pq_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
@@ -1066,10 +1052,6 @@ def _pq_index(
     vec_id); centroid means stay distributed (posexplode + two-level
     agg); every Lloyd pass is forced eagerly (NOTES trap 4/17).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _PQ_CACHE.get(key)
-    if got is not None:
-        return got
     from pyspark import StorageLevel
 
     e = io.load_table_parallel(spark, sf_dir, "embeddings")
@@ -1185,7 +1167,6 @@ def _pq_index(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     pmeta.count()
-    _PQ_CACHE[key] = (codes, cent, cnorm, pmeta)
     return codes, cent, cnorm, pmeta
 
 

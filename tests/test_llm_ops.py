@@ -2011,12 +2011,12 @@ def test_min_label_cc_pointer_doubling_converges_in_log_rounds(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "a long, b long"
     )
-    labels = graph._min_label_cc(edges, 20, "pointer-doubling test")
+    labels, rounds = graph._min_label_cc(edges, 20, "pointer-doubling test")
     rows = {r["k"]: r["label"] for r in labels.collect()}
     assert rows == {i: 0 for i in range(n)}, "path must collapse to label 0"
     # log2(63) ≈ 6 doubling rounds + 1 detection round; one-hop needs 64
-    assert graph._CC_LAST_ROUNDS <= 10, (
-        f"doubling took {graph._CC_LAST_ROUNDS} rounds on a 64-path — "
+    assert rounds <= 10, (
+        f"doubling took {rounds} rounds on a 64-path — "
         "O(log d) convergence regressed"
     )
 

@@ -224,31 +224,15 @@ def test_registry_wide_plan_audit(spark):
 
 
 def _repersist_session_caches():
-    """Re-mark every module-level session-cache DataFrame as persisted
-    (clearCache() unpersists them but the module dicts keep returning
-    the same objects, so consumers would silently re-expand the shared
+    """Re-mark every persisted session-artifact DataFrame as persisted
+    (clearCache() unpersists them but the store keeps returning the
+    same objects, so consumers would silently re-expand the shared
     subtrees)."""
-    from seamless_sharepoint_etl_spark.llm_ops import (
-        dedup as _dedup,
-        scoring as _scoring,
-        similarity as _sim,
-        text as _text,
-    )
+    from seamless_sharepoint_etl_spark import artifacts
 
-    for mod, attr in (
-        (_dedup, "_SHINGLE_CACHE"),
-        (_dedup, "_PSHINGLE_CACHE"),
-        (_text, "_TOKEN_CACHE"),
-        (_text, "_BIGRAM_CACHE"),
-        (_scoring, "_WINNOW_CACHE"),
-        (_sim, "_IVF_CACHE"),
-        (_sim, "_ROUTER_CACHE"),
-        (_sim, "_PQ_CACHE"),
-    ):
-        for val in getattr(mod, attr, {}).values():
-            for df in val if isinstance(val, tuple) else (val,):
-                if hasattr(df, "persist"):
-                    df.persist()
+    for df in artifacts.frames():
+        if df.is_cached:
+            df.persist()
 
 
 def test_registry_wide_duplicate_scan_audit(spark):

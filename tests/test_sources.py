@@ -425,6 +425,50 @@ def test_staging_invalidated_when_fixture_regenerates(spark, tmp_path):
     )
 
 
+def test_session_artifacts_invalidated_when_fixture_regenerates(spark, tmp_path):
+    """Persisted session artifacts must not outlive a regenerated
+    fixture either. Keying on the fixture token alone is not enough:
+    while a persisted DataFrame over the old file is alive, Spark's
+    CacheManager also serves its rows to a fresh read of the same
+    path, so the store must unpersist the stale entries."""
+    import os
+    import time
+
+    import pandas as pd
+
+    from seamless_sharepoint_etl_spark import io
+    from seamless_sharepoint_etl_spark.llm_ops import text
+
+    d = str(tmp_path)
+
+    def write_documents(texts):
+        pd.DataFrame(
+            {
+                "doc_id": list(range(len(texts))),
+                "text": texts,
+                "lang": ["en"] * len(texts),
+                "source": ["s"] * len(texts),
+                "n_chars": [len(t) for t in texts],
+            }
+        ).to_parquet(os.path.join(d, "documents.parquet"))
+
+    def tokens():
+        return sorted(tuple(r) for r in text._token_relation(spark, d).collect())
+
+    write_documents(["old words here", "old again"])
+    assert tokens() == [
+        (0, "here"), (0, "old"), (0, "words"), (1, "again"), (1, "old")
+    ]
+
+    time.sleep(0.02)  # ensure a distinct mtime_ns
+    write_documents(["new text"])
+    assert tokens() == [(0, "new"), (0, "text")], (
+        "the persisted token relation outlived the fixture change"
+    )
+    got = [r["text"] for r in io.load_table(spark, d, "documents").collect()]
+    assert got == ["new text"]
+
+
 def test_sqlite_partitioned_scan_pushdown_and_bounds(spark):
     """The SQLite federated scan must be a REAL partitioned, pushed
     read: (a) the staged database's range query executes as an index

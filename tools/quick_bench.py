@@ -21,27 +21,24 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     n_runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
-    from seamless_sharepoint_etl_spark import registry
+    from seamless_sharepoint_etl_spark import artifacts, registry
     from seamless_sharepoint_etl_spark.session import get_spark
 
     spark = get_spark("quick-bench")
     queries = registry.queries()
 
-    # warm pass at the smallest SF (codegen), then one warm pass at the
-    # target SF so caches/indexes any family shares are filled, as
-    # bench.py's setup phase would have.
+    # bench.py's setup: the session artifacts, then a codegen pass at
+    # the smallest SF
+    artifacts.warm(spark, sf_dir)
     warm_sf = "/root/testdata/sf0.001"
-    for name in names:
-        if os.path.isdir(warm_sf) and warm_sf != sf_dir:
+    if os.path.isdir(warm_sf) and warm_sf != sf_dir:
+        for name in names:
             try:
                 queries[name](spark, warm_sf).write.format("noop").mode(
                     "overwrite"
                 ).save()
             except Exception:
-                pass
-        queries[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+                pass  # best-effort, as in bench.py
 
     runs: list[dict[str, float]] = []
     for _ in range(n_runs):
