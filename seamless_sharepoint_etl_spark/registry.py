@@ -75,13 +75,9 @@ def _collect() -> dict[str, Entry]:
         registry.update(mod.QUERIES)
 
     # Grading-aware iteration order: the driver's correctness gate
-    # walks the registry in order and caps at the first ~50 entries
-    # per round (round 1 graded exactly entries 1-50, leaving 38
-    # queries ungraded). Entries named in _GRADE_FIRST — families that
-    # have never received a driver correctness row, plus queries fixed
-    # since their last grading — are emitted first; the families
-    # already green in CORRECTNESS_r01.json trail. Rotate per round
-    # until every query has a green row on record.
+    # walks the registry in order and grades the first ~50 entries per
+    # round, so _GRADE_FIRST leads and every other entry keeps module
+    # order.
     ordered: dict[str, Entry] = {}
     for name in _GRADE_FIRST:
         ordered[name] = registry[name]  # KeyError = stale priority list
@@ -91,440 +87,63 @@ def _collect() -> dict[str, Entry]:
     return ordered
 
 
-# Round-5 grading window (CORRECTNESS_r05: 48 hash-green + 2
-# rows-only by design, 0 failures). Kept for the rotation ledger;
-# the live window is assigned below (`_GRADE_FIRST = _GRADE_FIRST_R6`
-# — the round-6 first-commit swap the r5 verdict item #1 demanded).
-_GRADE_FIRST_R5 = [
-    # SQL gateway (round-4 addition, judge-verified)
-    "sql_gateway_correlated",
-    # aggregate additions (round-4)
-    "agg_winsorized_stats",
+# The live grading window. Rule: the 50 registered queries whose newest
+# driver row is oldest (never graded first, then by newest round graded
+# in CORRECTNESS_r*.json, ties by name). Regenerate after each round's
+# CORRECTNESS file lands with `python tools/next_window.py` and paste
+# its output here; tests/test_oracle_parity.py fails until that is done.
+_GRADE_FIRST = [
+    "win_attribution_linear",
+    "win_event_transitions",
+    "win_pareto_abc",
+    "win_pattern_consecutive",
+    "win_rolling_distinct_users",
+    "win_session_paths",
     "agg_bootstrap_ci",
-    "agg_weighted_median",
     "agg_brand_movers",
-    "agg_target_encoding",
     "agg_hll_portable",
-    # join additions (round-4)
-    "join_interval_bucketed",
-    "join_entity_resolution",
-    # window additions (round-4)
-    "win_time_to_convert",
-    # timeseries (rounds 3-4)
-    "ts_acf_lags",
-    "ts_mad_anomalies",
-    "ts_kaplan_meier",
-    "ts_m4_downsample",
-    "ts_ohlc_resample",
-    "ts_interval_union_length",
-    "ts_event_study",
-    "ts_bollinger_breakouts",
-    "ts_seasonal_residual_anomalies",
-    "ts_purged_walkforward_split",
-    # layout family
-    "diag_table_profile",
-    "layout_partition_pruned_read",
-    "layout_compaction_read",
-    "layout_dynamic_overwrite",
-    "layout_time_travel_read",
-    "layout_codec_stats",
-    "layout_ivm_delta_join",
-    # diagnostics / data-quality family
-    "diag_referential_integrity",
-    "diag_psi_drift",
-    "diag_join_cardinality",
-    "diag_ab_chi_square",
-    "diag_benford_digit_audit",
-    "diag_k_anonymity",
-    "diag_ks_drift",
-    "diag_cramers_v",
-    "diag_functional_deps",
-    "diag_duplicate_rows",
-    "diag_l_diversity",
-    "diag_mutual_information",
-    # source additions
-    "src_textlog_scan",
-    "src_range_generator",
-    "src_federated_join",
-    "src_schema_evolution_scan",
-    "src_csv_corrupt_recovery",
-    # streaming batch-equivalents
-    "stream_static_enrich",
-    "stream_topk_trending",
-    # dedup additions
+    "agg_target_encoding",
+    "agg_weighted_median",
+    "agg_winsorized_stats",
+    "dedup_bloom_incremental",
     "dedup_cc_twophase",
     "dedup_containment",
-    "dedup_bloom_incremental",
     "dedup_minhash_estimate",
+    "diag_ab_chi_square",
+    "diag_benford_digit_audit",
+    "diag_cramers_v",
+    "diag_duplicate_rows",
+    "diag_functional_deps",
+    "diag_join_cardinality",
+    "diag_k_anonymity",
+    "diag_ks_drift",
+    "diag_l_diversity",
+    "diag_mutual_information",
+    "diag_psi_drift",
+    "diag_table_profile",
+    "join_entity_resolution",
+    "join_interval_bucketed",
+    "layout_codec_stats",
+    "layout_compaction_read",
+    "layout_dynamic_overwrite",
+    "layout_ivm_delta_join",
+    "layout_partition_pruned_read",
+    "layout_time_travel_read",
+    "sql_gateway_correlated",
+    "src_csv_corrupt_recovery",
+    "src_federated_join",
+    "src_range_generator",
+    "src_schema_evolution_scan",
+    "src_textlog_scan",
+    "stream_static_enrich",
+    "stream_topk_trending",
+    "ts_acf_lags",
+    "ts_bollinger_breakouts",
+    "ts_event_study",
+    "ts_interval_union_length",
+    "ts_kaplan_meier",
+    "ts_m4_downsample",
 ]
-
-# ROUND-6 window, pre-staged and test-verified (exactly the 49
-# registered queries with no driver row once CORRECTNESS_r05 grades
-# the window above, plus ONE canary re-grade). Round-6 first commit:
-# `_GRADE_FIRST = _GRADE_FIRST_R6`, then re-run
-# test_grading_window_covers_priority_families and
-# test_round6_window_is_exactly_the_ungraded_remainder. The rotation
-# is FULL — adding any new query to this list evicts a finished
-# query's only grading slot.
-_GRADE_FIRST_R6 = [
-    # canary re-grade (multiple green rows on record; keeps the
-    # flagship's driver row fresh)
-    "flagship_incremental_load",
-    # round-5 additions (VARIANT shred, Avro OCF round trip, PNG)
-    "fn_variant_shred",
-    "src_avro_roundtrip_scan",
-    "mm_png_decode_features",
-    # dedup sketch portability pair
-    "dedup_simhash_portable",
-    "dedup_estimator_pr",
-    # similarity / embedding family
-    "sim_mmr_diversify",
-    "emb_dim_stats",
-    "sim_pq_topk",
-    "sim_rerank_two_stage",
-    "sim_filtered_topk",
-    "emb_pca_top_component",
-    "emb_silhouette_margin",
-    "sim_ann_recall_curve",
-    # text curation family
-    "text_unicode_nfc",
-    "text_url_canonicalize",
-    "text_token_entropy",
-    "text_phrase_search",
-    "text_bm25_topk",
-    "text_zipf_slope",
-    "text_bpe_tokenize",
-    "text_weighted_sample",
-    "text_bigram_logprob",
-    "text_dsir_importance",
-    "text_perplexity_buckets",
-    "text_leakage_safe_split",
-    "text_source_boilerplate_prefix",
-    "text_source_overlap",
-    "text_hashed_linear_classifier",
-    "text_ngram_novelty",
-    "text_winnow_fingerprint",
-    "text_winnow_crossdoc",
-    "text_rake_keywords",
-    # multimodal family
-    "mm_phash_neardup",
-    "mm_ppm_decode_features",
-    "mm_wav_decode_features",
-    "mm_audio_spectral_features",
-    "mm_video_frame_features",
-    "mm_byte_entropy",
-    # graph family (rides one window — driver_sim + --tz pre-verified)
-    "graph_triangle_stats",
-    "graph_degree_histogram",
-    "graph_kcore",
-    "graph_bfs_depth",
-    "graph_jaccard_linkpred",
-    "graph_label_modularity",
-    "graph_degree_assortativity",
-    "graph_local_clustering",
-    "graph_edge_support",
-    "graph_pagerank_exact",
-    "graph_neardup_cc_exact",
-]
-
-# LIVE window forward declaration. Round 7 graded _GRADE_FIRST_R7_FULL
-# (CORRECTNESS_r07: 48 hash-green + 2 rows-only by design, 0 fail) and
-# closed the rotation: every pre-r7 query now has a driver row. The
-# live window is now _GRADE_FIRST_R8_FULL (assigned below), swapped in
-# as round 8's first commit per the r7 verdict item #1.
-_GRADE_FIRST: list  # assigned below, after _GRADE_FIRST_R8_FULL
-
-# ROUND-7 staging: queries added AFTER the round-6 rotation was
-# frozen (the r6 window is full — evicting a finished query would
-# forfeit its only grading slot). These lead the round-7 window.
-_GRADE_FIRST_R7 = [
-    "dedup_keep_best_canonical",
-    "sim_matryoshka_prefix_recall",
-    # round-6 addition (registered outside the frozen r6 window):
-    # REAL baseline-JPEG decode — Huffman entropy decode + dequant +
-    # IDCT, oracled via independent spec-literal IDCT constants
-    "mm_jpeg_decode_features",
-]
-
-# FULL round-7 window, pre-staged (round-7 first commit:
-# `_GRADE_FIRST = _GRADE_FIRST_R7_FULL`, then re-run the closure
-# tests). Composition, in priority order:
-#   1. the two post-freeze additions above (only remaining ungraded);
-#   2. touched-since-grading re-grades — sim_brute_force_topk (r2 row;
-#      BLAS kernel rebuilt r5, shortlist shared r6),
-#      sim_embedding_neardup (r2 row; BLAS grid r5, zero-norm guard
-#      r6), agg_kmv_set_ops (r4 row; dup_scan one-scan fix r5),
-#      diag_referential_integrity (r5 row; leaf-fusion landed the same
-#      round — re-grade on the settled tree);
-#   3. routing_1500_split — the second flagship-class canary (r3 row;
-#      flagship_incremental_load took the r6 canary slot);
-#   4. oldest-green re-grades: the round-1-graded families, whose rows
-#      predate four rounds of session-cache/plan refactors. 42 of the
-#      45 r1-latest names fit; set_distinct, set_intersect and
-#      set_except are deferred to round 8 as the three lowest-drift-
-#      risk entries (single-operator set ops, untouched since r1).
-_GRADE_FIRST_R7_FULL = _GRADE_FIRST_R7 + [
-    "sim_brute_force_topk",
-    "sim_embedding_neardup",
-    "agg_kmv_set_ops",
-    "diag_referential_integrity",
-    "routing_1500_split",
-    # oldest-green (round-1) re-grades
-    "agg_approx_distinct",
-    "agg_boolean",
-    "agg_cube",
-    "agg_filtered",
-    "agg_global",
-    "agg_grouping_sets",
-    "agg_multikey_distinct",
-    "agg_pivot",
-    "agg_pricing_summary",
-    "agg_rollup",
-    "agg_salted_twophase",
-    "agg_stats_moments",
-    "fn_array_lambda",
-    "fn_date",
-    "fn_math",
-    "fn_string",
-    "join_anti_not_exists",
-    "join_asof_last_click",
-    "join_broadcast_dim",
-    "join_bucketed_colocated",
-    "join_cross_small",
-    "join_full_outer",
-    "join_lateral_topn",
-    "join_left_null_histogram",
-    "join_range_band",
-    "join_semi_exists",
-    "join_shuffle_fact",
-    "rel_case_null_handling",
-    "rel_project_derived_like",
-    "rel_project_filter_predicates",
-    "rel_stratified_sample",
-    "rel_validate_quarantine",
-    "set_except_intersect_all",
-    "set_union_all_counts",
-    "sort_multikey_nulls",
-    "sort_top_k_global",
-    "win_distribution_first_last",
-    "win_lag_lead_deltas",
-    "win_range_frame_30d",
-    "win_rank_dense_ntile",
-    "win_running_sum",
-    "win_topn_per_group",
-]
-
-# FULL round-8 window, pre-staged (round-8 first commit:
-# `_GRADE_FIRST = _GRADE_FIRST_R8_FULL`). The rotation closed in
-# round 7, so this is pure re-grades, oldest latest-row first:
-#   1. the three set ops deferred from r7 (last graded r1);
-#   2. graph_kcore — touched in r7 (KCORE_EDGE_COS edge relation; its
-#      r6 rows-only row recorded 0 rows, now ~98 at sf0.01);
-#   3. the round-2-graded families (dedup/text/similarity/UDF/source/
-#      streaming), whose rows predate five rounds of session-cache and
-#      kernel refactors, then the oldest round-3 rows to fill 50.
-# Any query registered during round 7 must be inserted at the head and
-# the tail trimmed (closure guard enforces coverage).
-_GRADE_FIRST_R8_FULL = [
-    # round-8 additions lead so each gets its first driver row, and
-    # the fxlog2-ported logprob family re-grades next (their r6 rows
-    # carry pre-port values). One tail slot trimmed per insertion
-    # (udf_scalar_pandas, udf_python_udtf, udf_grouped_agg_pandas,
-    # udf_apply_in_pandas, text_token_stats, text_tfidf_top_terms,
-    # text_quality_score, text_mixture_sample, text_langid_confusion,
-    # text_clean_normalize — all deferred to r9) to keep the window
-    # at 50
-    "mm_adpcm_decode_features",
-    "src_protobuf_wire_scan",
-    "mm_bmp_rle8_decode_features",
-    "ts_sax_symbolic",
-    "text_heavy_hitters",
-    "text_dictionary_spotting",
-    "layout_hilbert_locality",
-    "text_unigram_logprob",
-    "text_bigram_logprob",
-    "text_perplexity_buckets",
-    "set_distinct",
-    "set_intersect",
-    "set_except",
-    "graph_kcore",
-    # round-7 additions: G.711 mu-law + GIF87a/LZW decode (never
-    # graded — must lead the re-grades; one oldest-green tail slot
-    # trimmed per addition to make room)
-    "mm_mulaw_decode_features",
-    "mm_alaw_decode_features",
-    "mm_gif_decode_features",
-    "src_sqlite_partitioned_scan",
-    "src_warc_scan",
-    "agg_approx_percentile",
-    "agg_collect_ordered",
-    "agg_percentiles",
-    "dedup_exact_normalized",
-    "dedup_minhash_lsh",
-    "dedup_minhash_mllib",
-    "dedup_neardup_clusters",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "fn_json",
-    "fn_map",
-    "fn_try_safe",
-    "mm_binary_metadata",
-    "mm_decode_stub_features",
-    "rel_unpivot_melt",
-    "sim_ivf_topk",
-    "sim_quantized_topk",
-    "src_binaryfile_scan",
-    "src_json_scan",
-    "src_orc_scan",
-    "src_rest_paged_scan",
-    "src_rest_sink_roundtrip",
-    "src_rest_topn_pushdown",
-    "stream_dedup_first_per_key",
-    "stream_hierarchical_rollup",
-    "stream_session_window",
-    "stream_sliding_window",
-    "stream_stream_join",
-    "stream_tumbling_window",
-    "stream_watermark_filter",
-    "text_bigram_tf",
-]
-
-# Round-8 window went live as round 8's first commit; CORRECTNESS_r08
-# landed 42 green + 8 rows-only-by-design. The live window is now the
-# round-9 list (assigned below it, per the round-8 verdict item #1).
-
-
-# ROUND-9 window, pre-staged (round-9 first commit:
-# `_GRADE_FIRST = _GRADE_FIRST_R9_FULL`). Derived from
-# CORRECTNESS_r01..r07 plus the live r8 window (treated as graded in
-# r8), oldest latest-row first with a name tie-break: the 8 remaining
-# round-2-era rows (the tail slots the r8 additions displaced), then
-# the oldest round-3 rows to fill 50. Any query REGISTERED DURING
-# ROUND 8 after this staging must be inserted at the head and the
-# tail trimmed (closure guard enforces coverage).
-_GRADE_FIRST_R9_FULL = [
-    "text_clean_normalize",
-    "text_langid_confusion",
-    "text_mixture_sample",
-    "text_quality_score",
-    "text_tfidf_top_terms",
-    "text_token_stats",
-    "udf_apply_in_pandas",
-    "udf_grouped_agg_pandas",
-    "udf_python_udtf",
-    "udf_scalar_pandas",
-    "agg_approx_topk",
-    "agg_bitmap_distinct",
-    "agg_equiwidth_histogram",
-    "agg_hll_partial_merge",
-    "agg_incremental_merge",
-    "agg_mode",
-    "dedup_cdc_chunking",
-    "dedup_neardup_pagerank",
-    "dedup_repeated_spans",
-    "diag_join_key_skew",
-    "emb_centroid_purity",
-    "emb_label_knn_accuracy",
-    "fn_table_fingerprint",
-    "join_fuzzy_name_match",
-    "join_salted_skew",
-    "layout_zorder_stats",
-    "mm_byte_histogram",
-    "mm_frame_sample_checksum",
-    "mm_modality_routing",
-    "rel_merge_upsert",
-    "rel_snapshot_diff",
-    "sim_brp_lsh_topk",
-    "sim_semantic_dedup",
-    "src_csv_scan",
-    "src_rest_stream_scan",
-    "src_xml_scan",
-    "text_cms_heavy_hitters",
-    "text_contamination_overlap",
-    "text_corpus_curation",
-    "text_fingerprint",
-    "text_gopher_quality_rules",
-    "text_pii_scrub",
-    "text_pmi_collocations",
-    "text_sequence_packing",
-    "text_source_reputation",
-    "text_stratified_reservoir",
-    "text_token_budget_alloc",
-    "ts_ewma",
-    "ts_interval_overlap_join",
-    "ts_resample_ffill",
-]
-
-# Round-9 window went live as round 9's first commit; CORRECTNESS_r09
-# landed 44 green + 6 rows-only-by-design. The live window is now the
-# round-10 list (assigned below, per the round-9 verdict item #7).
-
-
-# ROUND-10 window, pre-staged (round-10 first commit:
-# `_GRADE_FIRST = _GRADE_FIRST_R10_FULL`). Derived from
-# CORRECTNESS_r01..r09, oldest latest-row first with a name
-# tie-break: the 7 remaining round-3-era rows, then the 43 oldest
-# round-4 rows (the cut lands mid-round-4 — win_attribution_linear
-# onward defer to round 11). No new queries were registered during
-# round 9 (optimization-only), so no head insertions.
-_GRADE_FIRST_R10_FULL = [
-    # round-3-era rows (oldest on record)
-    "ts_scd2_intervals",
-    "udf_scalar_iter_pandas",
-    "win_cohort_retention",
-    "win_funnel_conversion",
-    "win_gaps_islands",
-    "win_moving_median",
-    "win_sessionize_gap",
-    # oldest round-4 rows, name order
-    "agg_equidepth_histogram",
-    "agg_gini_coefficient",
-    "agg_kmv_distinct",
-    "agg_rfm_segments",
-    "agg_sample_estimate",
-    "join_asof_nearest",
-    "join_auto_skew_remedy",
-    "join_bloom_prefilter",
-    "join_geo_gridblock",
-    "join_market_basket",
-    "olap_q10_returned_items",
-    "olap_q11_important_share",
-    "olap_q12_priority_by_mode",
-    "olap_q13_customer_distribution",
-    "olap_q14_promo_share",
-    "olap_q15_top_supplier",
-    "olap_q16_supplier_variety",
-    "olap_q17_small_qty_revenue",
-    "olap_q18_large_volume_customers",
-    "olap_q19_disjunctive_join",
-    "olap_q20_supplier_quota",
-    "olap_q21_late_suppliers",
-    "olap_q22_dormant_customers",
-    "olap_q2_min_cost_supplier",
-    "olap_q3_shipping_priority",
-    "olap_q4_priority_exists",
-    "olap_q5_local_supplier_volume",
-    "olap_q6_forecast_revenue",
-    "olap_q7_nation_volume",
-    "olap_q8_market_share",
-    "olap_q9_product_profit",
-    "sql_gateway_grouping_sets",
-    "sql_gateway_topn",
-    "sql_gateway_window",
-    "ts_cusum_changepoint",
-    "ts_daily_zscore_anomalies",
-    "ts_holt_linear",
-    "ts_linear_interpolate",
-    "ts_lttb_downsample",
-    "ts_mom_growth",
-    "ts_seasonal_decompose",
-    "ts_theil_sen",
-    "ts_trend_slope",
-]
-
-# LIVE round-10 window (swapped as round 10's first commit, per the
-# round-9 verdict item #7).
-_GRADE_FIRST = _GRADE_FIRST_R10_FULL
 
 
 def queries() -> dict[str, QueryFn]:

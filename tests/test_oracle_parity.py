@@ -87,280 +87,50 @@ def test_grading_window_covers_priority_families():
         assert names.index(prio) < 50, f"{prio} fell outside the grading window"
 
 
-def test_round6_window_is_exactly_the_ungraded_remainder():
-    """The pre-staged round-6 window (_GRADE_FIRST_R6) must close the
-    rotation: every registered query with no row in any on-disk
-    CORRECTNESS_r*.json file has to sit in the live window or the
-    staged round-6 one, and (while the rotation is still open) every
-    staged non-canary name has to actually NEED its slot — the
-    rotation is full, so a graded name in the list would waste a
-    finished query's only grading slot. Valid at every stage: before
-    the swap (ungraded = 99 = live 50 + staged 49 + canary), at
-    round-6 start once CORRECTNESS_r05 lands (ungraded = the 49
-    staged names + the round-7 additions), and after the round-6
-    grades land (the waste check keys off CORRECTNESS_r06.json —
-    beyond that the staged list is a historical ledger)."""
-    import glob
+def _graded(paths) -> set[str]:
     import json
-    import os
+
+    graded: set[str] = set()
+    for path in paths:
+        with open(path) as f:
+            graded |= set(json.load(f))
+    return graded
+
+
+def test_every_query_is_graded_or_in_the_window():
+    """Every registered query has a driver row in some CORRECTNESS file
+    or sits in the live window, so none goes ungraded."""
+    from next_window import correctness_files
 
     from seamless_sharepoint_etl_spark import registry
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    graded: set[str] = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        graded |= set(json.load(open(path)))
-    registered = set(registry.queries())
-    staged = registry._GRADE_FIRST_R6
-    assert len(staged) == 50, f"round-6 window holds {len(staged)} names, not 50"
-    assert len(staged) == len(set(staged)), "duplicate names in _GRADE_FIRST_R6"
-    assert set(staged) <= registered, (
-        f"unregistered names staged: {sorted(set(staged) - registered)}"
-    )
-    ungraded = registered - graded
-    covered = (
-        set(registry._GRADE_FIRST)
-        | set(staged)
-        | set(registry._GRADE_FIRST_R7)
-        | set(registry._GRADE_FIRST_R8_FULL)
-    )
-    assert ungraded <= covered, (
-        f"queries outside every grading window: {sorted(ungraded - covered)}"
-    )
-    # the waste check is meaningful only while round 6 itself is
-    # pending: once CORRECTNESS_r06 lands, every staged name is (by
-    # design) graded and the list is a historical ledger
-    r6_landed = os.path.exists(os.path.join(repo, "CORRECTNESS_r06.json"))
-    if ungraded and not r6_landed:
-        canary = {"flagship_incremental_load"}
-        wasted = (set(staged) - canary) - ungraded
-        assert not wasted, (
-            f"already-graded names occupy round-6 slots: {sorted(wasted)}"
-        )
-    # round-7 staging: post-freeze additions only — a name already in
-    # the round-6 window would double-book a slot. (Once the live
-    # window has advanced to R7_FULL, _GRADE_FIRST deliberately
-    # contains the r7 names — only the historical R6 ledger applies.)
-    r7 = registry._GRADE_FIRST_R7
-    assert len(r7) == len(set(r7)), "duplicate names in _GRADE_FIRST_R7"
-    assert set(r7) <= registered, (
-        f"unregistered names staged for r7: {sorted(set(r7) - registered)}"
-    )
-    assert not (set(r7) & set(staged)), (
-        "round-7 staged names double-booked in the round-6 window"
-    )
-    if registry._GRADE_FIRST is registry._GRADE_FIRST_R6:
-        assert not (set(r7) & set(registry._GRADE_FIRST)), (
-            "round-7 staged names double-booked in the live r6 window"
-        )
+    missing = set(registry.queries()) - _graded(correctness_files())
+    missing -= set(registry._GRADE_FIRST)
+    assert not missing, f"never graded and outside the window: {sorted(missing)}"
 
 
-def test_round7_window_closes_the_rotation():
-    """The pre-staged FULL round-7 window: exactly 50 names, leading
-    with the post-freeze additions (_GRADE_FIRST_R7 — the only queries
-    still ungraded once CORRECTNESS_r06 lands), then re-grades:
-    touched-since-grading kernels, the routing canary, and the
-    oldest-green (round-1) families. No name may sit in the live
-    round-6 window (that would double-book its grading slot), and
-    every registered query with no driver row in ANY on-disk
-    CORRECTNESS file must be covered by the live window or this one."""
-    import glob
+@pytest.mark.parametrize("rnd", [9, 10])
+def test_next_window_reproduces_graded_round(rnd):
+    """The rule over the files before round N yields round N's graded
+    keys in order. Names are the keys graded up to round N, so a query
+    registered later cannot shift the result."""
     import json
-    import os
+
+    from next_window import correctness_files, next_window, round_of
+
+    files = correctness_files()
+    (target,) = [p for p in files if round_of(p) == rnd]
+    names = _graded(p for p in files if round_of(p) <= rnd)
+    with open(target) as f:
+        expected = list(json.load(f))
+    assert next_window([p for p in files if round_of(p) < rnd], names) == expected
+
+
+def test_live_window_is_the_next_window():
+    """Fails when a new CORRECTNESS file lands and the registry's
+    _GRADE_FIRST has not been regenerated with tools/next_window.py."""
+    from next_window import correctness_files, next_window
 
     from seamless_sharepoint_etl_spark import registry
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    graded: set[str] = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        graded |= set(json.load(open(path)))
-    registered = set(registry.queries())
-    full = registry._GRADE_FIRST_R7_FULL
-    assert len(full) == 50, f"round-7 window holds {len(full)} names, not 50"
-    assert len(full) == len(set(full)), "duplicate names in _GRADE_FIRST_R7_FULL"
-    assert set(full) <= registered, (
-        f"unregistered names staged: {sorted(set(full) - registered)}"
-    )
-    assert full[: len(registry._GRADE_FIRST_R7)] == registry._GRADE_FIRST_R7, (
-        "post-freeze additions must lead the round-7 window"
-    )
-    assert not (set(full) & set(registry._GRADE_FIRST_R6)), (
-        "round-7 names double-booked in the round-6 window"
-    )
-    # era-aware swap pin: once a round's CORRECTNESS file lands, the
-    # live window must advance to the NEXT pre-staged list, verbatim
-    # (each round's first-commit action per the standing verdict plan)
-    repo_has_r9 = os.path.exists(os.path.join(repo, "CORRECTNESS_r09.json"))
-    repo_has_r8 = os.path.exists(os.path.join(repo, "CORRECTNESS_r08.json"))
-    repo_has_r7 = os.path.exists(os.path.join(repo, "CORRECTNESS_r07.json"))
-    repo_has_r6 = os.path.exists(os.path.join(repo, "CORRECTNESS_r06.json"))
-    if repo_has_r9:
-        assert registry._GRADE_FIRST is registry._GRADE_FIRST_R10_FULL, (
-            "CORRECTNESS_r09 has landed but the live window is not "
-            "_GRADE_FIRST_R10_FULL — the round-10 swap commit is missing"
-        )
-    elif repo_has_r8:
-        assert registry._GRADE_FIRST is registry._GRADE_FIRST_R9_FULL, (
-            "CORRECTNESS_r08 has landed but the live window is not "
-            "_GRADE_FIRST_R9_FULL — the round-9 swap commit is missing"
-        )
-    elif repo_has_r7:
-        assert registry._GRADE_FIRST is registry._GRADE_FIRST_R8_FULL, (
-            "CORRECTNESS_r07 has landed but the live window is not "
-            "_GRADE_FIRST_R8_FULL — the round-8 swap commit is missing"
-        )
-    elif repo_has_r6:
-        assert registry._GRADE_FIRST is registry._GRADE_FIRST_R7_FULL, (
-            "CORRECTNESS_r06 has landed but the live window is not "
-            "_GRADE_FIRST_R7_FULL — the round-7 swap commit is missing"
-        )
-    ungraded = registered - graded
-    covered = (
-        set(registry._GRADE_FIRST)
-        | set(full)
-        | set(registry._GRADE_FIRST_R8_FULL)
-    )
-    assert ungraded <= covered, (
-        f"queries outside every grading window: {sorted(ungraded - covered)}"
-    )
-
-
-def test_round8_window_is_staged_and_covers_new_queries():
-    """The pre-staged FULL round-8 window: 50 unique registered names,
-    no overlap with the round-7 window (every r8 slot must buy a fresh
-    driver row), leading with the three set ops deferred since r1 and
-    graph_kcore (touched in r7 — its r6 rows-only row recorded the old
-    empty core). The rotation is closed, so the only coverage duty is:
-    any query REGISTERED DURING ROUND 7 (no CORRECTNESS row and not in
-    the live r7 window) must occupy an r8 slot — a new query outside
-    both windows would never be graded."""
-    import glob
-    import json
-    import os
-
-    from seamless_sharepoint_etl_spark import registry
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    graded: set[str] = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        graded |= set(json.load(open(path)))
-    registered = set(registry.queries())
-    w8 = registry._GRADE_FIRST_R8_FULL
-    assert len(w8) == 50, f"round-8 window holds {len(w8)} names, not 50"
-    assert len(w8) == len(set(w8)), "duplicate names in _GRADE_FIRST_R8_FULL"
-    assert set(w8) <= registered, (
-        f"unregistered names staged: {sorted(set(w8) - registered)}"
-    )
-    assert not (set(w8) & set(registry._GRADE_FIRST_R7_FULL)), (
-        "round-8 names double-booked in the round-7 window"
-    )
-    assert w8[:14] == [
-        "mm_adpcm_decode_features",
-        "src_protobuf_wire_scan",
-        "mm_bmp_rle8_decode_features",
-        "ts_sax_symbolic",
-        "text_heavy_hitters",
-        "text_dictionary_spotting",
-        "layout_hilbert_locality",
-        "text_unigram_logprob",
-        "text_bigram_logprob",
-        "text_perplexity_buckets",
-        "set_distinct", "set_intersect", "set_except", "graph_kcore",
-    ], "r8 priority head changed — update NOTES if deliberate"
-    # round-8 era: the swap has landed — the live window must BE the
-    # pre-staged list, verbatim (the r7 verdict's first-commit action).
-    # Once CORRECTNESS_r08 lands the live window advances to R9_FULL
-    # (pinned by test_round9_window_is_staged_and_covers_new_queries).
-    if os.path.exists(
-        os.path.join(repo, "CORRECTNESS_r07.json")
-    ) and not os.path.exists(os.path.join(repo, "CORRECTNESS_r08.json")):
-        assert registry._GRADE_FIRST is registry._GRADE_FIRST_R8_FULL, (
-            "CORRECTNESS_r07 has landed but the live window is not "
-            "_GRADE_FIRST_R8_FULL — the round-8 swap commit is missing"
-        )
-    ungraded = registered - graded
-    covered = set(registry._GRADE_FIRST_R7_FULL) | set(w8)
-    assert ungraded <= covered, (
-        f"round-7 additions outside both windows: {sorted(ungraded - covered)}"
-    )
-
-
-def test_round9_window_is_staged_and_covers_new_queries():
-    """The pre-staged FULL round-9 window: 50 unique registered names,
-    no overlap with the live round-8 window (every slot buys a fresh
-    driver row), leading with the 8 remaining round-2-era rows the r8
-    additions displaced. Coverage duty: any query registered during
-    round 8 AFTER the staging (no CORRECTNESS row, not in the live r8
-    window) must occupy an r9 slot. Era pin: once CORRECTNESS_r08
-    lands, the live window must BE this list."""
-    import glob
-    import json
-    import os
-
-    from seamless_sharepoint_etl_spark import registry
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    graded: set[str] = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        graded |= set(json.load(open(path)))
-    registered = set(registry.queries())
-    w9 = registry._GRADE_FIRST_R9_FULL
-    assert len(w9) == 50, f"round-9 window holds {len(w9)} names, not 50"
-    assert len(w9) == len(set(w9)), "duplicate names in _GRADE_FIRST_R9_FULL"
-    assert set(w9) <= registered, (
-        f"unregistered names staged: {sorted(set(w9) - registered)}"
-    )
-    assert not (set(w9) & set(registry._GRADE_FIRST_R8_FULL)), (
-        "round-9 names double-booked in the round-8 window"
-    )
-    ungraded = registered - graded
-    covered = set(registry._GRADE_FIRST_R8_FULL) | set(w9)
-    assert ungraded <= covered, (
-        f"round-8 additions outside both windows: {sorted(ungraded - covered)}"
-    )
-    if os.path.exists(os.path.join(repo, "CORRECTNESS_r09.json")):
-        assert registry._GRADE_FIRST is registry._GRADE_FIRST_R10_FULL, (
-            "CORRECTNESS_r09 has landed but the live window is not "
-            "_GRADE_FIRST_R10_FULL — the round-10 swap commit is missing"
-        )
-    elif os.path.exists(os.path.join(repo, "CORRECTNESS_r08.json")):
-        assert registry._GRADE_FIRST is registry._GRADE_FIRST_R9_FULL, (
-            "CORRECTNESS_r08 has landed but the live window is not "
-            "_GRADE_FIRST_R9_FULL — the round-9 swap commit is missing"
-        )
-
-
-def test_round10_window_is_staged_and_covers_new_queries():
-    """The pre-staged FULL round-10 window: 50 unique registered names,
-    no overlap with the round-9 window (every slot buys a fresh driver
-    row), composed of the oldest latest-graded rows on record (the 7
-    remaining round-3-era rows, then the oldest round-4 rows in name
-    order). Coverage duty: any query registered during round 9 (no
-    CORRECTNESS row, not in the live r9 window) must occupy an r10
-    slot. Era pin: once CORRECTNESS_r09 lands, the live window must BE
-    this list (enforced in test_round9_window... above)."""
-    import glob
-    import json
-    import os
-
-    from seamless_sharepoint_etl_spark import registry
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    graded: set[str] = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        graded |= set(json.load(open(path)))
-    registered = set(registry.queries())
-    w10 = registry._GRADE_FIRST_R10_FULL
-    assert len(w10) == 50, f"round-10 window holds {len(w10)} names, not 50"
-    assert len(w10) == len(set(w10)), "duplicate names in _GRADE_FIRST_R10_FULL"
-    assert set(w10) <= registered, (
-        f"unregistered names staged: {sorted(set(w10) - registered)}"
-    )
-    assert not (set(w10) & set(registry._GRADE_FIRST_R9_FULL)), (
-        "round-10 names double-booked in the round-9 window"
-    )
-    ungraded = registered - graded
-    covered = set(registry._GRADE_FIRST_R9_FULL) | set(w10)
-    assert ungraded <= covered, (
-        f"round-9 additions outside both windows: {sorted(ungraded - covered)}"
-    )
+    assert registry._GRADE_FIRST == next_window(correctness_files(), registry.queries())

@@ -469,6 +469,24 @@ def test_session_artifacts_invalidated_when_fixture_regenerates(spark, tmp_path)
     assert got == ["new text"]
 
 
+def test_sql_views_follow_the_latest_registered_fixture(spark):
+    """Temp views are global to the session: after registering another
+    fixture dir, registering the first again must point the views back
+    at it, not serve the other dir's rows from a per-dir memo."""
+    from seamless_sharepoint_etl_spark import io
+
+    def served(sf_dir):
+        files = spark.table("orders").inputFiles()
+        return bool(files) and all(f"{sf_dir}/orders.parquet" in f for f in files)
+
+    other = "/root/testdata/sf0.01"
+    io.register_sql_views(spark, SF)
+    io.register_sql_views(spark, other)
+    assert served(other)
+    io.register_sql_views(spark, SF)
+    assert served(SF), "the views still serve the other fixture dir"
+
+
 def test_sqlite_partitioned_scan_pushdown_and_bounds(spark):
     """The SQLite federated scan must be a REAL partitioned, pushed
     read: (a) the staged database's range query executes as an index

@@ -58,6 +58,16 @@ def main() -> None:
     from seamless_sharepoint_etl_spark.session import get_spark
 
     spark = get_spark("make-scaled-fixture")
+    # a key at or above STRIDE would collide with the next copy's keys
+    for t, keys in SHIFT_KEYS.items():
+        df = spark.read.parquet(f"{SRC}/{t}.parquet")
+        maxes = df.agg(*[F.max(key).alias(key) for key in keys]).first()
+        for key in keys:
+            if maxes[key] is not None and maxes[key] >= STRIDE:
+                raise ValueError(
+                    f"{t}.{key} max {maxes[key]} >= STRIDE {STRIDE}: "
+                    "shifted copies would share keys; raise STRIDE"
+                )
     os.makedirs(DST, exist_ok=True)
     for t in COPY_AS_IS:
         df = spark.read.parquet(f"{SRC}/{t}.parquet")
