@@ -4,7 +4,7 @@ These re-express the *entire* dataflow of the reference scripts
 (SURVEY.md §2 Tier A, A1-A12) as single lazy Spark DAGs:
 
   flagship (A1-A11):  sink-max watermark → strict-`>` source filter
-                      (pushed to the scan by Catalyst) → name-resolved
+                      (a broadcast left-semi join) → name-resolved
                       projection → ascending sort → append-shaped result
                       with an `observe` row count.
   routing  (A12):     one parameterized job splitting on the $1500
@@ -14,14 +14,20 @@ Scale posture: the watermark is an aggregate (`max`), never a "last
 row" readback (the reference re-reads its whole sink to look at one
 cell — bin/copy-seamless-to-sharepoint.rb:63-66, and its `:52` TODO
 admits the ordering workaround is broken). `max` is a partial-agg +
-single-row exchange at any scale. The `>` filter is a plain comparison
-Catalyst pushes into the parquet scan, so the incremental pass reads
-only matching row groups via min/max stats.
+single-row exchange at any scale. The `>` filter is NOT pushed into the
+parquet scan: the watermark is a 1-row DataFrame, so Catalyst plans the
+filter as a broadcast non-equi left-semi join and the orders scan shows
+`PushedFilters: []`. The join never shuffles the fact side.
+
+The cron tick (`run_incremental_append`, `write_routed`) runs each
+Spark job once: the txn id comes from two scalar aggregates over
+`orders`, the row count from the sink manifest, and the route counts
+from an `Observation` on the routed write itself.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import io
@@ -79,17 +85,21 @@ FROM items WHERE po_number > (SELECT wm FROM wm)
 """
 
 
+ROUTES = ("over_1500", "under_1500")
+
+
 def routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12: the $1500 value-split as one job — a `route` column instead of
     three deployed script instances writing to two sink tables."""
     items = io.seamless_items(spark, sf_dir)
+    over, under = ROUTES
     return items.select(
         "po_number",
         "vendor",
         "charge_code",
         F.round("amount", 2).alias("amount"),
-        F.when(F.col("amount") >= 1500.0, F.lit("over_1500"))
-        .otherwise(F.lit("under_1500"))
+        F.when(F.col("amount") >= 1500.0, F.lit(over))
+        .otherwise(F.lit(under))
         .alias("route"),
     )
 
@@ -107,19 +117,20 @@ def write_routed(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
 
     ``partitionBy('route')`` makes the split a *single* pass — one scan,
     one write, two physical table directories — instead of two filtered
-    jobs scanning the source twice. At 100 TB this halves the read.
+    jobs scanning the source twice. At 100 TB this halves the read. The
+    per-route row counts are observed on that same write, so reporting
+    them runs no second job. Routes without rows are left out.
     """
-    df = routed(spark, sf_dir)
+    route = F.col("route")
+    counts = Observation()
     (
-        df.write.mode("append")
+        routed(spark, sf_dir)
+        .observe(counts, *[F.count(F.when(route == r, 1)).alias(r) for r in ROUTES])
+        .write.mode("append")
         .partitionBy("route")
         .parquet(out_dir)
     )
-    counts = {
-        r["route"]: r["n"]
-        for r in df.groupBy("route").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    return counts
+    return {r: n for r, n in counts.get.items() if n}
 
 
 def run_incremental_append(
@@ -134,14 +145,32 @@ def run_incremental_append(
     files through the committed manifest only), and a re-run of the
     same frontier is a no-op instead of a duplicate — strictly stronger
     than round 2's key-range overwrite, which was idempotent but not
-    atomic against concurrent readers.
+    atomic against concurrent readers. Returns the committed
+    snapshot's row count, read from its manifest.
+
+    The txn id names the batch's first key. It is computed from two
+    scalar aggregates over ``orders`` rather than from the batch
+    itself: with ``k0`` the 60% frontier of ``incremental_load``, the
+    watermark is the largest key ``<= k0``, so no key lies strictly
+    between it and ``k0``, and ``seamless_items`` has one row per
+    order (a left join on the unique ``c_custkey``). Hence the batch's
+    first key is the smallest key ``> k0``, and the batch is empty
+    when no key is ``<= k0`` (no watermark) or none is ``> k0``.
     """
     from . import sinks
 
-    fresh = incremental_load(spark, sf_dir)
-    lo = fresh.agg(F.min("po_number").alias("lo")).first()["lo"]
-    if lo is None:
+    key = F.col("o_orderkey")
+    orders = io.load_table(spark, sf_dir, "orders")
+    k0 = orders.agg(F.floor(F.max(key) * F.lit(0.6)).cast("long")).first()[0]
+    if k0 is None:
         return 0
-    sinks.commit_append(fresh, out_dir, txn_id=f"batch_from_{lo}")
-    snap = sinks.read_snapshot(spark, out_dir)
-    return snap.count() if snap is not None else 0
+    lo, wm = orders.agg(
+        F.min(F.when(key > k0, key)), F.max(F.when(key <= k0, key))
+    ).first()
+    if lo is None or wm is None:
+        return 0
+    snap = sinks.commit_append(
+        incremental_load(spark, sf_dir), out_dir,
+        txn_id=f"batch_from_{io.PO_FORMAT % lo}",
+    )
+    return snap["rows"]

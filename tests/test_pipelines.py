@@ -2,9 +2,35 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
+
+
+def _assert_manifest_matches_spark(spark, root, version=None, recorded=True):
+    """The manifest's stored ``rows`` and recorded schema equal what
+    Spark counts and infers from the snapshot's files. ``recorded``
+    says whether the sink has a ``SCHEMA`` file (sinks started before
+    it existed have none)."""
+    import json
+    import os
+
+    from seamless_sharepoint_etl_spark import sinks
+
+    mdir = os.path.join(root, "_manifest")
+    if version is None:
+        with open(os.path.join(mdir, "LATEST")) as fh:
+            vname = fh.read().strip()
+    else:
+        vname = f"v{version:06d}.json"
+    with open(os.path.join(mdir, vname)) as fh:
+        snap = json.load(fh)
+    df = sinks.read_snapshot(spark, root, version=version)
+    assert snap["rows"] == df.count()
+    paths = [os.path.join(root, f) for f in snap["files"]]
+    assert df.schema == spark.read.parquet(*paths).schema
+    assert os.path.exists(os.path.join(mdir, "SCHEMA")) == recorded
 
 
 def test_watermark_frontier_strictness(spark):
@@ -154,6 +180,8 @@ def test_sink_time_travel_reads_past_snapshots(spark, tmp_path):
     assert sinks.read_snapshot(spark, root, version=1).count() == 3
     assert sinks.read_snapshot(spark, root, version=2).count() == 3 + 5
     assert sinks.read_snapshot(spark, root).count() == 3 + 5 + 7
+    for v in (1, 2, 3):
+        _assert_manifest_matches_spark(spark, root, version=v)
     with _pytest.raises(ValueError):
         sinks.read_snapshot(spark, root, version=9)
 
@@ -193,6 +221,346 @@ def test_commit_upsert_file_granular_copy_on_write(spark, tmp_path):
         (100, 7),
     }
     assert rows == want
+    assert snap2["rows"] == len(want)
+    _assert_manifest_matches_spark(spark, root)
 
     again = sinks.commit_upsert(spark, up, root, ["k"], txn_id="t3")
     assert again["version"] == snap2["version"]
+
+
+def _crash_before_flip(monkeypatch, commit, *args, **kwargs):
+    """Run ``commit`` with os.replace failing on LATEST: the writer dies
+    after claiming its version, before the flip."""
+    import os
+
+    real_replace = os.replace
+
+    def boom(src, dst):
+        if os.path.basename(dst) == "LATEST":
+            raise RuntimeError("simulated crash before manifest flip")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        commit(*args, **kwargs)
+    monkeypatch.setattr(os, "replace", real_replace)
+
+
+def test_manifest_rows_follow_append_crash_vacuum_retry(spark, tmp_path, monkeypatch):
+    """The manifest's row count and schema stay equal to what Spark reads
+    after an append, a crash before the flip, vacuum and the retry; the
+    crashed attempt's claim is uncommitted and vacuum sweeps it."""
+    import os
+
+    from seamless_sharepoint_etl_spark import io, sinks
+
+    root = str(tmp_path / "sink")
+    base = io.load_table(spark, SF_DIR, "nation").select("n_nationkey", "n_name")
+    assert sinks.commit_append(base.limit(5), root, txn_id="t1")["rows"] == 5
+    _assert_manifest_matches_spark(spark, root)
+
+    _crash_before_flip(monkeypatch, sinks.commit_append, base.limit(9), root, txn_id="t2")
+    # the crashed attempt's v2 claim is on disk but not committed
+    claim = os.path.join(root, "_manifest", "v000002.json")
+    assert os.path.exists(claim)
+    with pytest.raises(ValueError):
+        sinks.read_snapshot(spark, root, version=2)
+    _assert_manifest_matches_spark(spark, root)
+
+    assert sinks.vacuum(root)
+    assert not os.path.exists(claim)
+    _assert_manifest_matches_spark(spark, root)
+    assert sinks.commit_append(base.limit(9), root, txn_id="t2")["rows"] == 14
+    _assert_manifest_matches_spark(spark, root)
+    _assert_manifest_matches_spark(spark, root, version=2)
+
+
+def test_other_writers_commit_after_a_crash_and_vacuum(spark, tmp_path, monkeypatch):
+    """A crash before the flip is never retried under its txn id: after
+    vacuum, an append and an upsert of other txns both land."""
+    from seamless_sharepoint_etl_spark import sinks
+
+    root = str(tmp_path / "sink")
+    kv = spark.range(0, 4).selectExpr("id AS k", "id AS v").coalesce(1)
+    sinks.commit_append(kv, root, txn_id="t1")
+    _crash_before_flip(
+        monkeypatch, sinks.commit_append, kv.selectExpr("k + 10 AS k", "v"), root,
+        txn_id="t2",
+    )
+    sinks.vacuum(root)
+
+    sinks.commit_append(kv.selectExpr("k + 20 AS k", "v"), root, txn_id="t3")
+    up = spark.createDataFrame([(1, 99)], ["k", "v"])
+    snap = sinks.commit_upsert(spark, up, root, ["k"], txn_id="u")
+    assert snap["version"] == 3 and snap["txns"] == ["t1", "t3", "u"]
+    got = sorted((r["k"], r["v"]) for r in sinks.read_snapshot(spark, root).collect())
+    assert got == [(0, 0), (1, 99), (2, 2), (3, 3), (20, 0), (21, 1), (22, 2), (23, 3)]
+    _assert_manifest_matches_spark(spark, root)
+
+
+def test_crashed_claim_is_taken_over_once_it_times_out(spark, tmp_path, monkeypatch):
+    """Without vacuum, a crashed writer's claim blocks other txns only
+    until it is ``_CLAIM_TIMEOUT_S`` old; then exactly one writer takes
+    it over, with no wait."""
+    import os
+    import time
+    import types
+
+    from seamless_sharepoint_etl_spark import sinks
+
+    root = str(tmp_path / "sink")
+    kv = spark.range(0, 4).selectExpr("id AS k", "id AS v").coalesce(1)
+    sinks.commit_append(kv, root, txn_id="t1")
+
+    def age_claim(version):
+        old = time.time() - sinks._CLAIM_TIMEOUT_S - 1
+        os.utime(sinks._version_path(root, version), (old, old))
+
+    _crash_before_flip(
+        monkeypatch, sinks.commit_append, kv.selectExpr("k + 10 AS k", "v"), root,
+        txn_id="t2",
+    )
+    up = spark.createDataFrame([(1, 99)], ["k", "v"])
+    with pytest.raises(sinks.CommitConflict):  # the claim is still fresh
+        sinks.commit_upsert(spark, up, root, ["k"], txn_id="u")
+    age_claim(2)
+    assert sinks.commit_upsert(spark, up, root, ["k"], txn_id="u")["version"] == 2
+
+    _crash_before_flip(
+        monkeypatch, sinks.commit_append, kv.selectExpr("k + 20 AS k", "v"), root,
+        txn_id="t3",
+    )
+    age_claim(3)
+
+    def no_wait(seconds):
+        raise AssertionError("an aged claim is taken over without waiting")
+
+    monkeypatch.setattr(
+        sinks, "time", types.SimpleNamespace(sleep=no_wait, time=time.time)
+    )
+    snap = sinks.commit_append(kv.selectExpr("k + 30 AS k", "v"), root, txn_id="t4")
+    monkeypatch.setattr(sinks, "time", time)
+    assert snap["version"] == 3 and snap["txns"] == ["t1", "u", "t4"]
+    _assert_manifest_matches_spark(spark, root)
+
+    # one aged claim, two writers: only the first to mark it may replace it
+    _crash_before_flip(monkeypatch, sinks.commit_append, kv, root, txn_id="t5")
+    claim = sinks._version_path(root, 4)
+    age_claim(4)
+    sinks._take_over(root, claim, "a")
+    with pytest.raises(sinks.CommitConflict):
+        sinks._take_over(root, claim, "b")
+    assert sinks.vacuum(root)
+    mdir = os.path.join(root, "_manifest")
+    assert sorted(os.listdir(mdir)) == ["LATEST", "SCHEMA"] + [
+        f"v{v:06d}.json" for v in (1, 2, 3)
+    ]
+    _assert_manifest_matches_spark(spark, root)
+
+
+def test_manifest_without_rows_or_schema_still_reads(spark, tmp_path):
+    """A sink whose manifest predates the ``rows`` field and the
+    ``SCHEMA`` file reads and counts as before, and the next commit
+    on it stores the right row count. Its schema stays the one Spark
+    infers from its files, even when the next batch carries another
+    column: no ``SCHEMA`` is recorded from that batch."""
+    import json
+    import os
+
+    from seamless_sharepoint_etl_spark import io, sinks
+
+    root = str(tmp_path / "old_sink")
+    base = io.load_table(spark, SF_DIR, "nation").select("n_nationkey", "n_name")
+    base.limit(7).coalesce(2).write.parquet(os.path.join(root, "data", "txn-old"))
+    files = sorted(
+        os.path.join("data", "txn-old", f)
+        for f in os.listdir(os.path.join(root, "data", "txn-old"))
+        if f.endswith(".parquet")
+    )
+    mdir = os.path.join(root, "_manifest")
+    os.makedirs(mdir)
+    with open(os.path.join(mdir, "v000001.json"), "w") as fh:
+        json.dump({"version": 1, "files": files, "txns": ["old"]}, fh)
+    with open(os.path.join(mdir, "LATEST"), "w") as fh:
+        fh.write("v000001.json")
+
+    df = sinks.read_snapshot(spark, root)
+    assert df.count() == 7
+    assert df.schema == spark.read.parquet(
+        *[os.path.join(root, f) for f in files]
+    ).schema
+    assert sinks.commit_append(base.limit(7), root, txn_id="old")["rows"] == 7
+
+    snap = sinks.commit_append(
+        base.limit(4).withColumn("n_extra", F.lit(1)), root, txn_id="new"
+    )
+    assert snap["rows"] == 11 == sinks.read_snapshot(spark, root).count()
+    _assert_manifest_matches_spark(spark, root, recorded=False)
+
+
+def _record_latest_flips(monkeypatch):
+    """Wrap os.replace; returns the list of versions LATEST was flipped to."""
+    import os
+
+    flips = []
+    real_replace = os.replace
+
+    def spy(src, dst):
+        if os.path.basename(dst) == "LATEST":
+            with open(src) as fh:
+                flips.append(int(fh.read().strip()[1:7]))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", spy)
+    return flips
+
+
+def test_overlapping_appends_both_land(spark, tmp_path, monkeypatch):
+    """Two cron runs overlap: writer B read the snapshot before writer A
+    committed. B's claim on the same version fails, B re-reads and
+    commits on top of A, so both batches land once and LATEST only
+    moves forward."""
+    from seamless_sharepoint_etl_spark import sinks
+
+    root = str(tmp_path / "sink")
+    df = spark.range(0, 6).selectExpr("id AS k").coalesce(1)
+    sinks.commit_append(df.filter("k < 2"), root, txn_id="base")
+    stale = sinks._read_latest(root)
+    sinks.commit_append(df.filter("k BETWEEN 2 AND 3"), root, txn_id="A")
+
+    flips = _record_latest_flips(monkeypatch)
+    real_read = sinks._read_latest
+    handed = []
+
+    def read_stale_once(r):
+        if not handed:
+            handed.append(r)
+            return dict(stale)
+        return real_read(r)
+
+    monkeypatch.setattr(sinks, "_read_latest", read_stale_once)
+    snap = sinks.commit_append(df.filter("k >= 4"), root, txn_id="B")
+    monkeypatch.setattr(sinks, "_read_latest", real_read)
+
+    assert snap["version"] == 3 and snap["txns"] == ["base", "A", "B"]
+    assert flips == [3]
+    assert sinks.committed_txns(root) == {"base", "A", "B"}
+    got = sorted(r["k"] for r in sinks.read_snapshot(spark, root).collect())
+    assert got == list(range(6))
+    assert snap["rows"] == 6
+    _assert_manifest_matches_spark(spark, root)
+
+
+def test_append_waits_for_a_pending_claim(spark, tmp_path, monkeypatch):
+    """Writer A holds v2 but has not flipped LATEST yet: writer B waits
+    for the flip instead of committing a snapshot that lacks A's batch."""
+    import json
+    import os
+    import time
+    import types
+
+    from seamless_sharepoint_etl_spark import sinks
+
+    root = str(tmp_path / "sink")
+    df = spark.range(0, 6).selectExpr("id AS k").coalesce(1)
+    sinks.commit_append(df.filter("k < 2"), root, txn_id="base")
+    a_snap = sinks.commit_append(df.filter("k BETWEEN 2 AND 3"), root, txn_id="A")
+    # roll LATEST back to v1: A has claimed v2 but not flipped
+    latest = os.path.join(root, "_manifest", "LATEST")
+    with open(latest, "w") as fh:
+        fh.write("v000001.json")
+    assert sinks.committed_txns(root) == {"base"}
+
+    waits = []
+
+    def a_flips(seconds):
+        waits.append(seconds)
+        with open(latest, "w") as fh:
+            fh.write("v000002.json")
+
+    monkeypatch.setattr(
+        sinks, "time", types.SimpleNamespace(sleep=a_flips, time=time.time)
+    )
+    flips = _record_latest_flips(monkeypatch)
+    snap = sinks.commit_append(df.filter("k >= 4"), root, txn_id="B")
+    assert len(waits) == 1
+    assert flips == [3]
+    assert snap["txns"] == ["base", "A", "B"] and snap["rows"] == 6
+    with open(os.path.join(root, "_manifest", "v000002.json")) as fh:
+        assert json.load(fh) == a_snap
+    _assert_manifest_matches_spark(spark, root)
+
+
+def test_upsert_raises_on_an_overlapping_commit(spark, tmp_path, monkeypatch):
+    """An upsert whose snapshot went stale before its commit raises:
+    its touched-file set describes the older snapshot."""
+    from seamless_sharepoint_etl_spark import sinks
+
+    root = str(tmp_path / "sink")
+    kv = spark.range(0, 4).selectExpr("id AS k", "id AS v").coalesce(1)
+    sinks.commit_append(kv, root, txn_id="base")
+    stale = sinks._read_latest(root)
+    sinks.commit_append(kv.selectExpr("k + 10 AS k", "v"), root, txn_id="A")
+
+    monkeypatch.setattr(sinks, "_read_latest", lambda r: dict(stale))
+    up = spark.createDataFrame([(1, 99)], ["k", "v"])
+    with pytest.raises(sinks.CommitConflict):
+        sinks.commit_upsert(spark, up, root, ["k"], txn_id="U")
+    monkeypatch.undo()
+    assert sinks.committed_txns(root) == {"base", "A"}
+    _assert_manifest_matches_spark(spark, root)
+
+
+def test_tick_runs_each_spark_job_once(spark, tmp_path):
+    """The cron tick launches no job that only reports a count: a fresh
+    incremental append, its no-op retry and the routed write stay under
+    their job budgets on sf0.01, and the append still returns the
+    oracle's row count."""
+    import os
+
+    import duckdb
+
+    from seamless_sharepoint_etl_spark import io, pipelines
+
+    sf = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench", "fixture", "sf0.01",
+    )
+    sc = spark.sparkContext
+
+    def jobs(group, fn, *args):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn(*args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    con = duckdb.connect()
+    for t in ("orders", "customer"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+        # the session memoizes each table's DataFrame; its schema
+        # inference is a one-time set-up job, not part of a tick
+        io.load_table(spark, sf, t)
+    want = con.sql(
+        f"SELECT count(*) FROM ({pipelines.INCREMENTAL_LOAD_SQL})"
+    ).fetchone()[0]
+    con.close()
+
+    root = str(tmp_path / "sink")
+    rows, n_append = jobs(
+        "tick-append", pipelines.run_incremental_append, spark, sf, root
+    )
+    again, n_retry = jobs(
+        "tick-retry", pipelines.run_incremental_append, spark, sf, root
+    )
+    routes, n_routed = jobs(
+        "tick-routed", pipelines.write_routed, spark, sf, str(tmp_path / "routed")
+    )
+    assert rows == again == want > 0
+    assert sum(routes.values()) == spark.read.parquet(str(tmp_path / "routed")).count()
+    assert n_append <= 12, n_append
+    assert n_retry <= 4, n_retry
+    assert n_routed <= 2, n_routed

@@ -243,6 +243,8 @@ def test_stream_to_manifest_sink_exactly_once(spark, stream_src, tmp_path):
     """foreachBatch → manifest sink: every micro-batch commits exactly
     once; a FULL re-run of the stream (fresh checkpoint, same sink)
     replays the same batch ids and commits nothing new."""
+    import os
+
     from seamless_sharepoint_etl_spark.streaming import jobs
     from seamless_sharepoint_etl_spark import sinks
 
@@ -254,6 +256,12 @@ def test_stream_to_manifest_sink_exactly_once(spark, stream_src, tmp_path):
     snap = sinks.read_snapshot(spark, sink)
     assert snap.count() == total
     assert n_txn == 4  # one txn per chunk (maxFilesPerTrigger=1)
+    # the manifest's row count and recorded schema match what Spark
+    # counts and infers from the snapshot's files
+    latest = sinks._read_latest(sink)
+    assert latest["rows"] == total
+    files = [os.path.join(sink, f) for f in latest["files"]]
+    assert snap.schema == spark.read.parquet(*files).schema
 
     # replay the whole stream against the same sink: same batch ids →
     # every commit is a no-op, snapshot unchanged
