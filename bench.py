@@ -313,7 +313,9 @@ PUBLISH_ALWAYS = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    # parsed before the session starts: a dir not named sf<float> fails
+    # here, not after setup and every timed pass
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
 
     from seamless_sharepoint_etl_spark import artifacts, registry
     from seamless_sharepoint_etl_spark.session import get_spark
@@ -371,7 +373,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf),
+        "sf": sf,
         "n_queries": len(timings),
         "aggregation": f"per-query median of {n_runs} back-to-back runs",
         "runs_total_raw": [

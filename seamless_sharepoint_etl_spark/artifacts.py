@@ -88,9 +88,9 @@ def _noop(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# Queries whose one-time /tmp staging writes are layout maintenance or
-# external-source scaffolding, not query cost (idempotent via _SUCCESS
-# markers): run each once so a timed pass measures the readback.
+# Queries whose one-time staging writes (``io.staged``) are layout
+# maintenance or external-source scaffolding, not query cost: run each
+# once so a timed pass measures the readback.
 STAGED_QUERIES = (
     "layout_compaction_read",
     "src_schema_evolution_scan",
@@ -109,7 +109,7 @@ STAGED_QUERIES = (
 def warm(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     """Bring a session to the warm state every bench pass assumes.
 
-    Fills the index-class artifacts many queries share, stages the /tmp
+    Fills the index-class artifacts many queries share, stages the
     layouts and pays the one-off cold starts, in a fixed order. Returns
     ``{label: seconds}`` per step, so one-time artifact costs stay
     separately auditable from per-query timings: a query "speedup" that

@@ -26,6 +26,9 @@ check ``PushedFilters`` in ``.explain("formatted")``.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,18 +51,17 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# TIMESTAMP_NTZ '1970-01-01' + exact integer-microsecond interval.
-# ts is long nanoseconds here; `div` is integer division (no double detour).
+
 def fixture_token(sf_dir: str) -> str:
     """10-hex fingerprint of the fixture parquet files (size + mtime).
 
-    Every /tmp staging-dir helper embeds this token in its path, so a
+    ``stage_dir`` embeds this token in every staged artifact's path, so a
     driver-side fixture REGENERATION (it happened mid-round-2 — NOTES
     trap 2) automatically invalidates every staged artifact: the new
     token names a fresh empty dir, and the stale one is never read
     again. Without this, a regenerated fixture would silently pair OLD
     staged rows with an oracle reading the NEW table — a whole-family
-    correctness failure the _SUCCESS markers cannot see. Missing
+    correctness failure no "staging finished" check can see. Missing
     tables are skipped so synthetic partial test fixtures tokenize.
     """
     import hashlib
@@ -74,6 +76,51 @@ def fixture_token(sf_dir: str) -> str:
     return h.hexdigest()[:10]
 
 
+STAGE_ROOT = "/tmp/sse-staged"
+
+
+def stage_dir(sf_dir: str, what: str) -> str:
+    """The path of the artifact ``what`` staged from the fixture ``sf_dir``.
+
+    The name joins the fixture dir's basename, its ``fixture_token`` and
+    ``what``, so two fixtures (or two generations of one) never share a
+    staged artifact. Publish the artifact with ``staged``."""
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    return os.path.join(STAGE_ROOT, f"{tag}-{fixture_token(sf_dir)}-{what}")
+
+
+def staged(path: str, write: Callable[[str], object]) -> str:
+    """Return ``path``, staging it first if it does not exist yet.
+
+    ``write(tmp)`` creates a file or dir at a private sibling ``tmp``,
+    which is then renamed onto ``path``: "``path`` exists" means "its
+    staging finished". A ``write`` that raises leaves nothing at
+    ``path``, so the next call stages again. When another stager
+    publishes first, the rename fails and the winner's ``path`` is
+    returned. The sibling is removed in every case."""
+    if os.path.exists(path):
+        return path
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    try:
+        write(tmp)
+        if os.path.isdir(tmp):
+            os.rename(tmp, path)  # fails onto a non-empty dir
+        else:
+            os.link(tmp, path)  # fails onto any existing file
+    except OSError:
+        if not os.path.exists(path):
+            raise
+    finally:
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp)
+        elif os.path.lexists(tmp):
+            os.remove(tmp)
+    return path
+
+
+# TIMESTAMP_NTZ '1970-01-01' + exact integer-microsecond interval.
+# ts is long nanoseconds here; `div` is integer division (no double detour).
 _TS_NS_TO_NTZ = (
     "CAST('1970-01-01 00:00:00' AS TIMESTAMP_NTZ)"
     " + make_dt_interval(0, 0, 0, (ts div 1000) / 1000000.0)"

@@ -22,6 +22,8 @@ Four tiers, matching the standard pretraining-dedup ladder:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -446,31 +448,24 @@ CDC_MAX = 128
 _CDC_WINDOW = 16  # gear-hash lookback, bytes
 
 
-_GEAR_CACHE = None  # per-process memo: 256 blake2b digests, content-fixed
-
-
+@functools.cache
 def _gear_table():
     """Deterministic 256-entry gear table — derived from blake2b, no
     RNG state, so chunk boundaries are identical on every run/engine.
     Memoized per process (guide §4.5): ``cdc_chunks`` runs once per
     DOCUMENT inside the Arrow kernel, and rebuilding 256 blake2b
     digests per call was pure per-row overhead."""
-    global _GEAR_CACHE
-    if _GEAR_CACHE is None:
-        import hashlib
+    import hashlib
 
-        import numpy as np
+    import numpy as np
 
-        _GEAR_CACHE = np.array(
-            [
-                int.from_bytes(
-                    hashlib.blake2b(bytes([i]), digest_size=8).digest(), "big"
-                )
-                for i in range(256)
-            ],
-            dtype=np.uint64,
-        )
-    return _GEAR_CACHE
+    return np.array(
+        [
+            int.from_bytes(hashlib.blake2b(bytes([i]), digest_size=8).digest(), "big")
+            for i in range(256)
+        ],
+        dtype=np.uint64,
+    )
 
 
 def cdc_chunks(data: bytes) -> list[tuple[int, int, str]]:

@@ -20,6 +20,9 @@ Scale posture per join:
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -324,23 +327,20 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeatedly-joined fact pair: pay the shuffle once at layout time,
     never again per query.
     """
-    tag = "sf" + sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    base = f"/tmp/sse_buckets-{tag}"
-    ot, lt = f"sse_orders_b_{tag}", f"sse_lineitem_b_{tag}"
-    if not spark.catalog.tableExists(ot):
-        io.load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderdate", "o_totalprice"
-        ).write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").option(
-            "path", f"{base}/{ot}"
-        ).mode("overwrite").saveAsTable(ot)
-    if not spark.catalog.tableExists(lt):
-        io.load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount"
-        ).write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").option(
-            "path", f"{base}/{lt}"
-        ).mode("overwrite").saveAsTable(lt)
-    o = spark.table(ot)
-    li = spark.table(lt)
+
+    def bucketed(table: str, key: str, *cols: str) -> DataFrame:
+        # catalog table named after its stage dir, so the name carries
+        # the fixture's name and token
+        path = io.stage_dir(sf_dir, f"{table}-bucketed")
+        name = "t_" + re.sub(r"\W", "_", os.path.basename(path))
+        if not spark.catalog.tableExists(name):
+            io.load_table(spark, sf_dir, table).select(key, *cols).write.bucketBy(
+                8, key
+            ).sortBy(key).option("path", path).mode("overwrite").saveAsTable(name)
+        return spark.table(name)
+
+    o = bucketed("orders", "o_orderkey", "o_orderdate", "o_totalprice")
+    li = bucketed("lineitem", "l_orderkey", "l_extendedprice", "l_discount")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .groupBy(F.year("o_orderdate").alias("yr"))

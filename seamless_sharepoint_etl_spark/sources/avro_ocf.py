@@ -129,10 +129,8 @@ def write_ocf(path: str, rows: list[tuple], sync: bytes) -> None:
         _wlong(out, len(packed))
         out.extend(packed)
         out.extend(sync)
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as fh:
+    with open(path, "wb") as fh:
         fh.write(bytes(out))
-    os.replace(tmp, path)
 
 
 def read_ocf(blob: bytes) -> list[tuple]:
@@ -183,29 +181,23 @@ def read_ocf(blob: bytes) -> list[tuple]:
 # --- the registered scan ----------------------------------------------
 
 
-def _stage_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return f"/tmp/seamless_fmt-{tag}-{io.fixture_token(sf_dir)}-avro"
-
-
 def avro_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage the supplier table as real Avro OCF files (executors
     write one file per partition, deflate blocks, per-file sync
     markers), then scan them back: ``binaryFile`` distributed listing
     → Arrow-batched pure-Python OCF decode → typed rows.
     """
-    path = _stage_dir(sf_dir)
-    marker = os.path.join(path, "_done")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        sup = io.load_table(spark, sf_dir, "supplier").select(
-            F.col("s_suppkey").cast("long").alias("suppkey"),
-            F.col("s_name").alias("name"),
-            F.col("s_nationkey").cast("long").alias("nationkey"),
-            F.floor(F.col("s_acctbal") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("acctbal_cents"),
-        )
+    sup = io.load_table(spark, sf_dir, "supplier").select(
+        F.col("s_suppkey").cast("long").alias("suppkey"),
+        F.col("s_name").alias("name"),
+        F.col("s_nationkey").cast("long").alias("nationkey"),
+        F.floor(F.col("s_acctbal") * 100 + F.lit(0.5))
+        .cast("long")
+        .alias("acctbal_cents"),
+    )
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
 
         def write_part(rows) -> None:
             rows = sorted(
@@ -215,13 +207,12 @@ def avro_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not rows:
                 return
             fname = f"part-{rows[0][0]:06d}.avro"
-            write_ocf(os.path.join(path, fname), rows, _sync_for(fname))
+            write_ocf(os.path.join(tmp, fname), rows, _sync_for(fname))
 
         # deterministic file layout: partition by key range, not hash
         sup.repartitionByRange(8, "suppkey").foreachPartition(write_part)
-        with open(marker, "w") as fh:
-            fh.write("ok")
 
+    path = io.staged(io.stage_dir(sf_dir, "supplier-avro"), write)
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.avro")

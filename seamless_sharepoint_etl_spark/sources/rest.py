@@ -599,10 +599,7 @@ def register(spark: SparkSession) -> None:
 
 
 def _endpoint_for(sf_dir: str) -> str:
-    from .. import io as _io
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return f"/tmp/seamless_rest_endpoint-{tag}-{_io.fixture_token(sf_dir)}"
+    return io.stage_dir(sf_dir, "rest-endpoint")
 
 
 def rest_paged_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -651,8 +648,7 @@ def rest_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh = rest_paged_scan(spark, sf_dir).select(
         "vendor", "description", "picker", "charge_code", "po_number"
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    sink = f"/tmp/seamless_rest_sink-{tag}"
+    sink = io.stage_dir(sf_dir, "rest-sink")
     (
         fresh.repartition(4, "po_number")
         .write.format("seamless_rest")
@@ -733,12 +729,7 @@ def rest_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-run a no-op (AvailableNow resumes from the committed offset).
     # Fixture-token in the name: a regenerated fixture must NOT resume
     # from a checkpoint whose committed output holds the old rows.
-    from .. import io as _io
-
-    work = (
-        f"/tmp/seamless_rest_stream-{os.path.basename(sf_dir.rstrip('/'))}"
-        f"-{_io.fixture_token(sf_dir)}"
-    )
+    work = io.stage_dir(sf_dir, "rest-stream")
     out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
     stream = (
         spark.readStream.format("seamless_rest")

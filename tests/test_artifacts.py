@@ -76,6 +76,23 @@ def test_publish_always_is_a_subset_of_headline():
     assert set(bench.PUBLISH_ALWAYS) <= set(bench.HEADLINE)
 
 
+def test_bench_rejects_a_fixture_name_before_starting_a_session(monkeypatch):
+    """bench.py reads the scale factor from the dir name; a dir named
+    like the tools' defaults (``sf_perturb``) must fail at once, not
+    after setup and every timed pass."""
+    import pytest
+
+    import bench
+    from seamless_sharepoint_etl_spark import session
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "fixtures/sf_perturb")
+    monkeypatch.setattr(
+        session, "get_spark", lambda *a: pytest.fail("session started")
+    )
+    with pytest.raises(ValueError):
+        bench.main()
+
+
 def test_only_the_store_keys_on_the_application_id():
     """Session scoping lives in one place: a module that keys its own
     cache on applicationId bypasses the store's fixture-token eviction."""

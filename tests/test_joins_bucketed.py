@@ -60,3 +60,62 @@ def test_bloom_prefilter_actually_prunes(spark):
     )
     assert row["n_lines"] == exact["n_lines"]
     assert n_true < n_fact  # fixture sanity: the predicate is selective
+
+
+def _bucketed_join_rows(spark, sf_dir):
+    rows = joins.bucketed_colocated_join(spark, sf_dir).collect()
+    return sorted((r["yr"], r["n_lines"], r["revenue"]) for r in rows)
+
+
+def _oracle_rows(sf_dir):
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ("orders", "lineitem"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    rows = sorted(con.sql(joins.BUCKETED_JOIN_SQL).fetchall())
+    con.close()
+    return rows
+
+
+def _assert_matches_oracle(got, want):
+    assert [(y, n) for y, n, _ in got] == [(y, n) for y, n, _ in want]
+    # a sum at a .xx5 boundary may round either way under another
+    # summation order
+    for (_, _, a), (_, _, b) in zip(got, want):
+        assert abs(a - b) <= 0.011, (a, b)
+
+
+def _copy_fixture(dst, lineitem_filter=None):
+    import os
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    dst.mkdir(parents=True)
+    for f in os.listdir(SF):
+        shutil.copyfile(os.path.join(SF, f), dst / f)
+    if lineitem_filter is not None:
+        t = pq.read_table(dst / "lineitem.parquet")
+        pq.write_table(t.filter(lineitem_filter(pc, t)), dst / "lineitem.parquet")
+    return str(dst)
+
+
+def test_bucketed_join_keys_its_tables_on_the_fixture_data(spark, tmp_path):
+    """Two fixtures in dirs of the same name, the second with half the
+    lineitem rows: each call must join its own fixture's rows, not the
+    bucketed tables another fixture of that name left in the session."""
+    full = _copy_fixture(tmp_path / "a" / "sf0.001")
+    even = _copy_fixture(
+        tmp_path / "b" / "sf0.001",
+        lambda pc, t: pc.equal(pc.bit_wise_and(t["l_orderkey"], 1), 0),
+    )
+    for sf_dir in (full, even):
+        _assert_matches_oracle(_bucketed_join_rows(spark, sf_dir), _oracle_rows(sf_dir))
+
+
+def test_bucketed_join_runs_on_a_dir_of_any_name(spark, tmp_path):
+    d = _copy_fixture(tmp_path / "fixture")
+    assert "sf" not in d
+    _assert_matches_oracle(_bucketed_join_rows(spark, d), _oracle_rows(d))
