@@ -49,9 +49,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def fixture_token(sf_dir: str) -> str:
     """10-hex fingerprint of the fixture parquet files (size + mtime).
 
@@ -190,10 +187,6 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def _create_views(spark: SparkSession, sf_dir: str) -> None:
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
@@ -269,15 +262,6 @@ SELECT printf('U%08dD', o_orderkey)          AS po_number,
        o_totalprice                           AS amount
 FROM orders LEFT JOIN customer ON o_custkey = c_custkey
 """
-
-
-def watermark_fraction_expr() -> str:
-    """Deterministic already-loaded frontier: orders with key ≤ 60% of max.
-
-    Gives every scale factor a non-trivial 'new rows' tail without any
-    wall-clock or random dependency.
-    """
-    return "0.6"
 
 
 def sharepoint_rows(spark: SparkSession, sf_dir: str) -> DataFrame:

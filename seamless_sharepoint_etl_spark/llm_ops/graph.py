@@ -1,11 +1,12 @@
 """Graph analytics over the similarity graph (north-star tier).
 
 Provenance: SURVEY.md §2 Tier B extension — the dedup family already
-builds a near-duplicate *graph* (edges = vector pairs above
-``similarity.NEARDUP_COS``) and consumes it as connected components
-(``dedup.neardup_clusters``) and PageRank exemplars
-(``dedup.neardup_pagerank``). These operators complete the standard
-graph-shaped questions a curation pipeline asks of that graph:
+builds a near-duplicate *graph* (edges = n-gram-Jaccard pairs) and
+consumes it as connected components (``dedup.neardup_clusters``) and
+PageRank exemplars (``dedup.neardup_pagerank``). These operators
+complete the standard graph-shaped questions a curation pipeline asks
+of the embedding near-dup graph (edges = vector pairs above
+``similarity.NEARDUP_COS``):
 how clustered is it (triangles / clustering coefficient — dense
 near-dup cliques mean template spam), and what does its degree
 distribution look like (hub documents that near-match everything are
@@ -26,7 +27,8 @@ from pyspark.sql import functions as F
 
 from .. import io, portable
 from ..artifacts import artifact
-from .dedup import NGRAM_JACCARD_SQL
+from ..operators.joins import min_label_cc
+from .dedup import NEARDUP_CC_CTES
 from .similarity import (
     EMBEDDING_NEARDUP_SQL,
     embedding_neardup,
@@ -908,125 +910,35 @@ LIMIT {PR_TOP}
 PAGERANK_EXACT_SQL = _pagerank_sql()
 
 
-CC_MAX_ROUNDS = 50
-
-def _min_label_cc(
-    edges: DataFrame, max_rounds: int, what: str
-) -> tuple[DataFrame, int]:
-    """Exact min-label connected components over an undirected edge
-    relation (first column, second column) — returns ``(labels,
-    rounds)``: ``labels`` is ``(k, label)`` with ``label`` = the
-    component's minimum member id, one row per vertex that appears in
-    ``edges`` (isolated vertices are absent; callers coalesce to the
-    vertex's own id), and ``rounds`` is how many rounds the loop took
-    to converge.
-
-    Scale: per round one vertex-keyed hash join + min-aggregate
-    (relax) plus one label-keyed self-join (pointer doubling),
-    ``localCheckpoint``ed (NOTES trap 16) so the plan never deepens;
-    doubling makes the round count O(log diameter) instead of one
-    round per hop, with a hard cap that RAISES (``what`` names the
-    caller) rather than returning a silently split partition.
-    """
-    lo, hi = edges.columns
-    sym = (
-        edges.select(F.col(lo).alias("ka"), F.col(hi).alias("kb"))
-        .unionAll(edges.select(F.col(hi).alias("ka"), F.col(lo).alias("kb")))
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        sym.select(F.col("ka").alias("k"))
-        .distinct()
-        .select("k", F.col("k").alias("label"))
-        .localCheckpoint(eager=False)
-    )
-    # Convergence by the monotone label-sum invariant: min-propagation
-    # only ever DECREASES a vertex's label, so Σ label is strictly
-    # decreasing until the fixpoint and equal exactly at it — the same
-    # fixpoint the old join-and-compare diff detected, in one 1-row
-    # aggregate per round instead of a join + count job. The agg also
-    # materializes the round's LAZY checkpoint in the same job
-    # (sum(label) touches every partition).
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for rnd in range(max_rounds):
-        msgs = sym.join(labels, sym.ka == labels.k).select(
-            F.col("kb").alias("k"), "label"
-        )
-        relaxed = (
-            labels.unionAll(msgs)
-            .groupBy("k")
-            .agg(F.min("label").alias("label"))
-            # checkpoint BEFORE the doubling self-join: both references
-            # read the stored partitions instead of re-running the
-            # relax aggregate (Catalyst inlines self-joined subtrees)
-            .localCheckpoint(eager=False)
-        )
-        # Pointer doubling (r10 — the join_entity_resolution r9
-        # precedent applied verbatim): label(k) is always a member id
-        # of k's component, so label(label(k)) is too — folding it in
-        # each round makes convergence O(log diameter) driver barriers
-        # instead of one per hop. The fixpoint is unchanged: both steps
-        # only decrease labels within the component, and a stable label
-        # sum means NEITHER step moved, i.e. the same one-hop fixpoint
-        # the oracle's WITH RECURSIVE walk computes.
-        l2 = relaxed.select(F.col("k").alias("lk"), F.col("label").alias("l2"))
-        new_labels = (
-            relaxed.join(l2, relaxed.label == l2.lk, "left")
-            .select(
-                "k",
-                F.least("label", F.coalesce("l2", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        raise RuntimeError(f"{what} did not converge in {max_rounds} rounds")
-    return labels, rnd + 1
-
-
-# The (k, label) relation is a session artifact: neardup_cc_exact and
-# dedup.keep_best_canonical cluster the IDENTICAL edge set, so the
-# fixpoint loop runs once per (session, corpus) and is served from the
-# final localCheckpoint thereafter.
+# The (k, label) relation is a session artifact: every near-dup CC
+# query (neardup_cc_exact, dedup.neardup_clusters and its
+# dedup_cc_twophase name, dedup.keep_best_canonical) clusters the
+# IDENTICAL edge set, so the fixpoint loop runs once per (session,
+# corpus) and is served from the final localCheckpoint thereafter.
 @artifact
 def neardup_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(k, label)`` min-label components of the n-gram-Jaccard
-    near-dup graph, computed once per (session, corpus) — the shared
-    partition behind ``graph_neardup_cc_exact`` and
-    ``dedup_keep_best_canonical``."""
+    near-dup graph, computed once per (session, corpus) by the shared
+    ``joins.min_label_cc`` kernel."""
     from .dedup import ngram_jaccard_pairs
 
     e = ngram_jaccard_pairs(spark, sf_dir).select("doc_lo", "doc_hi")
-    labels, _rounds = _min_label_cc(e, CC_MAX_ROUNDS, "neardup min-label CC")
+    labels, _rounds = min_label_cc(e, "neardup min-label CC")
     return labels
 
 
 def neardup_cc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACTLY-oracled connected components of the near-dup graph —
-    the driver-graded proof the rows-only CC family
-    (``dedup_neardup_clusters`` label propagation,
-    ``dedup_cc_twophase`` star contraction) could only pytest-gate:
-    DuckDB replays the same partition as a WITH RECURSIVE reachability
-    walk (the ``join_entity_resolution`` precedent applied to the
-    embedding near-dup edges). Output is one row per NON-SINGLETON
-    cluster (canonical id = min member, size, member-id sum) — with
-    the other two algorithms pytest-proven equal, three independent
-    algorithms now agree on every cluster and one of them is
-    hash-graded.
+    """EXACTLY-oracled connected components of the n-gram-Jaccard
+    near-dup graph: one row per NON-SINGLETON cluster (canonical id =
+    min member, size, member-id sum). DuckDB replays the same
+    partition as a WITH RECURSIVE reachability walk
+    (``dedup.NEARDUP_CC_CTES``, the ``join_entity_resolution``
+    precedent applied to the near-dup edges).
 
-    Scale: min-label propagation via the shared ``_min_label_cc``
-    fixpoint (one vertex-keyed hash join + min-aggregate per round,
-    `localCheckpoint`ed — NOTES trap 16 — diameter-bounded with a
-    raising backstop), served from the session ``neardup_cc_labels``
-    cache it shares with ``dedup_keep_best_canonical``. Edges are the
-    exact n-gram-Jaccard pairs — the SAME graph the rows-only CC
-    family clusters (the embedding graph is the other families'
-    index), so the three partitions are comparable; the pair relation
-    rides the session shingle cache.
+    Scale: a ``groupBy`` over the session ``neardup_cc_labels``
+    artifact, which the ``joins.min_label_cc`` kernel fills once per
+    (session, corpus); the pair relation rides the session shingle
+    cache.
     """
     labels = neardup_cc_labels(spark, sf_dir)
     return (
@@ -1045,21 +957,11 @@ def neardup_cc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 NEARDUP_CC_EXACT_SQL = f"""
-WITH RECURSIVE
-edges AS (SELECT doc_lo, doc_hi FROM ({NGRAM_JACCARD_SQL})),
-sym AS (SELECT doc_lo AS ka, doc_hi AS kb FROM edges
-        UNION ALL SELECT doc_hi, doc_lo FROM edges),
-verts AS (SELECT DISTINCT ka AS k FROM sym),
-reach (k, r) AS (
-  SELECT k, k FROM verts
-  UNION
-  SELECT reach.k, sym.kb FROM reach JOIN sym ON reach.r = sym.ka
-),
-cluster AS (SELECT k, min(r) AS cluster_id FROM reach GROUP BY k)
-SELECT CAST(cluster_id AS BIGINT) AS cluster_id,
+WITH RECURSIVE {NEARDUP_CC_CTES}
+SELECT CAST(label AS BIGINT) AS cluster_id,
        CAST(count(*) AS BIGINT) AS n_members,
        CAST(sum(k) AS BIGINT) AS member_id_sum
-FROM cluster GROUP BY cluster_id
+FROM cluster GROUP BY label
 ORDER BY cluster_id
 """
 

@@ -737,21 +737,6 @@ def _png_enc_batches(
         yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
 
-def with_png_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → VALID binary PNG images: the SAME cycled-printable
-    pixel body as the PPM path (so the DuckDB oracle derives channel
-    sums straight from the text), but round-tripped through a REAL
-    codec — zlib deflate + cycling scanline filters + chunk CRCs.
-
-    The body string is built JVM-side (identical expression to
-    ``with_ppm_payload``); the PNG container is assembled in an
-    Arrow-batched mapInPandas (zlib is driver/worker stdlib — exactly
-    where a JPEG encoder would sit)."""
-    return _png_raw(spark, sf_dir).mapInPandas(
-        _png_enc_batches, "doc_id LONG, payload BINARY"
-    )
-
-
 def png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode REAL PNG payloads — signature check, chunk CRC walk,
     zlib inflate, filter reconstruction across all five scanline filter

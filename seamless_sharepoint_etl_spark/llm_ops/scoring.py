@@ -344,40 +344,40 @@ def winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _winnow_sql() -> str:
-    s = (
-        "regexp_replace(regexp_replace(lower(coalesce(text, '')),"
-        " '[^ -~]', '?', 'g'), ' +', ' ', 'g')"
-    )
-    n_grams = f"greatest(length(s) - {WINNOW_K - 1}, 0)"
-    hashes = (
-        f"list_transform(range(1, CAST(n_grams AS BIGINT) + 1),"
-        f" i -> ({_GRAM_TERMS_DUCK}) % {WINNOW_M})"
-    )
-    m_sel = f"greatest(n_grams - {WINNOW_W - 1}, 0)"
-    mins = (
-        f"list_transform(range(1, CAST(n_windows AS BIGINT) + 1),"
-        f" j -> list_aggregate(hs[CAST(j AS INTEGER):"
-        f"CAST(j + {WINNOW_W - 1} AS INTEGER)], 'min'))"
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id, {s} AS s FROM documents
+# The per-doc fingerprint chain of both winnowing oracles, as DuckDB
+# CTEs ending in ``sel(doc_id, n_grams, n_windows, fps)``.
+_WINNOW_SEL_CTES = f"""base AS (
+  SELECT doc_id,
+         regexp_replace(regexp_replace(lower(coalesce(text, '')),
+                        '[^ -~]', '?', 'g'), ' +', ' ', 'g') AS s
+  FROM documents
 ),
 sized AS (
-  SELECT doc_id, s, {n_grams} AS n_grams FROM base
+  SELECT doc_id, s, greatest(length(s) - {WINNOW_K - 1}, 0) AS n_grams
+  FROM base
 ),
 hashed AS (
-  SELECT doc_id, n_grams, {m_sel} AS n_windows,
-         CASE WHEN n_grams > 0 THEN {hashes} ELSE [] END AS hs
+  SELECT doc_id, n_grams, greatest(n_grams - {WINNOW_W - 1}, 0) AS n_windows,
+         CASE WHEN n_grams > 0
+              THEN list_transform(range(1, CAST(n_grams AS BIGINT) + 1),
+                     i -> ({_GRAM_TERMS_DUCK}) % {WINNOW_M})
+              ELSE [] END AS hs
   FROM sized
 ),
 sel AS (
   SELECT doc_id, n_grams, n_windows,
-         CASE WHEN n_windows > 0 THEN list_distinct({mins})
+         CASE WHEN n_windows > 0
+              THEN list_distinct(list_transform(
+                     range(1, CAST(n_windows AS BIGINT) + 1),
+                     j -> list_aggregate(hs[CAST(j AS INTEGER):
+                          CAST(j + {WINNOW_W - 1} AS INTEGER)], 'min')))
               ELSE [] END AS fps
   FROM hashed
-)
+)"""
+
+
+WINNOW_FINGERPRINT_SQL = f"""
+WITH {_WINNOW_SEL_CTES}
 SELECT doc_id,
        CAST(n_grams AS BIGINT) AS n_grams,
        CAST(n_windows AS BIGINT) AS n_windows,
@@ -389,9 +389,6 @@ SELECT doc_id,
        CAST(coalesce(list_aggregate(fps, 'max'), -1) AS BIGINT) AS fp_max
 FROM sel
 """
-
-
-WINNOW_FINGERPRINT_SQL = _winnow_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -586,41 +583,8 @@ def winnow_crossdoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _winnow_crossdoc_sql() -> str:
-    base = _winnow_sql()
-    # reuse the per-doc fingerprint construction from the reduction
-    # oracle by lifting its `sel` CTE: rebuild the chain here verbatim
-    s = (
-        "regexp_replace(regexp_replace(lower(coalesce(text, '')),"
-        " '[^ -~]', '?', 'g'), ' +', ' ', 'g')"
-    )
-    n_grams = f"greatest(length(s) - {WINNOW_K - 1}, 0)"
-    hashes = (
-        f"list_transform(range(1, CAST(n_grams AS BIGINT) + 1),"
-        f" i -> ({_GRAM_TERMS_DUCK}) % {WINNOW_M})"
-    )
-    m_sel = f"greatest(n_grams - {WINNOW_W - 1}, 0)"
-    mins = (
-        f"list_transform(range(1, CAST(n_windows AS BIGINT) + 1),"
-        f" j -> list_aggregate(hs[CAST(j AS INTEGER):"
-        f"CAST(j + {WINNOW_W - 1} AS INTEGER)], 'min'))"
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id, {s} AS s FROM documents
-),
-sized AS (SELECT doc_id, s, {n_grams} AS n_grams FROM base),
-hashed AS (
-  SELECT doc_id, n_grams, {m_sel} AS n_windows,
-         CASE WHEN n_grams > 0 THEN {hashes} ELSE [] END AS hs
-  FROM sized
-),
-sel AS (
-  SELECT doc_id,
-         CASE WHEN n_windows > 0 THEN list_distinct({mins})
-              ELSE [] END AS fps
-  FROM hashed
-),
+WINNOW_CROSSDOC_SQL = f"""
+WITH {_WINNOW_SEL_CTES},
 postings AS (
   SELECT fp, list_sort(list(doc_id)) AS ds
   FROM (SELECT doc_id, unnest(fps) AS fp FROM sel)
@@ -639,9 +603,6 @@ FROM pairs GROUP BY lo, hi
 HAVING count(*) >= {WINNOW_MIN_SHARED}
 ORDER BY doc_lo, doc_hi
 """
-
-
-WINNOW_CROSSDOC_SQL = _winnow_crossdoc_sql()
 
 
 QUERIES = {

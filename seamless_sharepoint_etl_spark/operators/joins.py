@@ -1034,26 +1034,104 @@ ORDER BY event_type
 """
 
 
-ER_MAX_ROUNDS = 30
+# Raising backstop of `min_label_cc`. Pointer doubling needs
+# O(log diameter) rounds (at most 10 on a 64-vertex path, which the
+# tests pin), so one cap serves every caller.
+CC_MAX_ROUNDS = 50
+
+
+def min_label_cc(edges: DataFrame, what: str) -> tuple[DataFrame, int]:
+    """Exact min-label connected components over an undirected edge
+    relation (first column, second column) — the engine's one CC
+    kernel. Returns ``(labels, rounds)``: ``labels`` is ``(k, label)``
+    with ``label`` = the component's minimum member id, one row per
+    vertex that appears in ``edges`` (isolated vertices are absent;
+    callers coalesce to the vertex's own id), and ``rounds`` is how
+    many rounds the loop took to converge.
+
+    Scale: per round one vertex-keyed hash join + min-aggregate
+    (relax) plus one label-keyed self-join (pointer doubling),
+    ``localCheckpoint``ed (NOTES trap 16) so the plan never deepens;
+    doubling makes the round count O(log diameter) instead of one
+    round per hop. ``CC_MAX_ROUNDS`` is a backstop that RAISES
+    (``what`` names the caller) rather than returning a silently split
+    partition. The DuckDB oracles of every caller replay the same
+    partition as a WITH RECURSIVE reachability walk.
+    """
+    lo, hi = edges.columns
+    sym = (
+        edges.select(F.col(lo).alias("ka"), F.col(hi).alias("kb"))
+        .unionAll(edges.select(F.col(hi).alias("ka"), F.col(lo).alias("kb")))
+        .localCheckpoint(eager=True)
+    )
+    labels = (
+        sym.select(F.col("ka").alias("k"))
+        .distinct()
+        .select("k", F.col("k").alias("label"))
+        .localCheckpoint(eager=False)
+    )
+    # Convergence by the monotone label-sum invariant: min-propagation
+    # only ever DECREASES a vertex's label, so Σ label is strictly
+    # decreasing until the fixpoint and equal exactly at it — one 1-row
+    # aggregate per round instead of a join-and-compare count job. The
+    # agg also materializes the round's LAZY checkpoint in the same job
+    # (sum(label) touches every partition).
+    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+    for rnd in range(CC_MAX_ROUNDS):
+        msgs = sym.join(labels, sym.ka == labels.k).select(
+            F.col("kb").alias("k"), "label"
+        )
+        relaxed = (
+            labels.unionAll(msgs)
+            .groupBy("k")
+            .agg(F.min("label").alias("label"))
+            # checkpoint BEFORE the doubling self-join: both references
+            # read the stored partitions instead of re-running the
+            # relax aggregate (Catalyst inlines self-joined subtrees)
+            .localCheckpoint(eager=False)
+        )
+        # Pointer doubling: label(k) is always a member id of k's
+        # component, so label(label(k)) is too — folding it in each
+        # round makes convergence O(log diameter) driver barriers
+        # instead of one per hop (supplier name chains gave the entity
+        # resolution graph a ~25-hop diameter). The fixpoint is
+        # unchanged: both steps only decrease labels within the
+        # component, and a stable label sum means NEITHER step moved,
+        # i.e. the same one-hop fixpoint the oracles' WITH RECURSIVE
+        # walk computes.
+        l2 = relaxed.select(F.col("k").alias("lk"), F.col("label").alias("l2"))
+        new_labels = (
+            relaxed.join(l2, relaxed.label == l2.lk, "left")
+            .select(
+                "k",
+                F.least("label", F.coalesce("l2", "label")).alias("label"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
+        labels = new_labels
+        if new_sum == prev_sum:
+            break
+        prev_sum = new_sum
+    else:
+        raise RuntimeError(f"{what} did not converge in {CC_MAX_ROUNDS} rounds")
+    return labels, rnd + 1
 
 
 def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full entity-resolution pipeline over supplier names: the fuzzy
     match edges (nation-blocked levenshtein ≤ {FUZZY_MAX_DIST}, the
     `join_fuzzy_name_match` candidate discipline) close transitively
-    into canonical entities via min-label propagation — blocking →
-    pairwise scoring → clustering, the master-data dedup every CRM/
-    vendor pipeline runs. Output is one row per entity (canonical id =
-    min member key, member count, key digest), singletons included.
+    into canonical entities — blocking → pairwise scoring → clustering,
+    the master-data dedup every CRM/vendor pipeline runs. Output is one
+    row per entity (canonical id = min member key, member count, key
+    digest), singletons included.
 
-    EXACTLY oracled (unlike the rows-only fixpoint family): the DuckDB
-    twin computes the same transitive closure as a WITH RECURSIVE
-    reachability walk — two independent algorithms, one graded answer
-    (the `graph_bfs_depth` precedent). Scale: each round is one hash
-    join keyed by entity label + a min-aggregate (the Pregel message
-    shape); rounds are `localCheckpoint`ed (NOTES trap 16) and bounded
-    by the cluster diameter, with a hard cap that raises rather than
-    returning a half-converged partition.
+    Clustering is the shared ``min_label_cc`` kernel over the fuzzy
+    edges; suppliers with no edge get their own key as entity id
+    through one left join from ``supplier``. EXACTLY oracled: the
+    DuckDB twin computes the same transitive closure as a WITH
+    RECURSIVE reachability walk (the `graph_bfs_depth` precedent).
     """
     s = io.load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("k"), "s_name", "s_nationkey"
@@ -1074,62 +1152,12 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein("na", "nb") <= FUZZY_MAX_DIST)
         .select("ka", "kb")
     )
-    sym = edges.unionAll(
-        edges.select(F.col("kb").alias("ka"), F.col("ka").alias("kb"))
-    ).localCheckpoint(eager=True)
-    labels = s.select("k", F.col("k").alias("label")).localCheckpoint(
-        eager=False
-    )
-    # Convergence by the monotone label-sum invariant (the
-    # graph._min_label_cc pattern): min-propagation only DECREASES
-    # labels, so Σ label is strictly decreasing until the fixpoint and
-    # equal exactly at it. One 1-row aggregate per round replaces the
-    # old join-and-compare count job, and the same aggregate
-    # materializes the round's LAZY checkpoint (sum touches every
-    # partition), so each round costs one job instead of two.
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(ER_MAX_ROUNDS):
-        msgs = sym.join(labels, sym.ka == labels.k).select(
-            F.col("kb").alias("k"), "label"
-        )
-        relaxed = (
-            labels.unionAll(msgs)
-            .groupBy("k")
-            .agg(F.min("label").alias("label"))
-            # checkpoint BEFORE the doubling self-join: both references
-            # read the stored partitions instead of re-running the
-            # relax aggregate (Catalyst inlines self-joined subtrees)
-            .localCheckpoint(eager=False)
-        )
-        # Pointer doubling (r9): label(k) is always a member id of k's
-        # component, so label(label(k)) is too — folding it in each
-        # round makes convergence O(log diameter) hops instead of one
-        # hop per round (supplier name chains gave this graph a ~25-hop
-        # diameter; the plain loop paid one driver job per hop). The
-        # fixpoint is unchanged: both steps only decrease labels within
-        # the component, and a stable label sum means NEITHER step
-        # moved, i.e. the one-hop fixpoint the oracle's WITH RECURSIVE
-        # walk computes.
-        l2 = relaxed.select(F.col("k").alias("lk"), F.col("label").alias("l2"))
-        new_labels = (
-            relaxed.join(l2, relaxed.label == l2.lk, "left")
-            .select(
-                "k",
-                F.least("label", F.coalesce("l2", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        raise RuntimeError(
-            f"entity_resolution did not converge in {ER_MAX_ROUNDS} rounds"
-        )
+    labels, _rounds = min_label_cc(edges, "entity_resolution")
     return (
-        labels.groupBy("label")
+        s.select("k")
+        .join(labels, "k", "left")
+        .select("k", F.coalesce("label", "k").alias("label"))  # singletons
+        .groupBy("label")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_members"),
             F.sum("k").cast("long").alias("member_key_sum"),

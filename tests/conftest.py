@@ -29,6 +29,35 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _remove_staged_fixture_copies(tmp_path_factory):
+    """At session end, remove what the run staged from its fixture copies.
+
+    Each fixture copy a test writes under ``tmp_path`` has its own
+    ``io.fixture_token``, so every source staged from it is an
+    ``io.stage_dir`` entry no later run can reuse. The finalizer walks
+    the run's base temp dir for dirs holding fixture parquet and removes
+    ``io.stage_dir(d, "*")`` of each: only this run's copies, never the
+    shared fixtures' entries or another process's. Limit: the token is
+    read at session end, so a copy that a test rewrote after staging
+    from it keeps the entries of its old token.
+    """
+    yield
+    import glob
+    import shutil
+
+    from seamless_sharepoint_etl_spark import io
+
+    for d, dirs, files in os.walk(tmp_path_factory.getbasetemp()):
+        if not {f"{t}.parquet" for t in io.TABLES} & set(dirs + files):
+            continue
+        for path in glob.glob(io.stage_dir(d, "*")):
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.remove(path)
+
+
 @pytest.fixture(scope="session")
 def oracle():
     con = duckdb.connect()
