@@ -550,9 +550,7 @@ PR_EPS_BP = 1  # fixpoint: total L1 rank movement < 1 basis point / node
 PR_MAX_ROUNDS = 60
 
 
-def neardup_pagerank(
-    spark: SparkSession, sf_dir: str, max_rounds: int = PR_MAX_ROUNDS
-) -> DataFrame:
+def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the near-dup graph: rank each connected document
     by its dup-connectivity — the exemplar-selection signal when a
     cluster's canonical copy should be its most-corroborated member,
@@ -584,7 +582,7 @@ def neardup_pagerank(
     n_nodes = nodes.count()  # scalar frontier — rank base needs N
     ranks = nodes.withColumn("rank", F.lit(1.0))
     base = (1.0 - PR_DAMPING)
-    for _ in range(max_rounds):
+    for _ in range(PR_MAX_ROUNDS):
         contrib = (
             out_edges.join(ranks, out_edges.src == ranks.doc_id)
             .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
@@ -622,7 +620,7 @@ def neardup_pagerank(
             break
     else:
         raise RuntimeError(
-            f"neardup_pagerank did not converge in {max_rounds} rounds"
+            f"neardup_pagerank did not converge in {PR_MAX_ROUNDS} rounds"
         )
     out_edges.unpersist()
     return ranks.select(

@@ -6,7 +6,8 @@ These re-express the *entire* dataflow of the reference scripts
   flagship (A1-A11):  sink-max watermark → strict-`>` source filter
                       (a broadcast left-semi join) → name-resolved
                       projection → ascending sort → append-shaped result
-                      with an `observe` row count.
+                      with an `observe` row count (`incremental_load`,
+                      the lazy DataFrame the registry and bench run).
   routing  (A12):     one parameterized job splitting on the $1500
                       threshold instead of three deployed script copies.
 
@@ -14,15 +15,20 @@ Scale posture: the watermark is an aggregate (`max`), never a "last
 row" readback (the reference re-reads its whole sink to look at one
 cell — bin/copy-seamless-to-sharepoint.rb:63-66, and its `:52` TODO
 admits the ordering workaround is broken). `max` is a partial-agg +
-single-row exchange at any scale. The `>` filter is NOT pushed into the
-parquet scan: the watermark is a 1-row DataFrame, so Catalyst plans the
-filter as a broadcast non-equi left-semi join and the orders scan shows
-`PushedFilters: []`. The join never shuffles the fact side.
+single-row exchange at any scale. The flagship's `>` filter is NOT
+pushed into the parquet scan: the watermark is a 1-row DataFrame, so
+Catalyst plans the filter as a broadcast non-equi left-semi join and
+the orders scan shows `PushedFilters: []`. The join never shuffles the fact side.
 
 The cron tick (`run_incremental_append`, `write_routed`) runs each
-Spark job once: the txn id comes from two scalar aggregates over
-`orders`, the row count from the sink manifest, and the route counts
-from an `Observation` on the routed write itself.
+Spark job once: the watermark and the txn id come from two scalar
+aggregates over `orders`, the row count from the sink manifest, and the
+route counts from an `Observation` on the routed write itself. The tick
+does not write `incremental_load`: it already holds the watermark on the
+driver, so it writes the same rows filtered by `po_number >` that
+watermark as a literal, with the flagship's projection and sort
+(`_sink_batch`), instead of recomputing the watermark as broadcast
+sub-plans inside the write.
 """
 
 from __future__ import annotations
@@ -35,6 +41,19 @@ from . import io
 # Display-name → position contract at the sink (positional schema, the
 # reference's Excel-table shape: bin/copy-seamless-to-sharepoint.rb:97-104).
 SINK_COLUMNS = ("vendor", "description", "picker", "charge_code", "po_number")
+
+
+def _sink_batch(fresh: DataFrame) -> DataFrame:
+    """The shape of a batch appended to the sink: ``fresh``'s rows in
+    sink column order, ascending on the watermark key."""
+    return (
+        # A6-A8: name-resolved, canonically ordered projection (the
+        # positional sink contract — schema IS the column order).
+        fresh.select(*SINK_COLUMNS)
+        # A5: ascending sort on the watermark key (range-partitioned
+        # global sort; cosmetic for the hash check, semantic for parity).
+        .orderBy(F.asc("po_number"))
+    )
 
 
 def incremental_load(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,18 +81,13 @@ def incremental_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.format_string(io.PO_FORMAT, F.max("o_orderkey")).alias("wm"))
     )
 
-    fresh = (
-        items.join(F.broadcast(watermark), items.po_number > F.col("wm"), "left_semi")
-        # A6-A8: name-resolved, canonically ordered projection (the
-        # positional sink contract — schema IS the column order).
-        .select(*SINK_COLUMNS)
-        # A5: ascending sort on the watermark key (range-partitioned
-        # global sort; cosmetic for the hash check, semantic for parity).
-        .orderBy(F.asc("po_number"))
-        # A9: row-count observability without a second job.
-        .observe("incremental_load", F.count(F.lit(1)).alias("rows_loaded"))
+    fresh = items.join(
+        F.broadcast(watermark), items.po_number > F.col("wm"), "left_semi"
     )
-    return fresh
+    # A9: row-count observability without a second job.
+    return _sink_batch(fresh).observe(
+        "incremental_load", F.count(F.lit(1)).alias("rows_loaded")
+    )
 
 
 INCREMENTAL_LOAD_SQL = f"""
@@ -148,13 +162,17 @@ def run_incremental_append(
     atomic against concurrent readers. Returns the committed
     snapshot's row count, read from its manifest.
 
-    The txn id names the batch's first key. It is computed from two
-    scalar aggregates over ``orders`` rather than from the batch
-    itself: with ``k0`` the 60% frontier of ``incremental_load``, the
-    watermark is the largest key ``<= k0``, so no key lies strictly
-    between it and ``k0``, and ``seamless_items`` has one row per
-    order (a left join on the unique ``c_custkey``). Hence the batch's
-    first key is the smallest key ``> k0``, and the batch is empty
+    The watermark and the txn id come from one read of two scalar
+    aggregates over ``orders``, and the batch is written from that
+    same watermark: the rows of ``incremental_load``, but filtered by
+    ``po_number >`` the watermark as a literal, so the write does not
+    recompute it, and the id always names the batch that was written
+    even if ``orders`` changes meanwhile. With ``k0`` the 60% frontier
+    of ``incremental_load``, the watermark is the largest key
+    ``<= k0``, so no key lies strictly between it and ``k0``, and
+    ``seamless_items`` has one row per order (a left join on the
+    unique ``c_custkey``). Hence the batch's first key, which the txn
+    id names, is the smallest key ``> k0``, and the batch is empty
     when no key is ``<= k0`` (no watermark) or none is ``> k0``.
     """
     from . import sinks
@@ -169,8 +187,9 @@ def run_incremental_append(
     ).first()
     if lo is None or wm is None:
         return 0
+    items = io.seamless_items(spark, sf_dir)
+    batch = _sink_batch(items.filter(F.col("po_number") > F.lit(io.PO_FORMAT % wm)))
     snap = sinks.commit_append(
-        incremental_load(spark, sf_dir), out_dir,
-        txn_id=f"batch_from_{io.PO_FORMAT % lo}",
+        batch, out_dir, txn_id=f"batch_from_{io.PO_FORMAT % lo}"
     )
     return snap["rows"]

@@ -12,6 +12,24 @@ shuffle partitions, switches sort-merge→broadcast when runtime stats
 allow, and splits skewed partitions. Shuffle partitions default to the
 local core count here but are sized ``~2-3× total executor cores`` (or
 left to AQE's advisory size) on a real cluster.
+
+File listing: ``get_spark`` raises
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` so that a
+read never lists its paths in a Spark job. Past the default 32 paths,
+Spark's ``InMemoryFileIndex`` lists them in a parallel job with one task
+per path; in a ``local[N]`` session that job runs in the driver's own
+JVM, so it only adds scheduling. Building the read of a 72- and a
+160-file sink snapshot on 4 shared vCPUs, each added path cost about
+0.2 ms listed on the driver against 2.2-3.3 ms listed in the job (two
+profiles; 436-525 ms against 42-46 ms at 72 files). For 32 cores this
+is extrapolated, not measured: the job's cost is per-task scheduling on
+the driver, which more cores do not remove. The sink (``sinks.py``) is
+the reader it matters for: its manifest names every file, so a listing
+job there discovers nothing. The conf is set on ``SparkSession.builder``,
+not in ``DYNAMIC_CONF``, so ``configure()`` leaves a driver-provided
+(possibly clustered) session's listing alone; Spark 4.1 has no per-read
+option for it, and setting it around one read would race with other
+threads' reads (``foreachBatch`` sinks) on the shared session.
 """
 
 from __future__ import annotations
@@ -66,6 +84,9 @@ def get_spark(app_name: str = "seamless-sharepoint-etl-spark") -> SparkSession:
         # keep catalog data out of the repo cwd (bucketed-layout tables
         # pass explicit external paths; this catches the default dir)
         .config("spark.sql.warehouse.dir", "/tmp/sse-warehouse")
+        # Int.MaxValue paths: every read lists its paths on the driver,
+        # never in a Spark job (see the module docstring)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
     )
     for k, v in DYNAMIC_CONF.items():
         builder = builder.config(k, v)

@@ -55,6 +55,12 @@ This module is a minimal Delta-style commit protocol on plain files:
   summed from the footers, and their schema is always inferred (no
   ``SCHEMA`` is written for them, since the files already there, not
   the next batch, define it).
+* READS name the chosen manifest's files to Spark one path each, so
+  Spark discovers nothing: it only stats those paths, and in a session
+  from ``session.get_spark`` it does so on the driver, never in a
+  parallel listing job however many files the snapshot has (see the
+  ``session`` docstring). This holds for ``read_snapshot``, its time
+  travel, and both scans of ``commit_upsert``.
 
 On a real deployment ``root`` is an object-store prefix; rename-commit
 then rides the store's atomic-put-if-absent (as Delta does). The

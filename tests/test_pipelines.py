@@ -511,6 +511,19 @@ def test_upsert_raises_on_an_overlapping_commit(spark, tmp_path, monkeypatch):
     _assert_manifest_matches_spark(spark, root)
 
 
+def _jobs(spark, group, fn, *args):
+    """``fn(*args)`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_tick_runs_each_spark_job_once(spark, tmp_path):
     """The cron tick launches no job that only reports a count: a fresh
     incremental append, its no-op retry and the routed write stay under
@@ -526,17 +539,6 @@ def test_tick_runs_each_spark_job_once(spark, tmp_path):
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "perfbench", "fixture", "sf0.01",
     )
-    sc = spark.sparkContext
-
-    def jobs(group, fn, *args):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn(*args)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     con = duckdb.connect()
     for t in ("orders", "customer"):
@@ -550,17 +552,66 @@ def test_tick_runs_each_spark_job_once(spark, tmp_path):
     con.close()
 
     root = str(tmp_path / "sink")
-    rows, n_append = jobs(
-        "tick-append", pipelines.run_incremental_append, spark, sf, root
+    rows, n_append = _jobs(
+        spark, "tick-append", pipelines.run_incremental_append, spark, sf, root
     )
-    again, n_retry = jobs(
-        "tick-retry", pipelines.run_incremental_append, spark, sf, root
+    again, n_retry = _jobs(
+        spark, "tick-retry", pipelines.run_incremental_append, spark, sf, root
     )
-    routes, n_routed = jobs(
-        "tick-routed", pipelines.write_routed, spark, sf, str(tmp_path / "routed")
+    routes, n_routed = _jobs(
+        spark, "tick-routed", pipelines.write_routed, spark, sf, str(tmp_path / "routed")
     )
     assert rows == again == want > 0
     assert sum(routes.values()) == spark.read.parquet(str(tmp_path / "routed")).count()
-    assert n_append <= 12, n_append
+    assert n_append <= 8, n_append
     assert n_retry <= 4, n_retry
     assert n_routed <= 2, n_routed
+
+
+def test_snapshot_read_lists_no_files_in_a_job(spark, tmp_path):
+    """A snapshot naming more files than Spark's 32-path parallel
+    listing threshold is read without a listing job: counting the
+    latest snapshot, or time-travelling to an earlier one, launches
+    only the count's own jobs."""
+    from seamless_sharepoint_etl_spark import sinks
+
+    root = str(tmp_path / "sink")
+    n_files = {}
+    for i, parts in enumerate((20, 20, 4)):
+        df = spark.range(i * 100, (i + 1) * 100).repartition(parts)
+        snap = sinks.commit_append(df, root, txn_id=f"t{i}")
+        n_files[snap["version"]] = len(snap["files"])
+    assert n_files == {1: 20, 2: 40, 3: 44}
+
+    def count(version):
+        snap = sinks.read_snapshot(spark, root, version=version)
+        return snap.agg(F.count(F.lit(1))).first()[0]
+
+    for version, rows in ((None, 300), (2, 200)):
+        n, n_jobs = _jobs(spark, f"read-v{version}", count, version)
+        assert n == rows
+        assert n_jobs <= 2, (version, n_jobs)
+
+
+def test_append_writes_the_flagship_batch_in_key_order(spark, tmp_path):
+    """The tick's batch is ``incremental_load``'s: a fresh append's
+    snapshot holds the same multiset of rows, and each written file,
+    taken in the manifest's order, is ascending on ``po_number``."""
+    import os
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from seamless_sharepoint_etl_spark import pipelines, sinks
+
+    root = str(tmp_path / "sink")
+    pipelines.run_incremental_append(spark, SF_DIR, root)
+    got = sinks.read_snapshot(spark, root).collect()
+    want = pipelines.incremental_load(spark, SF_DIR).collect()
+    assert want and Counter(map(tuple, got)) == Counter(map(tuple, want))
+    keys = []
+    for f in sinks._read_latest(root)["files"]:
+        in_file = pq.read_table(os.path.join(root, f)).column("po_number").to_pylist()
+        assert in_file == sorted(in_file), f
+        keys += in_file
+    assert keys == sorted(keys)
