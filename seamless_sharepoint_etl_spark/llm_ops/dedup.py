@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .. import io
 from ..artifacts import artifact
 from ..operators import bloom
+from ..operators.iterative import pagerank_ppm, pagerank_sql
 
 JACCARD_THRESHOLD = 0.8
 SHINGLE_K = 5
@@ -545,88 +546,21 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PR_DAMPING = 0.85
-PR_EPS_BP = 1  # fixpoint: total L1 rank movement < 1 basis point / node
-PR_MAX_ROUNDS = 60
-
-
 def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the near-dup graph: rank each connected document
-    by its dup-connectivity — the exemplar-selection signal when a
-    cluster's canonical copy should be its most-corroborated member,
-    not just the lowest id.
-
-    The second genuinely-iterative operator (with the CC labeler):
-    rank(v) ← (1−d)/N + d·Σ rank(u)/deg(u) over in-neighbors, looped to
-    a NUMERIC fixpoint (total L1 movement < PR_EPS_BP·N/10⁴) instead of
-    a fixed round count. Same 100-TB discipline as CC: one groupBy per
-    round over the edge relation, per-round persist + count to keep the
-    plan linear (NOTES trap 4), backstop raise instead of a silently
-    unconverged result. Ranks are reported in basis points of the
-    average rank (10000 = uniform). Iterative ⇒ rows-only; pytest gates
-    mass conservation, determinism, and degree-monotone ordering.
+    """PageRank over the n-gram near-dup graph: rank each connected
+    document by its dup-connectivity — the exemplar-selection signal
+    when a cluster's canonical copy should be its most-corroborated
+    member, not just the lowest id. ``(v, pagerank_ppm)`` for every
+    document in some pair, from the one integer PageRank kernel
+    (``iterative.pagerank_ppm``), so DuckDB grades it exactly.
     """
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_lo", "doc_hi")
-    edges = (
-        pairs.select(F.col("doc_lo").alias("src"), F.col("doc_hi").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_hi").alias("src"), F.col("doc_lo").alias("dst"))
-        )
-        .persist()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    out_edges = edges.join(deg, "src").persist()
-    out_edges.count()
-    edges.unpersist()
-    nodes = deg.select(F.col("src").alias("doc_id"))
-    n_nodes = nodes.count()  # scalar frontier — rank base needs N
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    base = (1.0 - PR_DAMPING)
-    for _ in range(PR_MAX_ROUNDS):
-        contrib = (
-            out_edges.join(ranks, out_edges.src == ranks.doc_id)
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        # localCheckpoint, not persist: PageRank runs tens of rounds
-        # and persist does NOT truncate lineage — by round ~40 the
-        # analyzed plan chains every previous round's joins and the
-        # DRIVER OOMs on plan bookkeeping (hit live at 5 nodes!). The
-        # checkpoint cuts the plan to a leaf each round; it is LAZY
-        # because the L1-delta aggregate right below materializes it
-        # in the same job (sum touches every partition), halving the
-        # per-round job count. On a cluster use reliable checkpointing
-        # for the same effect with fault tolerance. CC gets away with
-        # persist because label propagation converges in O(diameter)
-        # ≈ a handful of rounds.
-        new_ranks = (
-            ranks.join(contrib, ranks.doc_id == contrib.dst, "left")
-            .select(
-                "doc_id",
-                F.col("rank").alias("old_rank"),
-                (
-                    F.lit(base)
-                    + F.lit(PR_DAMPING) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        moved = new_ranks.agg(
-            F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("l1")
-        ).collect()[0]["l1"]
-        ranks = new_ranks.drop("old_rank")
-        if moved < PR_EPS_BP * n_nodes / 10000.0:
-            break
-    else:
-        raise RuntimeError(
-            f"neardup_pagerank did not converge in {PR_MAX_ROUNDS} rounds"
-        )
-    out_edges.unpersist()
-    return ranks.select(
-        "doc_id",
-        F.floor(F.col("rank") * 10000 + F.lit(0.5)).cast("long").alias("rank_bp"),
-    )
+    return pagerank_ppm(pairs)
+
+
+NEARDUP_PAGERANK_SQL = pagerank_sql(
+    f"SELECT doc_lo, doc_hi FROM ({NGRAM_JACCARD_SQL})"
+)
 
 
 SPAN_W = 20  # span length in tokens
@@ -1300,7 +1234,7 @@ QUERIES = {
     "dedup_minhash_mllib": (minhash_lsh_mllib, None),
     "dedup_cdc_chunking": (cdc_chunk_stats, None),
     "dedup_repeated_spans": (repeated_spans, REPEATED_SPANS_SQL),
-    "dedup_neardup_pagerank": (neardup_pagerank, None),
+    "dedup_neardup_pagerank": (neardup_pagerank, NEARDUP_PAGERANK_SQL),
     "dedup_containment": (containment_pairs, CONTAINMENT_SQL),
     "dedup_bloom_incremental": (bloom_incremental_dedup, BLOOM_INCREMENTAL_SQL),
     "dedup_minhash_estimate": (minhash_estimate, MINHASH_ESTIMATE_SQL),

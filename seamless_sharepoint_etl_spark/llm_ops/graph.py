@@ -3,7 +3,8 @@
 Provenance: SURVEY.md §2 Tier B extension — the dedup family already
 builds a near-duplicate *graph* (edges = n-gram-Jaccard pairs) and
 consumes it as connected components (``dedup.neardup_clusters``) and
-PageRank exemplars (``dedup.neardup_pagerank``). These operators
+PageRank exemplars (``dedup.neardup_pagerank``, the same integer
+kernel as ``graph_pagerank_exact`` below). These operators
 complete the standard graph-shaped questions a curation pipeline asks
 of the embedding near-dup graph (edges = vector pairs above
 ``similarity.NEARDUP_COS``):
@@ -27,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .. import io, portable
 from ..artifacts import artifact
+from ..operators.iterative import iterate, pagerank_ppm, pagerank_sql
 from ..operators.joins import min_label_cc
 from .dedup import NEARDUP_CC_CTES
 from .similarity import (
@@ -51,7 +53,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "verification vacuum"). At 0.34 the fixtures carry a ~100-vertex
 # 2-core at both SFs, so the driver's rows-only record, the bench
 # entry, and the Python-re-peel differential all run the loop's real
-# exit (n == prev_n > 0) and the core_degree reporting.
+# exit (a repeated edge count above 0) and the core_degree reporting.
 KCORE_EDGE_COS = 0.34
 
 
@@ -179,7 +181,6 @@ FROM deg GROUP BY d ORDER BY degree
 
 
 KCORE_K = 2
-KCORE_MAX_ROUNDS = 50
 
 
 def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,69 +191,32 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     that sit on cycles of near-duplication — template spam, not
     coincidental pairs.
 
-    Distributed peel: each round is (a) restrict edges to surviving
-    vertices — two vertex-keyed semi-joins, (b) recount degrees — one
-    vertex-keyed aggregate, (c) filter. Rounds are data-dependent
-    (peel depth, not diameter), so per-round relations are
-    ``localCheckpoint(eager=True)``, not persist — persist does NOT
-    truncate lineage (NOTES trap 16) and the peel's nested semi-join
-    plan OOMed the DRIVER on plan bookkeeping inside the bench's
-    long-lived session; the eager checkpoint cuts each round to a
-    leaf, and dropping the Python refs lets the ContextCleaner reclaim
-    prior rounds' blocks. Converges when the vertex count stops
-    shrinking; a round cap raises rather than silently returning a
-    non-core (same backstop policy as the CC labeler). Exactly oracled
-    since round 8: the peel is a monotone fixpoint, so DuckDB's
-    WITH RECURSIVE expresses it (KCORE_SQL below) — each iteration
-    carries the full survivor set and stops when the next set stops
-    shrinking; the pytest gate additionally re-peels the collected
-    edge list exactly in Python and compares sets.
+    Distributed peel: each round keeps the edges whose two endpoints
+    both have degree ≥ k — one vertex-keyed degree aggregate and two
+    vertex-keyed semi-joins — run by ``iterative.iterate``,
+    until the edge count stops shrinking (an equal-size subset is the
+    same set). The core is every vertex of the surviving edges, with
+    its degree among them. Exactly oracled since round 8: the peel is
+    a monotone fixpoint, so DuckDB's WITH RECURSIVE expresses it
+    (KCORE_SQL below); the pytest gate additionally re-peels the
+    collected edge list exactly in Python and compares sets.
 
     Edges come from _kcore_edges (threshold KCORE_EDGE_COS = 0.34, not
     the 0.42 near-dup graph) so the core is non-trivial at fixture
     scale — see the constant's comment.
     """
-    cur_edges = _kcore_edges(spark, sf_dir).localCheckpoint(eager=True)
 
-    def degrees(edges: DataFrame) -> DataFrame:
-        return (
-            edges.select(F.col("id_lo").alias("v"))
-            .unionAll(edges.select(F.col("id_hi").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
+    def peel(edges: DataFrame) -> DataFrame:
+        keep = _degrees(edges).filter(F.col("d") >= KCORE_K)
+        return edges.join(
+            keep.select(F.col("v").alias("id_lo")), "id_lo", "left_semi"
+        ).join(keep.select(F.col("v").alias("id_hi")), "id_hi", "left_semi")
 
-    prev_n = -1
-    for _ in range(KCORE_MAX_ROUNDS):
-        # LAZY checkpoint + count(): the count materializes the
-        # checkpoint blocks in the SAME job, so each peel round costs
-        # one job instead of three (eager-verts + count + eager-edges
-        # ran 3 driver-synchronized jobs/round; the restricted edge
-        # relation now materializes inside the next round's count).
-        # count() computes every partition, so the truncated lineage
-        # is never left with missing blocks (a limit()-style partial
-        # action would be unsafe here).
-        verts = (
-            degrees(cur_edges)
-            .filter(F.col("deg") >= KCORE_K)
-            .localCheckpoint(eager=False)
-        )
-        n = verts.count()
-        if n == prev_n:
-            core = verts
-            break
-        cur_edges = cur_edges.join(
-            verts.select(F.col("v").alias("id_lo")), "id_lo", "left_semi"
-        ).join(
-            verts.select(F.col("v").alias("id_hi")), "id_hi", "left_semi"
-        ).localCheckpoint(eager=False)
-        prev_n = n
-    else:
-        raise RuntimeError(
-            f"k-core peel did not converge in {KCORE_MAX_ROUNDS} rounds"
-        )
-    return core.select(
-        F.col("v").alias("vec_id"), F.col("deg").alias("core_degree")
+    core, _rounds = iterate(
+        _kcore_edges(spark, sf_dir), peel, F.count(F.lit(1)), "k-core peel"
+    )
+    return _degrees(core).select(
+        F.col("v").alias("vec_id"), F.col("d").alias("core_degree")
     ).orderBy("vec_id")
 
 
@@ -309,9 +273,6 @@ SELECT v AS vec_id, deg AS core_degree FROM core ORDER BY vec_id
 """
 
 
-BFS_MAX_ROUNDS = 64
-
-
 def bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Depth histogram of a synthesized random recursive tree — the
     hierarchy-traversal operator (org charts, BOM explosion,
@@ -329,13 +290,14 @@ def bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds instead of depth rounds (round 3 measured the frontier
     version at ~29 sequential rounds / 10 s at sf0.1; doubling runs
     the same result in 5-6 rounds). Each round is ONE self-join of the
-    state relation keyed by ancestor id + a `localCheckpoint` (NOTES
-    trap 16). At 100 TB the trade is explicit: doubling does
+    state relation keyed by ancestor id, run by the
+    ``iterative.iterate`` loop, which checkpoints every round and
+    raises at its round cap rather than return a truncated traversal.
+    At 100 TB the trade is explicit: doubling does
     O(n log d) join work in O(log d) driver-synchronized rounds, vs
     the frontier's O(n) total work in O(d) rounds — round overhead
     (scheduling, checkpoint barriers) dominates real clusters, so
-    log-rounds wins. A round cap raises rather than returning a
-    truncated traversal.
+    log-rounds wins.
     """
     d = io.load_table_parallel(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("n")
@@ -351,29 +313,29 @@ def bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("n") > 0, F.lit(1)).otherwise(F.lit(0))
         .cast("long")
         .alias("dist"),
-    ).localCheckpoint(eager=True)
-    for _ in range(BFS_MAX_ROUNDS):
+    )
+
+    def double(state: DataFrame) -> DataFrame:
         hop = state.select(
             F.col("n").alias("anc"),
             F.col("anc").alias("anc2"),
             F.col("dist").alias("d2"),
         )
-        state = (
-            state.join(hop, "anc")
-            .select(
-                "n",
-                F.col("anc2").alias("anc"),
-                (F.col("dist") + F.col("d2")).alias("dist"),
-            )
-            .localCheckpoint(eager=False)
+        return state.join(hop, "anc").select(
+            "n",
+            F.col("anc2").alias("anc"),
+            (F.col("dist") + F.col("d2")).alias("dist"),
         )
-        # full-scan count (not isEmpty/limit — a partial action must
-        # not materialize a lazy checkpoint) doubles as the checkpoint
-        # materialization: one job per doubling round instead of two
-        if state.filter(F.col("anc") != 0).count() == 0:
-            break
-    else:
-        raise RuntimeError(f"pointer doubling exceeded {BFS_MAX_ROUNDS} rounds")
+
+    # done once every pointer reaches the root: waiting for the count
+    # to repeat would cost one more doubling round
+    state, _rounds = iterate(
+        state,
+        double,
+        F.count_if(F.col("anc") != 0),
+        "pointer doubling",
+        stop=lambda _prev, unrooted: unrooted == 0,
+    )
     return (
         state.select("n", F.col("dist").alias("depth"))
         .groupBy("depth")
@@ -814,100 +776,25 @@ ORDER BY support
 # Exactly-oracled PageRank (fixed-iteration, integer ppm)
 # ---------------------------------------------------------------------------
 
-PR_ITERS = 4
 PR_TOP = 25
-_PR_BASE = 150_000  # (1 − d) · 10⁶ with d = 0.85
-_PR_DAMP = 85  # d numerator (denominator 100 folded into the div)
 
 
 def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-iteration PageRank over the (undirected) near-dup graph in
-    EXACT integer parts-per-million — the exactly-SQL-oracled sibling of
-    the rows-only ``dedup_neardup_pagerank`` fixpoint (which converges
-    in floats and can only be property-gated). Pinning the iteration
-    count and doing every transfer as BIGINT arithmetic
-    (rᵗ⁺¹(v) = {_PR_BASE} + Σ_neighbors (rᵗ(u)·{_PR_DAMP}) div (100·deg(u)))
-    makes the result bit-reproducible, so DuckDB replays the same four
-    rounds as chained CTEs and the driver hash-matches it — the
-    ``graph_bfs_depth`` / ``join_entity_resolution`` precedent extended
-    to a NUMERIC iterative algorithm.
-
-    Scale shape: each round is one vertex-keyed equi-join (ranks onto
-    the edge list) + one vertex-keyed hash aggregate — the textbook
-    distributed-PageRank plan. The edge relation is persisted once (the
-    graph-family policy); ranks are O(vertices) rows of three BIGINTs.
-    Four unrolled rounds keep the RANK lineage shallow enough that it
-    needs no checkpoint (the 40-round float fixpoint in dedup.py is
-    where localCheckpoint becomes mandatory — NOTES trap 16); the
-    O(|V|) DEGREE relation, referenced once per unrolled round, IS
-    lazily ``localCheckpoint``ed below because AQE stage reuse does not
-    deduplicate the per-round subtree copies Catalyst inlines over a
-    cached input (r9 diagnosis).
+    """The top ``PR_TOP`` vertices of the near-dup graph by exact
+    integer PageRank: the one kernel, ``iterative.pagerank_ppm``, which
+    ``dedup_neardup_pagerank`` runs over the n-gram pairs. DuckDB
+    replays its rounds as chained CTEs and grades it exactly.
     """
-    e = _edges(spark, sf_dir)
-    bidir = e.select(
-        F.col("id_lo").alias("src"), F.col("id_hi").alias("dst")
-    ).unionAll(e.select(F.col("id_hi").alias("src"), F.col("id_lo").alias("dst")))
-    deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).select(
-        F.col("src").alias("v"), "deg"
-    )
-    # deg anchors every round's left join (keeping the unrolled lineage
-    # LINEAR — anchoring on rel would reference it twice per round and
-    # double the subtree per unroll), but Catalyst inlines the degree
-    # aggregate once per reference and AQE stage reuse does not match
-    # the copies over a cached input (census: 18 jobs / 585 tasks for
-    # 4 rounds, ~5 of them re-running deg). A lazy localCheckpoint
-    # materializes the O(|V|) degree relation once inside the final
-    # action; every round then reads the stored partitions.
-    deg = deg.localCheckpoint(eager=False)
-    rel = deg.select("v", "deg", F.lit(1_000_000).cast("long").alias("r"))
-    for _ in range(PR_ITERS):
-        contrib = bidir.join(rel, bidir.src == rel.v).select(
-            F.col("dst").alias("v"),
-            F.expr(f"(r * {_PR_DAMP}) div (100 * deg)").alias("c"),
-        )
-        inflow = contrib.groupBy("v").agg(F.sum("c").alias("cin"))
-        rel = deg.join(inflow, "v", "left").select(
-            "v",
-            "deg",
-            (F.lit(_PR_BASE) + F.coalesce("cin", F.lit(0))).cast("long").alias("r"),
-        )
     return (
-        rel.select("v", F.col("r").alias("pagerank_ppm"))
+        pagerank_ppm(_edges(spark, sf_dir))
         .orderBy(F.desc("pagerank_ppm"), "v")
         .limit(PR_TOP)
     )
 
 
-def _pagerank_sql() -> str:
-    rounds = []
-    for i in range(PR_ITERS):
-        rounds.append(
-            f"""r{i + 1} AS (
-  SELECT d.v, d.deg,
-         CAST({_PR_BASE} + coalesce(sum((p.r * {_PR_DAMP}) // (100 * p.deg)), 0)
-              AS BIGINT) AS r
-  FROM deg d
-  LEFT JOIN bidir b ON b.dst = d.v
-  LEFT JOIN r{i} p ON p.v = b.src
-  GROUP BY d.v, d.deg
-)"""
-        )
-    return f"""
-WITH edges AS (SELECT id_lo, id_hi FROM ({EMBEDDING_NEARDUP_SQL})),
-bidir AS (SELECT id_lo AS src, id_hi AS dst FROM edges
-          UNION ALL SELECT id_hi, id_lo FROM edges),
-deg AS (SELECT src AS v, count(*) AS deg FROM bidir GROUP BY src),
-r0 AS (SELECT v, deg, CAST(1000000 AS BIGINT) AS r FROM deg),
-{", ".join(rounds)}
-SELECT v, r AS pagerank_ppm
-FROM r{PR_ITERS}
-ORDER BY pagerank_ppm DESC, v
-LIMIT {PR_TOP}
-"""
-
-
-PAGERANK_EXACT_SQL = _pagerank_sql()
+PAGERANK_EXACT_SQL = pagerank_sql(
+    f"SELECT id_lo, id_hi FROM ({EMBEDDING_NEARDUP_SQL})", PR_TOP
+)
 
 
 # The (k, label) relation is a session artifact: every near-dup CC

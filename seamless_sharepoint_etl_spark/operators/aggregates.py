@@ -234,17 +234,32 @@ _PCTL_POINTS = [
 ]
 
 
-def _refine_rank_ranges(spark, rows, group_cols, value_col, tgroup, trank, ranges):
-    """Shared refinement loop for rank-extraction queries (exact
-    percentiles, winsorized cuts): narrow each target's candidate value
-    range 256-ways per pass — one cheap filtered-count collect — until
-    it holds ≤ `_PCTL_TASK_BOUND` rows, so the downstream per-target
-    rank window is provably bounded at any data scale. `ranges` maps
-    tid -> [lo_v, hi_v, rows_below, rows_inside] and is narrowed in
-    place; `tgroup`/`trank` give each target's group key and 1-based
-    rank. At fixture scale level-0 buckets are already under the bound
-    and the loop body never runs.
+def _refine_rank_ranges(
+    spark, rows, group_cols, value_col, weight, frontier, width, targets
+):
+    """Shared candidate-range search for rank-extraction queries (exact
+    percentiles, winsorized cuts, the weighted median). Returns tid ->
+    [lo_v, hi_v, weight_below, rows_inside]: a value range holding the
+    target's 1-based rank, with the weight of the group's rows below it.
+
+    Ranks count in units of the `weight` column (``lit(1)``: plain row
+    ranks). `frontier` is the sorted list of level-0 buckets, (group
+    tuple, bucket, weight, rows) with bucket = value div width(group);
+    `targets` maps tid -> (group tuple, rank). Each target starts in
+    the bucket holding its rank, then its range is narrowed 256-ways
+    per pass — one cheap filtered-aggregate collect — until it holds ≤
+    `_PCTL_TASK_BOUND` rows (the bound always counts rows), so the
+    downstream per-target window is provably bounded at any data scale.
+    At fixture scale level-0 buckets are already under the bound and
+    the loop body never runs.
     """
+    ranges, below = {}, {}
+    for g, bk, c, n in frontier:
+        run = below.get(g, 0)
+        below[g] = run + c
+        for tid, (tg, rk) in targets.items():
+            if tg == g and run < rk <= run + c:
+                ranges[tid] = [bk * width(g), (bk + 1) * width(g), run, n]
     gschema = ", ".join(f"{c} string" for c in group_cols)
     while True:
         todo = {
@@ -253,13 +268,13 @@ def _refine_rank_ranges(spark, rows, group_cols, value_col, tgroup, trank, range
             if r[3] > _PCTL_TASK_BOUND and r[1] - r[0] > 1
         }
         if not todo:
-            return
+            return ranges
         rdf = spark.createDataFrame(
             [
-                (tid, *tgroup[tid], r[0], r[1], max(1, (r[1] - r[0]) // 256))
+                (tid, *targets[tid][0], r[0], r[1], max(1, (r[1] - r[0]) // 256))
                 for tid, r in todo.items()
             ],
-            f"tid long, {gschema}, lo_v long, hi_v long, w long",
+            f"tid long, {gschema}, lo_v long, hi_v long, sw long",
         )
         sub = (
             rows.join(F.broadcast(rdf), list(group_cols))
@@ -267,25 +282,24 @@ def _refine_rank_ranges(spark, rows, group_cols, value_col, tgroup, trank, range
                 (F.col(value_col) >= F.col("lo_v"))
                 & (F.col(value_col) < F.col("hi_v"))
             )
-            .groupBy("tid", F.expr(f"({value_col} - lo_v) div w").alias("sb"))
-            .agg(F.count(F.lit(1)).alias("c"))
+            .groupBy("tid", F.expr(f"({value_col} - lo_v) div sw").alias("sb"))
+            .agg(F.sum(weight).alias("c"), F.count(F.lit(1)).alias("n"))
             .collect()
         )
         per_tid: dict = {}
         for r in sub:
-            per_tid.setdefault(r["tid"], []).append((r["sb"], r["c"]))
+            per_tid.setdefault(r["tid"], []).append((r["sb"], r["c"], r["n"]))
         for tid, subs in per_tid.items():
-            lo_v, hi_v, off, _ = ranges[tid]
-            w = max(1, (hi_v - lo_v) // 256)
-            rk = trank[tid]
-            run = off
-            for sb, c in sorted(subs):
+            lo_v, hi_v, run, _ = ranges[tid]
+            sw = max(1, (hi_v - lo_v) // 256)
+            rk = targets[tid][1]
+            for sb, c, n in sorted(subs):
                 if run < rk <= run + c:
                     ranges[tid] = [
-                        lo_v + sb * w,
-                        min(hi_v, lo_v + (sb + 1) * w),
+                        lo_v + sb * sw,
+                        min(hi_v, lo_v + (sb + 1) * sw),
                         run,
-                        c,
+                        n,
                     ]
                     break
                 run += c
@@ -360,16 +374,15 @@ def exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bkt",
         F.expr(f"v div (CASE WHEN metric = 'price' THEN {1 << 16} ELSE 100 END)"),
     )
-    bt = sorted(
-        (r["flag"], r["metric"], r["bkt"], r["bc"])
+    frontier = sorted(
+        ((r["flag"], r["metric"]), r["bkt"], r["bc"], r["bc"])
         for r in b.groupBy("flag", "metric", "bkt")
         .agg(F.count(F.lit(1)).alias("bc"))
         .collect()
     )
-    offs, acc = {}, {}
-    for f, me, bk, bc in bt:
-        offs[(f, me, bk)] = (acc.get((f, me), 0), bc)
-        acc[(f, me)] = acc.get((f, me), 0) + bc
+    acc = {}
+    for g, _bk, bc, _n in frontier:
+        acc[g] = acc.get(g, 0) + bc
     # target ranks (1-based) per percentile point, from exact counts;
     # each target = (tid, flag, metric, pname, m, rank, which)
     trows = []
@@ -382,26 +395,18 @@ def exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             trows.append([len(trows), f, me, pname, m, lo + 1, "lo"])
             if m > 0:
                 trows.append([len(trows), f, me, pname, m, lo + 2, "hi"])
-    # initial candidate range per target: the level-0 bucket containing
-    # its rank — [lo_v, hi_v) value range, `off` rows strictly below it
+    # candidate range per target, bounded by the shared refinement
+    # (≤3 passes at any scale)
     width0 = {"price": 1 << 16, "qty": 100}
-    ranges = {}  # tid -> [lo_v, hi_v, off, cnt]
-    for tid, f, me, _pn, _m, rk, _w in trows:
-        for (bf, bme, bk), (off, cnt) in offs.items():
-            if bf == f and bme == me and off < rk <= off + cnt:
-                w = width0[me]
-                ranges[tid] = [bk * w, (bk + 1) * w, off, cnt]
-                break
-    # refinement: re-bucket each oversized range 256-ways until the
-    # candidate set is bounded (shared helper; ≤3 passes at any scale)
-    _refine_rank_ranges(
+    ranges = _refine_rank_ranges(
         spark,
         base,
         ("flag", "metric"),
         "v",
-        {t[0]: (t[1], t[2]) for t in trows},
-        {t[0]: t[5] for t in trows},
-        ranges,
+        F.lit(1),
+        frontier,
+        lambda g: width0[g[1]],
+        {t[0]: ((t[1], t[2]), t[5]) for t in trows},
     )
     targets = spark.createDataFrame(
         [
@@ -1729,64 +1734,30 @@ def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("v"),
         F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("w"),
     ).withColumn("bkt", F.expr(f"v div {1 << 16}"))
-    bt = sorted(
-        (r["flag"], r["bkt"], r["bw"], r["bn"])
+    frontier = sorted(
+        ((r["flag"],), r["bkt"], r["bw"], r["bn"])
         for r in base.groupBy("flag", "bkt")
         .agg(F.sum("w").alias("bw"), F.count(F.lit(1)).alias("bn"))
         .collect()
     )
     tw = {}
-    for f, _bk, bw, _bn in bt:
+    for (f,), _bk, bw, _bn in frontier:
         tw[f] = tw.get(f, 0) + bw
-    # crossing bucket per flag: running weight reaches half inside it.
-    # ranges: flag -> [lo_v, hi_v, weight_below, rows_in_range]
-    ranges, acc = {}, {}
-    for f, bk, bw, bn in bt:
-        before = acc.get(f, 0)
-        acc[f] = before + bw
-        if before * 2 < tw[f] <= acc[f] * 2:
-            ranges[f] = [bk * (1 << 16), (bk + 1) * (1 << 16), before, bn]
-    while True:
-        todo = {
-            f: r
-            for f, r in ranges.items()
-            if r[3] > _PCTL_TASK_BOUND and r[1] - r[0] > 1
-        }
-        if not todo:
-            break
-        rdf = spark.createDataFrame(
-            [
-                (f, r[0], r[1], max(1, (r[1] - r[0]) // 256))
-                for f, r in todo.items()
-            ],
-            "flag string, lo_v long, hi_v long, sw long",
-        )
-        sub = (
-            base.join(F.broadcast(rdf), "flag")
-            .filter((F.col("v") >= F.col("lo_v")) & (F.col("v") < F.col("hi_v")))
-            .groupBy("flag", F.expr("(v - lo_v) div sw").alias("sb"))
-            .agg(F.sum("w").alias("c"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        per_flag: dict = {}
-        for r in sub:
-            per_flag.setdefault(r["flag"], []).append((r["sb"], r["c"], r["n"]))
-        for f, subs in per_flag.items():
-            lo_v, hi_v, below, _ = ranges[f]
-            sw = max(1, (hi_v - lo_v) // 256)
-            run = below
-            for sb, c, n in sorted(subs):
-                if run * 2 < tw[f] <= (run + c) * 2:
-                    ranges[f] = [
-                        lo_v + sb * sw,
-                        min(hi_v, lo_v + (sb + 1) * sw),
-                        run,
-                        n,
-                    ]
-                    break
-                run += c
+    # the lower weighted median sits at weight rank ⌈tw/2⌉; target i is
+    # flags[i]
+    flags = sorted(tw)
+    ranges = _refine_rank_ranges(
+        spark,
+        base,
+        ("flag",),
+        "v",
+        F.col("w"),
+        frontier,
+        lambda _g: 1 << 16,
+        {i: ((f,), (tw[f] + 1) // 2) for i, f in enumerate(flags)},
+    )
     starts = spark.createDataFrame(
-        [(f, r[0], r[1], r[2], tw[f]) for f, r in ranges.items()],
+        [(flags[i], r[0], r[1], r[2], tw[flags[i]]) for i, r in ranges.items()],
         "flag string, lo_v long, hi_v long, off long, tw long",
     )
     win = Window.partitionBy("flag").orderBy("v")
@@ -1886,10 +1857,9 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # longer holds and the candidate filter below would silently
         # drop the row. Fail loudly instead.
         raise ValueError("winsorized_stats: balance below the SHIFT domain")
-    bt = sorted((r["seg"], r["bkt"], r["bc"]) for r in frontier)
-    n_seg, offs = {}, {}
-    for s, bk, bc in bt:
-        offs[(s, bk)] = (n_seg.get(s, 0), bc)
+    frontier = sorted(((r["seg"],), r["bkt"], r["bc"], r["bc"]) for r in frontier)
+    n_seg = {}
+    for (s,), _bk, bc, _n in frontier:
         n_seg[s] = n_seg.get(s, 0) + bc
     # rank targets: low cut at rank k+1, high cut at rank n-k
     trows = []
@@ -1897,20 +1867,15 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         k = n * WINSOR_PCT // 100
         trows.append([len(trows), s, k, k + 1, "low"])
         trows.append([len(trows), s, k, n - k, "high"])
-    ranges = {}
-    for tid, s, _k, rk, _w in trows:
-        for (bs, bk), (off, cnt) in offs.items():
-            if bs == s and off < rk <= off + cnt:
-                ranges[tid] = [bk * W0, (bk + 1) * W0, off, cnt]
-                break
-    _refine_rank_ranges(
+    ranges = _refine_rank_ranges(
         spark,
         base,
         ("seg",),
         "vs",
-        {t[0]: (t[1],) for t in trows},
-        {t[0]: t[3] for t in trows},
-        ranges,
+        F.lit(1),
+        frontier,
+        lambda _g: W0,
+        {t[0]: ((t[1],), t[3]) for t in trows},
     )
     targets = spark.createDataFrame(
         [(tid, s, rk, wh, *ranges[tid][:3]) for tid, s, _k, rk, wh in trows],

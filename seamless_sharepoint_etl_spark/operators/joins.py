@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .. import io, portable
 from . import bloom
+from .iterative import iterate
 
 
 def broadcast_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1034,12 +1035,6 @@ ORDER BY event_type
 """
 
 
-# Raising backstop of `min_label_cc`. Pointer doubling needs
-# O(log diameter) rounds (at most 10 on a 64-vertex path, which the
-# tests pin), so one cap serves every caller.
-CC_MAX_ROUNDS = 50
-
-
 def min_label_cc(edges: DataFrame, what: str) -> tuple[DataFrame, int]:
     """Exact min-label connected components over an undirected edge
     relation (first column, second column) — the engine's one CC
@@ -1050,34 +1045,28 @@ def min_label_cc(edges: DataFrame, what: str) -> tuple[DataFrame, int]:
     many rounds the loop took to converge.
 
     Scale: per round one vertex-keyed hash join + min-aggregate
-    (relax) plus one label-keyed self-join (pointer doubling),
-    ``localCheckpoint``ed (NOTES trap 16) so the plan never deepens;
-    doubling makes the round count O(log diameter) instead of one
-    round per hop. ``CC_MAX_ROUNDS`` is a backstop that RAISES
-    (``what`` names the caller) rather than returning a silently split
-    partition. The DuckDB oracles of every caller replay the same
-    partition as a WITH RECURSIVE reachability walk.
+    (relax) plus one label-keyed self-join (pointer doubling), run by
+    the ``iterative.iterate`` loop, which checkpoints every round
+    and raises (``what`` names the caller) rather than return a
+    silently split partition; doubling makes the round count
+    O(log diameter) instead of one round per hop. The DuckDB oracles
+    of every caller replay the same partition as a WITH RECURSIVE
+    reachability walk.
     """
     lo, hi = edges.columns
+    # lazy: iterate's first label-sum job reads every partition
     sym = (
         edges.select(F.col(lo).alias("ka"), F.col(hi).alias("kb"))
         .unionAll(edges.select(F.col(hi).alias("ka"), F.col(lo).alias("kb")))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     labels = (
         sym.select(F.col("ka").alias("k"))
         .distinct()
         .select("k", F.col("k").alias("label"))
-        .localCheckpoint(eager=False)
     )
-    # Convergence by the monotone label-sum invariant: min-propagation
-    # only ever DECREASES a vertex's label, so Σ label is strictly
-    # decreasing until the fixpoint and equal exactly at it — one 1-row
-    # aggregate per round instead of a join-and-compare count job. The
-    # agg also materializes the round's LAZY checkpoint in the same job
-    # (sum(label) touches every partition).
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for rnd in range(CC_MAX_ROUNDS):
+
+    def relax_and_double(labels: DataFrame) -> DataFrame:
         msgs = sym.join(labels, sym.ka == labels.k).select(
             F.col("kb").alias("k"), "label"
         )
@@ -1094,28 +1083,18 @@ def min_label_cc(edges: DataFrame, what: str) -> tuple[DataFrame, int]:
         # component, so label(label(k)) is too — folding it in each
         # round makes convergence O(log diameter) driver barriers
         # instead of one per hop (supplier name chains gave the entity
-        # resolution graph a ~25-hop diameter). The fixpoint is
-        # unchanged: both steps only decrease labels within the
-        # component, and a stable label sum means NEITHER step moved,
-        # i.e. the same one-hop fixpoint the oracles' WITH RECURSIVE
-        # walk computes.
+        # resolution graph a ~25-hop diameter).
         l2 = relaxed.select(F.col("k").alias("lk"), F.col("label").alias("l2"))
-        new_labels = (
-            relaxed.join(l2, relaxed.label == l2.lk, "left")
-            .select(
-                "k",
-                F.least("label", F.coalesce("l2", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+        return relaxed.join(l2, relaxed.label == l2.lk, "left").select(
+            "k", F.least("label", F.coalesce("l2", "label")).alias("label")
         )
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        raise RuntimeError(f"{what} did not converge in {CC_MAX_ROUNDS} rounds")
-    return labels, rnd + 1
+
+    # Convergence by the monotone label-sum invariant: both steps only
+    # ever DECREASE a vertex's label within its component, so Σ label
+    # is strictly decreasing until the fixpoint and equal exactly at
+    # it — the same one-hop fixpoint the oracles' WITH RECURSIVE walk
+    # computes — at the cost of one scalar per round.
+    return iterate(labels, relax_and_double, F.sum("label"), what)
 
 
 def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,6 +3,7 @@ driver, but *not* unchecked — each has a ground-truth gate here)."""
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_DIR
 
 
@@ -658,17 +659,24 @@ def test_centroid_purity_partitions_and_bounds(spark):
 
 
 def test_pagerank_mass_determinism_and_chain_shape(spark, tmp_path):
-    """PageRank gates: (a) rank mass is conserved (sum ≈ N × 10000 bp);
-    (b) reruns are identical; (c) on the chain 0-1-2-3-4 the interior
-    nodes out-rank the endpoints (more corroborating neighbors)."""
+    """PageRank gates on the integer kernel: (a) rank mass is conserved
+    up to integer division (within N·PR_ITERS ppm of N·10⁶); (b) reruns
+    are identical; (c) on the chain 0-1-2-3-4 the interior nodes
+    out-rank the endpoints (more corroborating neighbors) and the ranks
+    are symmetric."""
     from seamless_sharepoint_etl_spark.llm_ops import dedup
+    from seamless_sharepoint_etl_spark.operators import iterative
 
     d = _chain_docs_dir(tmp_path)
-    rows = {r["doc_id"]: r["rank_bp"] for r in dedup.neardup_pagerank(spark, d).collect()}
+
+    def ranks():
+        rows = dedup.neardup_pagerank(spark, d).collect()
+        return {r["v"]: r["pagerank_ppm"] for r in rows}
+
+    rows = ranks()
     assert set(rows) == {0, 1, 2, 3, 4}
-    assert abs(sum(rows.values()) - 5 * 10000) <= 5  # ±1bp/node rounding
-    again = {r["doc_id"]: r["rank_bp"] for r in dedup.neardup_pagerank(spark, d).collect()}
-    assert rows == again
+    assert 0 <= 5 * 10**6 - sum(rows.values()) <= 5 * iterative.PR_ITERS
+    assert rows == ranks()
     # chain: endpoints have 1 neighbor, interior 2 → strictly lower rank
     assert rows[0] < rows[1] and rows[4] < rows[3]
     assert rows[0] == rows[4] and rows[1] == rows[3]  # symmetry
@@ -1517,7 +1525,8 @@ def test_kcore_matches_exact_python_peel(spark):
     the old 0.42 graph's 2-core empty at every SF, so this gate passed
     vacuously without ever exercising the surviving-core path. An
     empty core here now FAILS — the differential only counts if the
-    loop's real exit (n == prev_n > 0) and core_degree reporting ran."""
+    loop's real exit (a repeated edge count above 0) and core_degree
+    reporting ran."""
     from seamless_sharepoint_etl_spark.llm_ops import graph
 
     edges = [
@@ -1858,35 +1867,48 @@ def test_winnow_crossdoc_pairs_and_posting_cap(spark, tmp_path):
     assert scoring.winnow_crossdoc(spark, d2).count() == 0
 
 
-def test_pagerank_exact_matches_python_rounds(spark):
-    """graph_pagerank_exact: the fixed-iteration integer recurrence is
-    bit-reproducible, so an independent sequential Python replay of the
-    same four rounds must agree EXACTLY on every returned rank — the
-    kcore/bfs re-computation precedent for a numeric iterative op."""
+@pytest.mark.parametrize("graph_name", ["embedding", "ngram"])
+def test_pagerank_exact_matches_python_rounds(spark, graph_name):
+    """The one PageRank kernel, over both edge relations it serves
+    (graph_pagerank_exact's embedding near-dup edges, top PR_TOP, and
+    dedup_neardup_pagerank's n-gram pairs, every vertex): the
+    fixed-iteration integer recurrence is bit-reproducible, so an
+    independent sequential Python replay of the same rounds must agree
+    EXACTLY on every returned rank — the kcore/bfs re-computation
+    precedent for a numeric iterative op."""
     from collections import defaultdict
 
-    from seamless_sharepoint_etl_spark.llm_ops import graph
+    from seamless_sharepoint_etl_spark.llm_ops import dedup, graph
+    from seamless_sharepoint_etl_spark.operators import iterative
 
-    edges = [
-        (r["id_lo"], r["id_hi"]) for r in graph._edges(spark, SF_DIR).collect()
-    ]
+    if graph_name == "embedding":
+        edges = graph._edges(spark, SF_DIR)
+        query, top = graph.pagerank_exact, graph.PR_TOP
+    else:
+        edges = dedup.ngram_jaccard_pairs(spark, SF_DIR).select("doc_lo", "doc_hi")
+        query, top = dedup.neardup_pagerank, None
     adj = defaultdict(list)
-    for a, b in edges:
+    for a, b in edges.collect():
         adj[a].append(b)
         adj[b].append(a)
+    assert adj, "fixture must carry edges"
     deg = {v: len(ns) for v, ns in adj.items()}
     r = {v: 1_000_000 for v in adj}
-    for _ in range(graph.PR_ITERS):
+    for _ in range(iterative.PR_ITERS):
         nxt = {}
         for v in adj:
-            inflow = sum((r[u] * graph._PR_DAMP) // (100 * deg[u]) for u in adj[v])
-            nxt[v] = graph._PR_BASE + inflow
+            inflow = sum(
+                (r[u] * iterative._PR_DAMP) // (100 * deg[u]) for u in adj[v]
+            )
+            nxt[v] = iterative._PR_BASE + inflow
         r = nxt
-    expect = sorted(r.items(), key=lambda kv: (-kv[1], kv[0]))[: graph.PR_TOP]
-    got = [
-        (row["v"], row["pagerank_ppm"])
-        for row in graph.pagerank_exact(spark, SF_DIR).collect()
-    ]
+    def by_rank(kv):
+        return -kv[1], kv[0]
+
+    expect = sorted(r.items(), key=by_rank)[:top]
+    got = [(row["v"], row["pagerank_ppm"]) for row in query(spark, SF_DIR).collect()]
+    if top is None:  # every vertex, in no particular order
+        got.sort(key=by_rank)
     assert got == expect
 
 
@@ -2002,6 +2024,91 @@ def test_min_label_cc_pointer_doubling_converges_in_log_rounds(spark):
         f"doubling took {rounds} rounds on a 64-path — "
         "O(log d) convergence regressed"
     )
+
+
+def test_one_fixpoint_loop_lives_in_iterate():
+    """Every fixpoint operator runs through ``iterative.iterate``: no
+    other for/while body in the package calls ``localCheckpoint``, so
+    the checkpoint-per-round, full-scan-measure and raising-cap policy
+    exists once."""
+    import ast
+    import inspect
+    import os
+
+    import seamless_sharepoint_etl_spark as pkg
+    from seamless_sharepoint_etl_spark.operators import iterative
+
+    root = os.path.dirname(pkg.__file__)
+    loops = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in (f for f in files if f.endswith(".py")):
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, (ast.For, ast.While)) and any(
+                    isinstance(c, ast.Attribute) and c.attr == "localCheckpoint"
+                    for stmt in node.body
+                    for c in ast.walk(stmt)
+                ):
+                    loops.append((path, node.lineno))
+    src, start = inspect.getsourcelines(iterative.iterate)
+    assert len(loops) == 1, loops
+    path, line = loops[0]
+    assert path == iterative.__file__ and start <= line < start + len(src), loops
+
+
+def test_iterate_raises_at_the_round_cap(spark, monkeypatch):
+    """A fixpoint that never converges raises, naming its caller, once
+    the round cap is reached — never a silently unconverged state."""
+    from pyspark.sql import functions as F
+
+    from seamless_sharepoint_etl_spark.operators import iterative
+
+    monkeypatch.setattr(iterative, "MAX_ROUNDS", 2)
+    msg = "runaway counter did not converge in 2 rounds"
+    with pytest.raises(RuntimeError, match=msg):
+        iterative.iterate(
+            spark.range(3),
+            lambda df: df.select((F.col("id") + 1).alias("id")),
+            F.sum("id"),
+            "runaway counter",
+        )
+
+
+# Warm build + collect jobs of the iterative queries on SF_DIR before
+# they shared the fixpoint loop and the PageRank kernel (the float
+# dedup_neardup_pagerank fixpoint took 34; the integer kernel needs 18).
+_ITERATIVE_JOB_BUDGETS = {
+    "join_entity_resolution": 11,
+    "graph_kcore": 51,
+    "graph_bfs_depth": 24,
+    "graph_pagerank_exact": 16,
+    "dedup_neardup_pagerank": 18,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ITERATIVE_JOB_BUDGETS))
+def test_iterative_queries_stay_within_job_budget(spark, name):
+    """Each round of an iterative query is a Spark-driver barrier, so
+    its job count is its fixed cost. A warm build + collect (session
+    artifacts filled by a first call) stays within the pinned budget."""
+    from seamless_sharepoint_etl_spark import registry
+
+    sc = spark.sparkContext
+    fn, _sql = registry._collect()[name]
+    fn(spark, SF_DIR).collect()
+    group = f"iter-budget-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = fn(spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert rows, name
+    assert n_jobs <= _ITERATIVE_JOB_BUDGETS[name], (name, n_jobs)
 
 
 def test_neardup_cc_queries_read_the_shared_labels(spark):
