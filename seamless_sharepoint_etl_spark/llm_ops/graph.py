@@ -233,10 +233,14 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MOD-perturbed fixtures exercise exactly that branch). The k-core is
 # the unique maximal subgraph of min-degree >= k, so peel order
 # (Spark's simultaneous rounds vs this formulation) cannot diverge.
+# `edges` and `adj` are MATERIALIZED: DuckDB otherwise inlines them and
+# re-evaluates the embedding-similarity join on every recursive step.
 KCORE_SQL = f"""
 WITH RECURSIVE
-edges AS (SELECT id_lo, id_hi FROM ({embedding_neardup_sql(KCORE_EDGE_COS)})),
-adj AS (
+edges AS MATERIALIZED (
+  SELECT id_lo, id_hi FROM ({embedding_neardup_sql(KCORE_EDGE_COS)})
+),
+adj AS MATERIALIZED (
   SELECT id_lo AS v, id_hi AS u FROM edges
   UNION ALL
   SELECT id_hi AS v, id_lo AS u FROM edges

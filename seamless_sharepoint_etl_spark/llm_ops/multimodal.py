@@ -10,22 +10,20 @@ needs: BinaryType columns flowing through select/filter/write, digest
 and byte-level metadata computed JVM-side, and Arrow-batched
 ``mapInPandas`` for the decode/feature-extract hop.
 
-FFMPEG-CLASS decode (H.264/MP3) is a STUB by design: those codecs are
-not in this container. ``decode_payload(real=True)`` raises
-NotImplementedError at the exact seam where one plugs in; the default
-is a deterministic fake that derives "width/height/format" from the
-bytes so the Spark-side schema, batching, and partitioning are fully
-real and testable. Every format implementable from its public spec is
-REAL end-to-end: ``ppm_decode_features`` (P6 header parse + pixel
-reshape), ``png_decode_features`` (zlib inflate + all-five-filter
-scanline reconstruction + chunk CRC verification),
-``jpeg_decode_features`` (baseline ITU T.81 — canonical Huffman
-entropy decode, dequantization, IDCT), ``gif_decode_features``
-(GIF87a — real variable-width LZW, the dictionary-coder family),
-``wav_decode_features`` (RIFF/PCM16), ``mulaw_decode_features``
-(ITU-T G.711 mu-law companding — a real compressed-audio codec) and
-``video_decode_features`` (raw frame planes) — each with statistics
-value-proven against the DuckDB oracle.
+Ten REAL codecs share one table, ``CODECS``: PPM, PNG (zlib + all
+five scanline filters + chunk CRCs), WAV PCM16, G.711 mu-law and
+A-law, IMA ADPCM, raw video frames, baseline JPEG (Huffman entropy
+decode + IDCT), GIF87a (LZW) and BMP RLE8. Each entry is
+``(body_len, encode, decode, stats, schema)``: the document text
+cycled to ``body_len`` bytes is the raw body, ``encode`` turns one
+Arrow batch of bodies into valid files, ``decode`` parses and
+validates them back into a sample array, and ``stats`` reduces that
+array to exact integer features which the DuckDB oracle re-derives
+from the same text. ``decode_features`` runs encode and decode fused
+in one ``mapInPandas``; ``payload`` exposes the encoded files. Every
+check on payload bytes raises ``DecodeError``. The table is also the
+seam for a codec this container lacks (H.264, MP3): a new entry needs
+no new Spark plumbing.
 
 Scale posture: binary columns ride Parquet untouched (no re-encode);
 mapInPandas streams Arrow record batches, so per-row Python overhead is
@@ -36,18 +34,18 @@ large (set it low for multi-MB blobs to bound executor memory).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterator
+from functools import partial
+from typing import Any, NamedTuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
-
-DECODED_SCHEMA = (
-    "doc_id LONG, n_bytes LONG, fake_width INT, fake_height INT, "
-    "fake_format STRING, byte_checksum LONG"
-)
 
 
 def with_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,64 +90,11 @@ FROM documents
 """
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int, str, int]:
-    """Deterministic stand-in for a real decoder (STUB — see module doc)."""
-    checksum = sum(payload[::16])  # 'frame sample' every 16th byte
-    width = payload[0] % 64 + 1 if payload else 0
-    height = payload[-1] % 64 + 1 if payload else 0
-    fmt = "fakeimg" if len(payload) % 2 == 0 else "fakeaud"
-    return width, height, fmt, checksum
-
-
-def decode_payload(df: DataFrame, real: bool = False) -> DataFrame:
-    """Arrow-batched decode/feature-extract over payload bytes.
-
-    ``real=True`` is the seam for an actual decoder and deliberately
-    raises: the image/audio libraries are not available here.
-    """
-    if real:
-        raise NotImplementedError(
-            "ffmpeg-class codecs (H.264/MP3) are not available in this "
-            "environment; plug them in here — the Spark plumbing (schema, "
-            "Arrow batching, partitioning) is identical for the real path. "
-            "PNG (png_decode_features), baseline JPEG "
-            "(jpeg_decode_features), PPM, WAV-PCM16, G.711 mu-law "
-            "(mulaw_decode_features) and raw video frames are REAL "
-            "decode paths already"
-        )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # NULL text → NULL payload → Arrow delivers None: coalesce
-            # to b"" like every sibling kernel in this module
-            payloads = [p if p is not None else b"" for p in pdf["payload"]]
-            decoded = [_fake_decode(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": [len(p) for p in payloads],
-                    "fake_width": [d[0] for d in decoded],
-                    "fake_height": [d[1] for d in decoded],
-                    "fake_format": [d[2] for d in decoded],
-                    "byte_checksum": [d[3] for d in decoded],
-                }
-            )
-
-    return df.mapInPandas(decode, DECODED_SCHEMA)
-
-
-def decode_stub_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full multimodal hop: payload → mapInPandas decode → features.
-
-    rows-only for the driver (the decode is Python-side); pytest
-    asserts the checksum column equals the JVM-computed equivalent.
-    """
-    return decode_payload(with_payload(spark, sf_dir))
-
-
 def frame_sample_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-side twin of the stub's 'frame sampling': sum of every 16th
-    byte — proves byte-level ops need no Python (and oracles the stub)."""
+    """JVM-side 'frame sampling': sum of every 16th payload byte —
+    byte-level ops need no Python. It also answers for
+    ``mm_decode_stub_features``; a real decoder plugs in as a row of
+    ``CODECS``."""
     p = with_payload(spark, sf_dir)
     # guarded: sequence(1, 0, 16) errors on an empty/NULL payload — an
     # empty asset must check out as 0, not kill the job
@@ -402,1408 +347,6 @@ def phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# REAL decode path: P6 PPM images, decoded in pure numpy
-# ---------------------------------------------------------------------------
-
-PPM_W, PPM_H = 24, 16  # 24×16 RGB → 1152 pixel bytes
-_PPM_BODY_LEN = PPM_W * PPM_H * 3
-
-
-def _cycled_body(n: int):
-    """Spark Column: the document's printable-sanitized text cycled to
-    exactly ``n`` bytes — '[^ -~]'→'?' keeps every char single-byte
-    ASCII (chars == bytes), NULL/empty coalesce to ' ', and ``rpad``
-    cycles its pad string. ONE definition feeds all five payload
-    builders so the byte construction cannot silently diverge between
-    formats (the round-6 review's 10×-copy-paste finding)."""
-    san = "coalesce(nullif(regexp_replace(text, '[^ -~]', '?'), ''), ' ')"
-    return F.expr(f"rpad({san}, {n}, {san})")
-
-
-def _cycled_body_sql(n: int) -> str:
-    """DuckDB twin of _cycled_body — identical semantics; DuckDB's
-    regexp_replace needs the explicit 'g' flag to replace all."""
-    san = "coalesce(nullif(regexp_replace(text, '[^ -~]', '?', 'g'), ''), ' ')"
-    return f"rpad({san}, {n}, {san})"
-
-
-def with_ppm_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → VALID binary P6 PPM images: ``P6\\n24 16\\n255\\n``
-    header + the document's bytes cycled to exactly H·W·3 pixel bytes
-    (rpad cycles its pad string; all construction is JVM-side).
-
-    Unlike the ``decode_payload`` stub (which marks where PIL/ffmpeg
-    would plug in for COMPRESSED formats), PPM needs no codec — so the
-    engine carries one genuinely end-to-end image path: real header
-    parse, real pixel buffer, real decode, with the same mapInPandas
-    surface a JPEG decoder would use.
-    """
-    d = io.load_table_parallel(spark, sf_dir, "documents")
-    body = _cycled_body(_PPM_BODY_LEN)
-    return d.select(
-        "doc_id",
-        F.encode(
-            F.concat(F.lit(f"P6\n{PPM_W} {PPM_H}\n255\n"), body), "utf-8"
-        ).alias("payload"),
-    )
-
-
-def ppm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode the PPM payloads and extract image features — the real
-    thing, no stub: numpy parses the header, reshapes the pixel buffer
-    to (H, W, 3), and computes per-channel means (integer milli-units,
-    so the DuckDB oracle can re-derive them from the same byte
-    construction and hash-match the VALUES) plus a 4×4 mean-pooled
-    thumbnail digest (pytest-gated; SQL owes no pooling).
-
-    Scale: identical to any image featurizer — payload bytes ride
-    Arrow batches into the worker once, features are a few ints per
-    image, and nothing but those ints shuffles.
-    """
-    p = with_ppm_payload(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                # header: magic, dims, maxval — three '\n'-terminated fields
-                nl1 = buf.index(b"\n")
-                nl2 = buf.index(b"\n", nl1 + 1)
-                nl3 = buf.index(b"\n", nl2 + 1)
-                assert buf[:nl1] == b"P6"
-                w, h = (int(x) for x in buf[nl1 + 1 : nl2].split())
-                maxval = int(buf[nl2 + 1 : nl3])
-                assert maxval == 255
-                img = (
-                    np.frombuffer(buf, np.uint8, count=w * h * 3, offset=nl3 + 1)
-                    .reshape(h, w, 3)
-                    .astype(np.int64)
-                )
-                sums = img.sum(axis=(0, 1))  # per-channel
-                means_milli = (sums * 1000) // (w * h)
-                pooled = (
-                    img.reshape(h // 4, 4, w // 4, 4, 3).sum(axis=(1, 3)) // 16
-                )
-                crc = int(
-                    (pooled.ravel() * np.arange(1, pooled.size + 1)).sum()
-                    % (1 << 31)
-                )
-                out.append(
-                    [doc_id, w, h]
-                    + [int(m) for m in means_milli]
-                    + [crc]
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "r_mean_milli",
-                    "g_mean_milli",
-                    "b_mean_milli",
-                    "thumb_crc",
-                ],
-            )
-
-    decoded = p.mapInPandas(
-        run,
-        "doc_id LONG, width INT, height INT, r_mean_milli LONG,"
-        " g_mean_milli LONG, b_mean_milli LONG, thumb_crc LONG",
-    )
-    # thumb_crc is numpy-side pooling the oracle doesn't re-derive —
-    # keep the driver-facing result fully value-checkable
-    return decoded.drop("thumb_crc").orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# REAL compressed-codec decode path: PNG (zlib + filter reconstruction,
-# both stdlib/numpy — no PIL needed)
-# ---------------------------------------------------------------------------
-
-PNG_W, PNG_H = 24, 16
-_PNG_BODY_LEN = PNG_W * PNG_H * 3
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_chunk(tag: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(data))
-        + tag
-        + data
-        + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-    )
-
-
-def _filter_scanlines_batch(raws: "np.ndarray") -> "np.ndarray":  # noqa: F821
-    """Apply the cycling PNG scanline filters to a BATCH of images at
-    once: (n, H, W*3) int64 → (n, H*(1+W*3)) uint8 filtered streams.
-
-    Encoding filters reference RAW neighbors, so every filter type is
-    fully vectorizable over both pixels and images — the per-scanline
-    loop below runs H numpy steps regardless of batch size (the
-    per-byte Python loop version cost 6.3 s at sf0.1; this shape is
-    what keeps the Python hop Arrow-amortized)."""
-    import numpy as np
-
-    n, h, stride = raws.shape
-    bpp = 3
-    out = np.empty((n, h, 1 + stride), np.uint8)
-    prior = np.zeros((n, stride), np.int64)
-    for y in range(h):
-        ft = y % 5
-        cur = raws[:, y, :]
-        left = np.zeros_like(cur)
-        left[:, bpp:] = cur[:, :-bpp]
-        if ft == 0:
-            filt = cur
-        elif ft == 1:  # Sub
-            filt = (cur - left) % 256
-        elif ft == 2:  # Up
-            filt = (cur - prior) % 256
-        elif ft == 3:  # Average
-            filt = (cur - (left + prior) // 2) % 256
-        else:  # Paeth
-            pl = np.zeros_like(prior)
-            pl[:, bpp:] = prior[:, :-bpp]
-            p = left + prior - pl
-            pa, pb, pc = np.abs(p - left), np.abs(p - prior), np.abs(p - pl)
-            pred = np.where(
-                (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prior, pl)
-            )
-            filt = (cur - pred) % 256
-        out[:, y, 0] = ft
-        out[:, y, 1:] = filt.astype(np.uint8)
-        prior = cur
-    return out.reshape(n, h * (1 + stride))
-
-
-def _defilter_batch(plains: "np.ndarray", h: int, stride: int) -> "np.ndarray":  # noqa: F821
-    """Reconstruct a BATCH of same-shape inflated scanline streams:
-    (n, H*(1+stride)) uint8 → (n, H, stride) int64 pixel rows.
-
-    Reconstruction of Sub/Average/Paeth rows is sequential in x (the
-    left neighbor is the RECONSTRUCTED byte), so those rows run a
-    stride-length loop of numpy steps vectorized across the batch;
-    None/Up rows are single vectorized ops. Requires every stream in
-    the batch to carry the same per-row filter types (true for the
-    cycling encoder; asserted)."""
-    import numpy as np
-
-    n = plains.shape[0]
-    bpp = 3
-    rows = plains.reshape(n, h, 1 + stride)
-    img = np.zeros((n, h, stride), np.int64)
-    prior = np.zeros((n, stride), np.int64)
-    zero = np.zeros(n, np.int64)
-    for y in range(h):
-        ft = int(rows[0, y, 0])
-        assert (rows[:, y, 0] == ft).all(), "mixed filter types in batch"
-        filt = rows[:, y, 1:].astype(np.int64)
-        if ft == 0:
-            cur = filt
-        elif ft == 2:
-            cur = (filt + prior) % 256
-        elif ft in (1, 3, 4):
-            cur = np.zeros((n, stride), np.int64)
-            for x in range(stride):
-                a = cur[:, x - bpp] if x >= bpp else zero
-                b = prior[:, x]
-                c = prior[:, x - bpp] if x >= bpp else zero
-                if ft == 1:
-                    rec = filt[:, x] + a
-                elif ft == 3:
-                    rec = filt[:, x] + (a + b) // 2
-                else:
-                    p = a + b - c
-                    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-                    pred = np.where(
-                        (pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c)
-                    )
-                    rec = filt[:, x] + pred
-                cur[:, x] = rec % 256
-        else:
-            raise AssertionError(f"bad filter type {ft}")
-        img[:, y, :] = cur
-        prior = cur
-    return img
-
-
-def _encode_png(raw: "np.ndarray") -> bytes:  # noqa: F821 (lazy numpy)
-    """Encode an (H, W, 3) uint8 array as a real truecolor PNG.
-
-    Scanline filters CYCLE through all five spec types (None, Sub, Up,
-    Average, Paeth) so the decoder's filter reconstruction is exercised
-    on every image, not just the trivial type-0 path."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w, _ = raw.shape
-    stream = _filter_scanlines_batch(
-        raw.reshape(1, h, w * 3).astype(np.int64)
-    )[0]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit truecolor
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(stream.tobytes(), 6))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def _decode_png(buf: bytes) -> "np.ndarray":  # noqa: F821
-    """Decode a truecolor-8 PNG: chunk walk with CRC verification,
-    zlib inflate, per-scanline filter reconstruction (all 5 types)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    assert buf[:8] == _PNG_SIG, "bad PNG signature"
-    pos, w = 8, None
-    idat = bytearray()
-    while pos < len(buf):
-        (length,) = struct.unpack(">I", buf[pos : pos + 4])
-        tag = buf[pos + 4 : pos + 8]
-        data = buf[pos + 8 : pos + 8 + length]
-        (crc,) = struct.unpack(">I", buf[pos + 8 + length : pos + 12 + length])
-        assert crc == (zlib.crc32(tag + data) & 0xFFFFFFFF), "chunk CRC mismatch"
-        if tag == b"IHDR":
-            w, h, depth, ctype, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-            assert (depth, ctype, interlace) == (8, 2, 0), "unsupported PNG"
-        elif tag == b"IDAT":
-            idat.extend(data)
-        elif tag == b"IEND":
-            break
-        pos += 12 + length
-    assert w is not None, "missing IHDR"
-    stride = w * 3
-    plain = zlib.decompress(bytes(idat))
-    assert len(plain) == h * (1 + stride), "IDAT length mismatch"
-    img = _defilter_batch(
-        np.frombuffer(plain, np.uint8).reshape(1, -1), h, stride
-    )[0]
-    return img.reshape(h, w, 3).astype(np.uint8)
-
-
-def _png_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, raw) pixel-body relation shared by the PNG encoder's
-    two consumers (payload builder and the fused decode query)."""
-    d = io.load_table_parallel(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id", F.encode(_cycled_body(_PNG_BODY_LEN), "utf-8").alias("raw")
-    )
-
-
-def _png_enc_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Arrow-batched PNG encoder: (doc_id, raw) → (doc_id, payload).
-    Module-level (guide §4.5) so the decode query can compose it with
-    the feature kernel in ONE Python eval node instead of paying a
-    second JVM↔Python boundary for the payload bytes."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    ihdr = struct.pack(">IIBBBBB", PNG_W, PNG_H, 8, 2, 0, 0, 0)
-    head = _PNG_SIG + _png_chunk(b"IHDR", ihdr)
-    iend = _png_chunk(b"IEND", b"")
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        # filter the whole Arrow batch in one vectorized pass; only
-        # the deflate (C-speed) runs per image
-        raws = np.stack(
-            [np.frombuffer(bytes(r), np.uint8) for r in pdf["raw"]]
-        ).reshape(-1, PNG_H, PNG_W * 3).astype(np.int64)
-        streams = _filter_scanlines_batch(raws)
-        payloads = [
-            head + _png_chunk(b"IDAT", zlib.compress(s.tobytes(), 6)) + iend
-            for s in streams
-        ]
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-
-def png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode REAL PNG payloads — signature check, chunk CRC walk,
-    zlib inflate, filter reconstruction across all five scanline filter
-    types — and emit per-channel means (integer milli-units).
-
-    This closes the round-4 verdict's last honest stub: the compressed
-    image path no longer needs PIL. The DuckDB oracle never sees the
-    codec; it derives the same channel sums from the text-derived pixel
-    body, so a hash match PROVES the deflate→inflate→defilter pipeline
-    reconstructed every pixel exactly. Remaining NotImplementedError
-    seam: ffmpeg-class codecs (H.264/MP3) only — baseline JPEG became
-    a real path in round 6 (``jpeg_decode_features``).
-
-    Scale: payload bytes never LEAVE the Python worker (r9: the
-    encoder and the decode kernel compose inside ONE mapInPandas —
-    the old two-node chain shipped every payload JVM→Python→JVM→Python
-    for no reason); per-image output is 6 ints; decode is
-    embarrassingly parallel across partitions (documents is
-    repartitioned on load — NOTES trap 3)."""
-    raw = _png_raw(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        import numpy as np
-
-        def inflate(buf: bytes) -> bytes:
-            # chunk walk with CRC verification (the codec-integrity
-            # part of the decode); defiltering happens batch-wide below
-            assert buf[:8] == _PNG_SIG, "bad PNG signature"
-            pos, dims, idat = 8, None, bytearray()
-            while pos < len(buf):
-                (length,) = struct.unpack(">I", buf[pos : pos + 4])
-                tag = buf[pos + 4 : pos + 8]
-                data = buf[pos + 8 : pos + 8 + length]
-                (crc,) = struct.unpack(
-                    ">I", buf[pos + 8 + length : pos + 12 + length]
-                )
-                assert crc == (zlib.crc32(tag + data) & 0xFFFFFFFF), (
-                    "chunk CRC mismatch"
-                )
-                if tag == b"IHDR":
-                    w, h, depth, ctype, _c, _f, inter = struct.unpack(
-                        ">IIBBBBB", data
-                    )
-                    assert (depth, ctype, inter) == (8, 2, 0)
-                    dims = (w, h)
-                elif tag == b"IDAT":
-                    idat.extend(data)
-                elif tag == b"IEND":
-                    break
-                pos += 12 + length
-            assert dims == (PNG_W, PNG_H), f"unexpected dims {dims}"
-            return zlib.decompress(bytes(idat))
-
-        stride = PNG_W * 3
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            plains = np.stack(
-                [
-                    np.frombuffer(inflate(bytes(p)), np.uint8)
-                    for p in pdf["payload"]
-                ]
-            )
-            imgs = _defilter_batch(plains, PNG_H, stride)
-            sums = imgs.reshape(len(plains), -1, 3).sum(axis=1)
-            means = (sums * 1000) // (PNG_W * PNG_H)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": PNG_W,
-                    "height": PNG_H,
-                    "r_mean_milli": means[:, 0],
-                    "g_mean_milli": means[:, 1],
-                    "b_mean_milli": means[:, 2],
-                }
-            )
-
-    def enc_then_run(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        return run(_png_enc_batches(batches))
-
-    return raw.mapInPandas(
-        enc_then_run,
-        "doc_id LONG, width INT, height INT, r_mean_milli LONG,"
-        " g_mean_milli LONG, b_mean_milli LONG",
-    ).orderBy("doc_id")
-
-
-PNG_DECODE_SQL = f"""
-WITH body AS (
-  SELECT doc_id,
-         {_cycled_body_sql(_PNG_BODY_LEN)} AS s
-  FROM documents
-), px AS (
-  SELECT doc_id,
-         unnest(range(0, {PNG_W * PNG_H})) AS i,
-         s
-  FROM body
-), ch AS (
-  SELECT doc_id,
-         CAST(sum(ascii(substr(s, i * 3 + 1, 1))) AS BIGINT) AS sr,
-         CAST(sum(ascii(substr(s, i * 3 + 2, 1))) AS BIGINT) AS sg,
-         CAST(sum(ascii(substr(s, i * 3 + 3, 1))) AS BIGINT) AS sb
-  FROM px GROUP BY doc_id
-)
-SELECT doc_id,
-       {PNG_W} AS width, {PNG_H} AS height,
-       sr * 1000 // {PNG_W * PNG_H} AS r_mean_milli,
-       sg * 1000 // {PNG_W * PNG_H} AS g_mean_milli,
-       sb * 1000 // {PNG_W * PNG_H} AS b_mean_milli
-FROM ch
-ORDER BY doc_id
-"""
-
-
-PPM_DECODE_SQL = f"""
-WITH body AS (
-  SELECT doc_id,
-         {_cycled_body_sql(_PPM_BODY_LEN)} AS s
-  FROM documents
-), px AS (
-  SELECT doc_id,
-         unnest(range(0, {PPM_W * PPM_H})) AS i,
-         s
-  FROM body
-), ch AS (
-  SELECT doc_id,
-         CAST(sum(ascii(substr(s, i * 3 + 1, 1))) AS BIGINT) AS sr,
-         CAST(sum(ascii(substr(s, i * 3 + 2, 1))) AS BIGINT) AS sg,
-         CAST(sum(ascii(substr(s, i * 3 + 3, 1))) AS BIGINT) AS sb
-  FROM px GROUP BY doc_id
-)
-SELECT doc_id,
-       {PPM_W} AS width, {PPM_H} AS height,
-       sr * 1000 // {PPM_W * PPM_H} AS r_mean_milli,
-       sg * 1000 // {PPM_W * PPM_H} AS g_mean_milli,
-       sb * 1000 // {PPM_W * PPM_H} AS b_mean_milli
-FROM ch
-ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# REAL audio decode path: RIFF/WAV PCM16, decoded in pure numpy
-# ---------------------------------------------------------------------------
-
-WAV_N_SAMPLES = 384
-WAV_RATE = 8000
-_WAV_BODY_LEN = WAV_N_SAMPLES * 2  # PCM16 mono
-
-
-def _wav_header() -> bytes:
-    """Canonical 44-byte RIFF/WAVE header for PCM16 mono at WAV_RATE —
-    a CONSTANT given the fixed sample count, so the Spark side can
-    prepend it as a binary literal."""
-    import struct
-
-    data_len = _WAV_BODY_LEN
-    return (
-        b"RIFF"
-        + struct.pack("<I", 36 + data_len)
-        + b"WAVEfmt "
-        + struct.pack("<IHHIIHH", 16, 1, 1, WAV_RATE, WAV_RATE * 2, 2, 16)
-        + b"data"
-        + struct.pack("<I", data_len)
-    )
-
-
-def with_wav_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → VALID RIFF/WAVE files: constant PCM16-mono header +
-    the document's bytes cycled to the fixed data-chunk length (each
-    consecutive byte pair is one little-endian sample)."""
-    d = io.load_table_parallel(spark, sf_dir, "documents")
-    body = _cycled_body(_WAV_BODY_LEN)
-    return d.select(
-        "doc_id",
-        F.concat(F.lit(_wav_header()), F.encode(body, "utf-8")).alias("payload"),
-    )
-
-
-def wav_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode the WAV payloads and extract audio features — a real
-    RIFF parser (chunk magics, PCM format fields validated), int16
-    sample buffer via numpy, and the standard cheap audio QA stats:
-    RMS level, peak, floor, mean — all in exact integer units so the
-    DuckDB oracle re-derives them from the same byte construction
-    (sqrt is IEEE-correctly-rounded in both engines; the floor grid
-    makes the value hash exact)."""
-    p = with_wav_payload(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                assert buf[0:4] == b"RIFF" and buf[8:12] == b"WAVE"
-                assert buf[12:16] == b"fmt "
-                fmt, nch, rate = struct.unpack("<HHI", buf[20:28])
-                bits = struct.unpack("<H", buf[34:36])[0]
-                assert (fmt, nch, rate, bits) == (1, 1, WAV_RATE, 16)
-                assert buf[36:40] == b"data"
-                (data_len,) = struct.unpack("<I", buf[40:44])
-                s = np.frombuffer(
-                    buf, np.int16, count=data_len // 2, offset=44
-                ).astype(np.int64)
-                out.append(
-                    [
-                        doc_id,
-                        int(s.size),
-                        int(np.floor(np.sqrt((s * s).sum() / s.size))),
-                        int(s.max()),
-                        int(s.min()),
-                        int((s.sum() * 1000) // s.size),
-                    ]
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "rms",
-                    "peak",
-                    "floor_s",
-                    "mean_milli",
-                ],
-            )
-
-    return p.mapInPandas(
-        run,
-        "doc_id LONG, n_samples LONG, rms LONG, peak LONG,"
-        " floor_s LONG, mean_milli LONG",
-    ).orderBy("doc_id")
-
-
-WAV_DECODE_SQL = f"""
-WITH body AS (
-  SELECT doc_id,
-         {_cycled_body_sql(_WAV_BODY_LEN)} AS s
-  FROM documents
-), smp AS (
-  SELECT doc_id,
-         ascii(substr(s, i * 2 + 1, 1))
-           + 256 * ascii(substr(s, i * 2 + 2, 1)) AS raw
-  FROM body, unnest(range(0, {WAV_N_SAMPLES})) AS t(i)
-), pcm AS (
-  SELECT doc_id,
-         CAST(CASE WHEN raw >= 32768 THEN raw - 65536 ELSE raw END
-              AS BIGINT) AS v
-  FROM smp
-)
-SELECT doc_id,
-       count(*) AS n_samples,
-       CAST(floor(sqrt(CAST(sum(v * v) AS DOUBLE) / count(*))) AS BIGINT) AS rms,
-       max(v) AS peak,
-       min(v) AS floor_s,
-       -- FLOOR division, not DuckDB's truncating //: the kernel's
-       -- numpy // floors, and sum(v) CAN go negative — a multibyte
-       -- UTF-8 document puts a >=0x80 byte in the high sample byte,
-       -- making v negative (trap 30; the mu-law twin caught this
-       -- class first). sum(v)*1000 < 2^53, so the double path is
-       -- exact.
-       CAST(floor(CAST(sum(v) AS DOUBLE) * 1000 / count(*)) AS BIGINT)
-         AS mean_milli
-FROM pcm
-GROUP BY doc_id
-ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# REAL compressed-audio decode path: ITU-T G.711 mu-law (telephony
-# companding — 8-bit logarithmic codewords -> 14-bit linear PCM).
-# Unlike the PCM16 WAV path this is an actual audio CODEC: each byte
-# is a sign/exponent/mantissa triple on a logarithmic amplitude grid,
-# and the decoder expands it with the public-spec law (ITU-T G.711
-# Table 2a / the classic public-domain Sun g711.c formulation). The
-# decode law is closed-form integer math, so the DuckDB oracle
-# re-derives every sample VALUE — a hash-graded compressed-audio path.
-# ---------------------------------------------------------------------------
-
-MULAW_N_SAMPLES = 1024
-MULAW_RATE = 8000
-_MULAW_BODY_LEN = MULAW_N_SAMPLES  # 1 codeword byte per sample
-_MULAW_BIAS = 0x84  # 132 — the G.711 mu-law bias
-_MULAW_FMT = 7  # WAVE_FORMAT_MULAW
-
-
-def _mulaw_decode_table() -> "np.ndarray":  # noqa: F821
-    """256-entry codeword -> linear-PCM LUT (how production decoders
-    ship G.711): complement, split 0x80 sign / 0x70 exponent / 0x0F
-    mantissa, expand ((m<<3)+BIAS)<<e, re-subtract the bias with the
-    sign applied. Anchors fixed by the spec: 0x00 -> -32124,
-    0x80 -> +32124, 0x7F and 0xFF -> 0."""
-    import numpy as np
-
-    u = (~np.arange(256)) & 0xFF
-    t = (((u & 0x0F) << 3) + _MULAW_BIAS) << ((u & 0x70) >> 4)
-    return np.where(u & 0x80, _MULAW_BIAS - t, t - _MULAW_BIAS).astype(np.int64)
-
-
-_ALAW_FMT = 6  # WAVE_FORMAT_ALAW
-
-
-def _alaw_decode_table() -> "np.ndarray":  # noqa: F821
-    """256-entry A-law codeword -> linear-PCM LUT (ITU-T G.711 Table
-    1a / the public-domain Sun g711.c formulation): XOR the 0x55
-    toggle mask, split sign/segment/mantissa, expand with the A-law
-    segment switch (segment 0 adds 8, segment 1 adds 0x108, higher
-    segments shift). Distinct law from mu-law: no bias subtraction,
-    no all-ones complement, and NO zero output — minimum magnitude is
-    8. Anchors fixed by the spec: 0x2A -> -32256, 0xAA -> +32256,
-    0x55 -> -8, 0xD5 -> +8."""
-    import numpy as np
-
-    u = np.arange(256) ^ 0x55
-    m = (u & 0x0F) << 4
-    seg = (u & 0x70) >> 4
-    t = np.where(
-        seg == 0, m + 8, (m + 0x108) << np.maximum(seg - 1, 0)
-    )
-    return np.where(u & 0x80, t, -t).astype(np.int64)
-
-
-def _g711_header(fmt_tag: int, n_samples: int, rate: int) -> bytes:
-    """RIFF/WAVE header for an 8-bit G.711 mono stream (fmt tag 6 =
-    A-law, 7 = mu-law): block align 1, plus the ``fact`` chunk
-    (sample count) that the WAVE spec requires for non-PCM formats —
-    constant given the fixed sample count, so Spark prepends it as a
-    literal."""
-    import struct
-
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + 24 + 12 + 8 + n_samples)
-        + b"WAVEfmt "
-        + struct.pack("<IHHIIHH", 16, fmt_tag, 1, rate, rate, 1, 8)
-        + b"fact"
-        + struct.pack("<II", 4, n_samples)
-        + b"data"
-        + struct.pack("<I", n_samples)
-    )
-
-
-def _with_g711_payload(
-    spark: SparkSession, sf_dir: str, fmt_tag: int
-) -> DataFrame:
-    """documents → VALID G.711 WAVE files (fmt 6 A-law / 7 mu-law):
-    constant header + the document's bytes cycled to one codeword per
-    sample. Every printable byte IS a legal codeword; under mu-law the
-    cycled range [32,126] complements into sign-set codes spanning
-    exponent segments 0-5, and under A-law the same range XORs into
-    sign-clear codes across segments {0,1,2,3,6,7} — including both
-    laws' boundary segments and both switch arms of the A-law
-    expansion (the full 256-code space is covered by the LUT
-    round-trip pytest, not the corpus)."""
-    d = io.load_table_parallel(spark, sf_dir, "documents")
-    body = _cycled_body(MULAW_N_SAMPLES)
-    return d.select(
-        "doc_id",
-        F.concat(
-            F.lit(_g711_header(fmt_tag, MULAW_N_SAMPLES, MULAW_RATE)),
-            F.encode(body, "utf-8"),
-        ).alias("payload"),
-    )
-
-
-def with_mulaw_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _with_g711_payload(spark, sf_dir, _MULAW_FMT)
-
-
-def with_alaw_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _with_g711_payload(spark, sf_dir, _ALAW_FMT)
-
-
-class G711DecodeError(ValueError):
-    """Malformed/truncated G.711 WAV payload — same explicit-raise
-    policy as JpegDecodeError/GifDecodeError (bare ``assert`` is
-    stripped under PYTHONOPTIMIZE/-O, surfacing corrupt payloads as
-    struct.error or silently wrong features; ADVICE r7)."""
-
-
-def _g711_codes(buf: bytes, fmt_tag: int):
-    """Validate the RIFF/fmt/fact/data framing of a G.711 WAV payload
-    and return the codeword array (uint8). Raises G711DecodeError on
-    any structural defect; directly unit-testable outside Spark."""
-    import struct
-
-    import numpy as np
-
-    def _need(ok: bool, what: str) -> None:
-        if not ok:
-            raise G711DecodeError(f"bad G.711 WAV payload: {what}")
-
-    _need(len(buf) >= 56, "header shorter than 56 bytes")
-    _need(
-        buf[0:4] == b"RIFF" and buf[8:12] == b"WAVE",
-        "missing RIFF/WAVE magic",
-    )
-    _need(buf[12:16] == b"fmt ", "missing fmt chunk")
-    fmt, nch, rate = struct.unpack("<HHI", buf[20:28])
-    bits = struct.unpack("<H", buf[34:36])[0]
-    _need(
-        (fmt, nch, rate, bits) == (fmt_tag, 1, MULAW_RATE, 8),
-        f"fmt mismatch {(fmt, nch, rate, bits)}",
-    )
-    _need(buf[36:40] == b"fact", "missing fact chunk")
-    (n_fact,) = struct.unpack("<I", buf[44:48])
-    _need(buf[48:52] == b"data", "missing data chunk")
-    (data_len,) = struct.unpack("<I", buf[52:56])
-    _need(n_fact == data_len, "fact/data length disagree")
-    _need(len(buf) >= 56 + data_len, "data chunk truncated")
-    return np.frombuffer(buf, np.uint8, count=data_len, offset=56)
-
-
-def _g711_stats(p: DataFrame, fmt_tag: int) -> DataFrame:
-    """Shared G.711 decode + feature kernel: RIFF walk validates the
-    fmt/8-bit/fact structure, the 256-entry LUT for ``fmt_tag``
-    expands codewords to linear PCM, and the same exact-integer stat
-    block as the PCM16 path (RMS on the floor grid, peak, floor,
-    milli-mean) makes every VALUE hash-comparable with the DuckDB
-    oracle, which re-derives the decode law per byte in closed form.
-
-    Scale: identical to any audio featurizer — payload bytes ride
-    Arrow once, the LUT lookup is one vectorized gather per buffer,
-    and only a handful of ints per clip shuffles."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        lut = (
-            _mulaw_decode_table()
-            if fmt_tag == _MULAW_FMT
-            else _alaw_decode_table()
-        )
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                s = lut[_g711_codes(bytes(payload), fmt_tag)]
-                out.append(
-                    [
-                        doc_id,
-                        int(s.size),
-                        int(np.floor(np.sqrt((s * s).sum() / s.size))),
-                        int(s.max()),
-                        int(s.min()),
-                        int((s.sum() * 1000) // s.size),
-                    ]
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "rms",
-                    "peak",
-                    "floor_s",
-                    "mean_milli",
-                ],
-            )
-
-    return p.mapInPandas(
-        run,
-        "doc_id LONG, n_samples LONG, rms LONG, peak LONG,"
-        " floor_s LONG, mean_milli LONG",
-    ).orderBy("doc_id")
-
-
-def mulaw_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G.711 mu-law decode + audio features (see _g711_stats)."""
-    return _g711_stats(with_mulaw_payload(spark, sf_dir), _MULAW_FMT)
-
-
-def alaw_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G.711 A-law decode + audio features (see _g711_stats). With the
-    mu-law twin this completes G.711 — the two companding laws
-    deployed worldwide (A-law in Europe/international trunks, mu-law
-    in North America/Japan); a telephony-audio ingest pipeline needs
-    both, and their laws differ in every branch (toggle mask vs
-    complement, segment switch vs uniform bias, ±8 floor vs exact
-    zero)."""
-    return _g711_stats(with_alaw_payload(spark, sf_dir), _ALAW_FMT)
-
-
-# the decode law, re-derived per byte in SQL: u = 255-b (8-bit
-# complement), exponent = (u//16)%8, t = ((u%16)*8 + 132) << e,
-# sample = 132-t when the (complemented) sign bit is set else t-132
-MULAW_DECODE_SQL = f"""
-WITH body AS (
-  SELECT doc_id,
-         {_cycled_body_sql(_MULAW_BODY_LEN)} AS s
-  FROM documents
-), u AS (
-  SELECT doc_id, 255 - ascii(substr(s, i + 1, 1)) AS u
-  FROM body, unnest(range(0, {MULAW_N_SAMPLES})) AS t(i)
-), pcm AS (
-  SELECT doc_id,
-         CAST(CASE WHEN u >= 128
-              THEN {_MULAW_BIAS} - (((u % 16) * 8 + {_MULAW_BIAS})
-                                    * (1 << ((u // 16) % 8)))
-              ELSE (((u % 16) * 8 + {_MULAW_BIAS})
-                    * (1 << ((u // 16) % 8))) - {_MULAW_BIAS}
-              END AS BIGINT) AS v
-  FROM u
-)
-SELECT doc_id,
-       count(*) AS n_samples,
-       CAST(floor(sqrt(CAST(sum(v * v) AS DOUBLE) / count(*))) AS BIGINT) AS rms,
-       max(v) AS peak,
-       min(v) AS floor_s,
-       -- FLOOR division, not DuckDB's //: mu-law samples from printable
-       -- bytes are all NEGATIVE (sign bit set after complement), and
-       -- DuckDB // truncates toward zero while numpy // floors — the
-       -- PCM16 twin never sees this because its samples are positive.
-       -- Exact: |sum*1000| < 2^53 and the sample count is 2^10.
-       CAST(floor(CAST(sum(v) AS DOUBLE) * 1000 / count(*)) AS BIGINT)
-         AS mean_milli
-FROM pcm
-GROUP BY doc_id
-ORDER BY doc_id
-"""
-
-
-# the A-law decode law per byte: u = b XOR 0x55, mantissa m = u%16,
-# segment = (u//16)%8; t = m*16+8 (seg 0), m*16+264 (seg 1), else
-# (m*16+264) << (seg-1); sign bit of u picks +t / -t. Samples span
-# BOTH signs here, so mean_milli uses the explicit floor (trap 30:
-# DuckDB // truncates toward zero, numpy // floors).
-ALAW_DECODE_SQL = f"""
-WITH body AS (
-  SELECT doc_id,
-         {_cycled_body_sql(MULAW_N_SAMPLES)} AS s
-  FROM documents
-), u AS (
-  SELECT doc_id, xor(ascii(substr(s, i + 1, 1)), 85) AS u
-  FROM body, unnest(range(0, {MULAW_N_SAMPLES})) AS t(i)
-), mag AS (
-  SELECT doc_id, u,
-         CASE (u // 16) % 8
-           WHEN 0 THEN (u % 16) * 16 + 8
-           WHEN 1 THEN (u % 16) * 16 + 264
-           ELSE ((u % 16) * 16 + 264) * (1 << ((u // 16) % 8 - 1))
-         END AS t
-  FROM u
-), pcm AS (
-  SELECT doc_id,
-         CAST(CASE WHEN u >= 128 THEN t ELSE -t END AS BIGINT) AS v
-  FROM mag
-)
-SELECT doc_id,
-       count(*) AS n_samples,
-       CAST(floor(sqrt(CAST(sum(v * v) AS DOUBLE) / count(*))) AS BIGINT) AS rms,
-       max(v) AS peak,
-       min(v) AS floor_s,
-       CAST(floor(CAST(sum(v) AS DOUBLE) * 1000 / count(*)) AS BIGINT)
-         AS mean_milli
-FROM pcm
-GROUP BY doc_id
-ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# REAL stateful compressed-audio decode path: IMA/DVI ADPCM (WAV fmt
-# 0x11). One genuine notch above G.711: the codec carries STATE — a
-# 16-bit predictor and an index into the 89-entry step-size table,
-# both updated per 4-bit codeword — so the decode of nibble i depends
-# on every nibble before it. The decoder below is the public IMA
-# reference algorithm (IMA Digital Audio Pack recommendation, the
-# classic adpcm.c formulation: delta = step/8 + b2*step + b1*step/2 +
-# b0*step/4, sign bit subtracts, predictor clamped to int16, index
-# adjusted by [-1,-1,-1,-1,2,4,6,8] and clamped to [0,88]).
-#
-# The DuckDB oracle replays the SAME state machine as a WITH RECURSIVE
-# iteration over sample index: state rows (doc_id, i, pred, idx) step
-# through the nibble relation — the sequential dependency that makes
-# ADPCM non-vectorizable is exactly what a recursive CTE expresses,
-# so the query is exactly hash-graded, not rows-only (the bfs_depth /
-# graph_kcore loop-oracle precedent).
-# ---------------------------------------------------------------------------
-
-_ADPCM_FMT = 0x11  # WAVE_FORMAT_IMA_ADPCM (DVI)
-ADPCM_DATA_BYTES = 128  # nibble bytes per clip = one IMA block payload
-ADPCM_N_SAMPLES = 1 + 2 * ADPCM_DATA_BYTES  # block-header sample + nibbles
-ADPCM_RATE = 8000
-_ADPCM_BLOCK_ALIGN = 4 + ADPCM_DATA_BYTES  # 4-byte block header + nibbles
-
-# the public 89-entry IMA step-size table (quarter-dB log grid)
-_ADPCM_STEPS = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
-    34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130,
-    143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449,
-    494, 544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411,
-    1552, 1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026,
-    4428, 4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442,
-    11487, 12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623,
-    27086, 29794, 32767,
-]
-_ADPCM_INDEX_ADJ = [-1, -1, -1, -1, 2, 4, 6, 8]
-
-
-class AdpcmDecodeError(ValueError):
-    """Malformed/truncated IMA ADPCM WAV payload (explicit-raise
-    policy — see JpegDecodeError/G711DecodeError)."""
-
-
-def _adpcm_header() -> bytes:
-    """RIFF/WAVE header for a one-block IMA ADPCM mono stream: fmt
-    chunk size 20 (the 2-byte cbSize extension carries
-    wSamplesPerBlock, required for fmt 0x11), a fact chunk (sample
-    count — mandatory for compressed WAVE), and the data chunk sized
-    to one block."""
-    import struct
-
-    avg_bps = ADPCM_RATE * _ADPCM_BLOCK_ALIGN // ADPCM_N_SAMPLES
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + 28 + 12 + 8 + _ADPCM_BLOCK_ALIGN)
-        + b"WAVEfmt "
-        + struct.pack(
-            "<IHHIIHHHH",
-            20,
-            _ADPCM_FMT,
-            1,
-            ADPCM_RATE,
-            avg_bps,
-            _ADPCM_BLOCK_ALIGN,
-            4,
-            2,
-            ADPCM_N_SAMPLES,
-        )
-        + b"fact"
-        + struct.pack("<II", 4, ADPCM_N_SAMPLES)
-        + b"data"
-        + struct.pack("<I", _ADPCM_BLOCK_ALIGN)
-    )
-
-
-def with_adpcm_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → VALID one-block IMA ADPCM WAVE files: constant
-    header, a 4-byte block header (initial predictor 0, step index 0,
-    reserved 0), then the document's bytes cycled to the nibble
-    stream. Printable bytes span low nibbles 0-15 and high nibbles
-    2-7, so sign-bit codes (8-15) and every index-adjust arm are
-    exercised in the low-nibble position; the full 16-code space is
-    covered by the encoder round-trip pytest."""
-    d = io.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    body = _cycled_body(ADPCM_DATA_BYTES)
-    block_header = b"\x00\x00\x00\x00"  # pred0=0 (int16 LE), idx0=0, reserved
-    return d.select(
-        "doc_id",
-        F.concat(
-            F.lit(_adpcm_header() + block_header),
-            F.encode(body, "utf-8"),
-        ).alias("payload"),
-    )
-
-
-def _adpcm_block(buf: bytes):
-    """Validate framing and return (pred0, idx0, codes) — codes is the
-    per-sample 4-bit stream, low nibble of each byte first (the IMA
-    WAV packing order)."""
-    import struct
-
-    import numpy as np
-
-    def _need(ok: bool, what: str) -> None:
-        if not ok:
-            raise AdpcmDecodeError(f"bad IMA ADPCM payload: {what}")
-
-    _need(len(buf) >= 64, "header shorter than 64 bytes")
-    _need(
-        buf[0:4] == b"RIFF" and buf[8:12] == b"WAVE",
-        "missing RIFF/WAVE magic",
-    )
-    _need(buf[12:16] == b"fmt ", "missing fmt chunk")
-    (fmt_len,) = struct.unpack("<I", buf[16:20])
-    _need(fmt_len == 20, f"fmt chunk length {fmt_len}, want 20")
-    fmt, nch, rate = struct.unpack("<HHI", buf[20:28])
-    block_align, bits, cb, spb = struct.unpack("<HHHH", buf[32:40])
-    _need(
-        (fmt, nch, rate, bits) == (_ADPCM_FMT, 1, ADPCM_RATE, 4),
-        f"fmt mismatch {(fmt, nch, rate, bits)}",
-    )
-    _need(
-        (block_align, cb, spb)
-        == (_ADPCM_BLOCK_ALIGN, 2, ADPCM_N_SAMPLES),
-        "block geometry mismatch",
-    )
-    _need(buf[40:44] == b"fact", "missing fact chunk")
-    (n_fact,) = struct.unpack("<I", buf[48:52])
-    _need(n_fact == ADPCM_N_SAMPLES, "fact sample count mismatch")
-    _need(buf[52:56] == b"data", "missing data chunk")
-    (data_len,) = struct.unpack("<I", buf[56:60])
-    _need(data_len == _ADPCM_BLOCK_ALIGN, "data chunk length mismatch")
-    _need(len(buf) >= 60 + data_len, "data chunk truncated")
-    pred0, idx0 = struct.unpack("<hB", buf[60:63])
-    _need(idx0 <= 88, f"step index {idx0} out of range")
-    nb = np.frombuffer(
-        buf, np.uint8, count=ADPCM_DATA_BYTES, offset=64
-    )
-    codes = np.empty(2 * ADPCM_DATA_BYTES, np.uint8)
-    codes[0::2] = nb & 0x0F
-    codes[1::2] = nb >> 4
-    return pred0, idx0, codes
-
-
-def _adpcm_decode_batch(codes, pred0, idx0):
-    """Vectorized IMA decode across a BATCH of clips: the per-sample
-    state recurrence is inherently sequential, but it is sequential in
-    the SAMPLE axis only — so the kernel runs 2·data_bytes lockstep
-    numpy iterations over [n_clips]-shaped predictor/step-index state
-    arrays instead of n_clips × n_samples Python steps (≈10× on a
-    5000-clip Arrow batch; the bench's one real new-query cost in
-    round 8). ``codes``: uint8 array [n, 2·ADPCM_DATA_BYTES];
-    ``pred0``/``idx0``: int arrays [n]. Returns int64 [n, n+1 samples]
-    including the block-header predictor as sample 0 (the IMA WAV
-    block convention)."""
-    import numpy as np
-
-    codes = np.asarray(codes, np.int64)
-    n, m = codes.shape
-    pred = np.asarray(pred0, np.int64).copy()
-    idx = np.asarray(idx0, np.int64).copy()
-    steps = np.asarray(_ADPCM_STEPS, np.int64)
-    adj = np.asarray(_ADPCM_INDEX_ADJ, np.int64)
-    out = np.empty((n, m + 1), np.int64)
-    out[:, 0] = pred
-    for i in range(m):
-        c = codes[:, i]
-        step = steps[idx]
-        diff = (
-            (step >> 3)
-            + np.where(c & 4, step, 0)
-            + np.where(c & 2, step >> 1, 0)
-            + np.where(c & 1, step >> 2, 0)
-        )
-        pred = np.where(c & 8, pred - diff, pred + diff)
-        np.clip(pred, -32768, 32767, out=pred)
-        idx = np.clip(idx + adj[c & 7], 0, 88)
-        out[:, i + 1] = pred
-    return out
-
-
-def _adpcm_decode(codes, pred0: int, idx0: int):
-    """Single-clip IMA decode — the batch kernel on one row (kept as
-    the test-facing scalar surface; the spec-literal SEQUENTIAL
-    reference lives independently in pytest)."""
-    import numpy as np
-
-    codes = np.asarray(codes, np.uint8)
-    return _adpcm_decode_batch(
-        codes.reshape(1, -1), [int(pred0)], [int(idx0)]
-    )[0]
-
-
-def adpcm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMA ADPCM decode + the shared audio stat block. The per-clip
-    state replay is inherently sequential (each nibble's step size
-    depends on the whole prefix), so the kernel loops per clip inside
-    an Arrow batch — 256 integer steps per document, dwarfed by the
-    Arrow transfer itself. Stats use the same exact-integer grid as
-    the other audio paths; mean_milli uses floor semantics on BOTH
-    sides (samples span signs — trap 30)."""
-    p = with_adpcm_payload(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            preds, idxs, code_rows = [], [], []
-            for payload in pdf["payload"]:
-                p0, i0, codes = _adpcm_block(bytes(payload))
-                preds.append(p0)
-                idxs.append(i0)
-                code_rows.append(codes)
-            s = _adpcm_decode_batch(np.vstack(code_rows), preds, idxs)
-            n = s.shape[1]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "n_samples": np.full(len(pdf), n, np.int64),
-                    "rms": np.floor(
-                        np.sqrt((s * s).sum(axis=1) / n)
-                    ).astype(np.int64),
-                    "peak": s.max(axis=1),
-                    "floor_s": s.min(axis=1),
-                    "mean_milli": (s.sum(axis=1) * 1000) // n,
-                }
-            )
-
-    return p.mapInPandas(
-        run,
-        "doc_id LONG, n_samples LONG, rms LONG, peak LONG,"
-        " floor_s LONG, mean_milli LONG",
-    ).orderBy("doc_id")
-
-
-_ADPCM_STEPS_VALUES = ", ".join(
-    f"({i}, {s})" for i, s in enumerate(_ADPCM_STEPS)
-)
-
-# The oracle replays the decoder state machine with WITH RECURSIVE:
-# state(doc_id, i, pred, idx) steps once per nibble, joining the
-# nibble relation on (doc_id, i) and the step table on idx. All
-# arithmetic is exact integers; >> becomes // on provably nonnegative
-# step values (truncation == floor there), and the final mean_milli
-# uses the explicit floor form because samples span signs (trap 30).
-ADPCM_DECODE_SQL = f"""
-WITH RECURSIVE
-body AS (
-  SELECT doc_id,
-         {_cycled_body_sql(ADPCM_DATA_BYTES)} AS s
-  FROM documents
-),
-nib AS (
-  SELECT doc_id, i,
-         CASE WHEN i % 2 = 0
-              THEN ascii(substr(s, i // 2 + 1, 1)) % 16
-              ELSE ascii(substr(s, i // 2 + 1, 1)) // 16
-         END AS code
-  FROM body, unnest(range(0, {2 * ADPCM_DATA_BYTES})) AS t(i)
-),
-steps(si, step) AS (VALUES {_ADPCM_STEPS_VALUES}),
-state(doc_id, i, pred, idx) AS (
-  SELECT doc_id, 0, 0, 0 FROM body
-  UNION ALL
-  SELECT st.doc_id, st.i + 1,
-         greatest(-32768, least(32767,
-           st.pred
-           + (CASE WHEN n.code >= 8 THEN -1 ELSE 1 END)
-             * (sp.step // 8
-                + CASE WHEN (n.code % 8) >= 4 THEN sp.step ELSE 0 END
-                + CASE WHEN (n.code % 4) >= 2 THEN sp.step // 2 ELSE 0 END
-                + CASE WHEN (n.code % 2) = 1 THEN sp.step // 4 ELSE 0 END))),
-         greatest(0, least(88,
-           st.idx + CASE (n.code % 8)
-                      WHEN 4 THEN 2 WHEN 5 THEN 4
-                      WHEN 6 THEN 6 WHEN 7 THEN 8
-                      ELSE -1 END))
-  FROM state st
-  JOIN nib n ON n.doc_id = st.doc_id AND n.i = st.i
-  JOIN steps sp ON sp.si = st.idx
-  WHERE st.i < {2 * ADPCM_DATA_BYTES}
-)
-SELECT doc_id,
-       count(*) AS n_samples,
-       CAST(floor(sqrt(CAST(sum(CAST(pred AS BIGINT) * pred) AS DOUBLE)
-                       / count(*))) AS BIGINT) AS rms,
-       CAST(max(pred) AS BIGINT) AS peak,
-       CAST(min(pred) AS BIGINT) AS floor_s,
-       CAST(floor(CAST(sum(CAST(pred AS BIGINT)) AS DOUBLE) * 1000
-                  / count(*)) AS BIGINT) AS mean_milli
-FROM state
-GROUP BY doc_id
-ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# REAL video decode path: raw grayscale frame buffer, numpy frame ops
-# ---------------------------------------------------------------------------
-
-VID_W = VID_H = 16
-VID_FRAMES = 8
-VID_SAMPLE_EVERY = 2  # temporal sampling stride
-_VID_BODY_LEN = VID_W * VID_H * VID_FRAMES
-
-
-def with_video_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → raw-video buffers: VID_FRAMES contiguous W×H
-    grayscale frames (the uncompressed y-plane layout every codec
-    decodes INTO) cycled from the document's bytes, preceded by a tiny
-    self-describing header ``RAWV<w><h><n>`` (one byte each)."""
-    d = io.load_table_parallel(spark, sf_dir, "documents")
-    body = _cycled_body(_VID_BODY_LEN)
-    header = bytes([0x52, 0x41, 0x57, 0x56, VID_W, VID_H, VID_FRAMES])  # RAWV
-    return d.select(
-        "doc_id",
-        F.concat(F.lit(header), F.encode(body, "utf-8")).alias("payload"),
-    )
-
-
-def video_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sample + featurize the raw-video buffers: parse the
-    header, reshape to (frames, H, W), keep every VID_SAMPLE_EVERY-th
-    frame (the decode-side temporal sampling a video curation pipeline
-    runs), and emit per-doc stats — sampled-frame luma mean and a
-    motion proxy (mean absolute difference between consecutive SAMPLED
-    frames), both in exact integer milli-units so the DuckDB oracle
-    re-derives them from the byte construction."""
-    p = with_video_payload(spark, sf_dir)
-    fpx = VID_W * VID_H
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                assert buf[:4] == b"RAWV"
-                w, h, n = buf[4], buf[5], buf[6]
-                vid = (
-                    np.frombuffer(buf, np.uint8, count=w * h * n, offset=7)
-                    .reshape(n, h, w)
-                    .astype(np.int64)
-                )
-                sampled = vid[::VID_SAMPLE_EVERY]
-                luma = int(sampled.sum() * 1000 // sampled.size)
-                diffs = np.abs(sampled[1:] - sampled[:-1])
-                motion = int(diffs.sum() * 1000 // diffs.size)
-                out.append(
-                    [doc_id, int(n), int(sampled.shape[0]), luma, motion]
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "n_frames",
-                    "n_sampled",
-                    "luma_milli",
-                    "motion_milli",
-                ],
-            )
-
-    return p.mapInPandas(
-        run,
-        "doc_id LONG, n_frames INT, n_sampled INT,"
-        " luma_milli LONG, motion_milli LONG",
-    ).orderBy("doc_id")
-
-
-_VID_SAMPLED = list(range(0, VID_FRAMES, VID_SAMPLE_EVERY))
-
-VIDEO_DECODE_SQL = f"""
-WITH body AS (
-  SELECT doc_id,
-         {_cycled_body_sql(_VID_BODY_LEN)} AS s
-  FROM documents
-), px AS (
-  -- pixel i of sampled frame f (0-based), valued by its byte
-  SELECT doc_id, f, i,
-         CAST(ascii(substr(s, f * {VID_W * VID_H} + i + 1, 1)) AS BIGINT) AS v
-  FROM body,
-       unnest({_VID_SAMPLED}) AS tf(f),
-       unnest(range(0, {VID_W * VID_H})) AS ti(i)
-), luma AS (
-  SELECT doc_id, CAST(sum(v) AS BIGINT) * 1000 // count(*) AS luma_milli
-  FROM px GROUP BY doc_id
-), motion AS (
-  SELECT a.doc_id,
-         CAST(sum(abs(a.v - b.v)) AS BIGINT) * 1000 // count(*) AS motion_milli
-  FROM px a
-  JOIN px b ON a.doc_id = b.doc_id AND a.i = b.i
-           AND b.f = a.f + {VID_SAMPLE_EVERY}
-  GROUP BY a.doc_id
-)
-SELECT doc_id, {VID_FRAMES} AS n_frames,
-       {len(_VID_SAMPLED)} AS n_sampled, luma_milli, motion_milli
-FROM luma JOIN motion USING (doc_id)
-ORDER BY doc_id
-"""
-
-
-def audio_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spectral features over the decoded WAV samples — a REAL FFT
-    (numpy rfft) per clip: dominant frequency bin, spectral centroid,
-    and a Parseval consistency check (time-domain energy vs
-    frequency-domain energy — a self-evidencing correctness witness
-    carried in the output, ppm-scale).
-
-    This is the second stage of a real audio pipeline (decode →
-    spectrogram → features); the Arrow-batched mapInPandas plumbing is
-    identical to the decode stage, so at 100 TB the FFT cost is
-    per-row Python-side work on ~N/cores clips with zero extra
-    exchanges. Rows-only (no FFT in SQL); the pytest gate recomputes
-    the spectrum with an EXPLICIT DFT matrix — a different algorithm
-    than numpy's FFT — and asserts bin-level agreement.
-    """
-    p = with_wav_payload(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                (data_len,) = struct.unpack("<I", buf[40:44])
-                s = np.frombuffer(
-                    buf, np.int16, count=data_len // 2, offset=44
-                ).astype(np.float64)
-                if s.size == 0:
-                    out.append([doc_id, 0, 0, 0, 0])
-                    continue
-                spec = np.fft.rfft(s)
-                mag2 = (spec.real**2 + spec.imag**2)
-                # Parseval for rfft, valid for ANY N: every bin except
-                # DC — and, when N is even, the Nyquist bin — has a
-                # mirrored conjugate and counts twice
-                w = np.full(mag2.size, 2.0)
-                w[0] = 1.0
-                if s.size % 2 == 0:
-                    w[-1] = 1.0
-                freq_energy = float((w * mag2).sum()) / s.size
-                time_energy = float((s * s).sum())
-                err_ppm = (
-                    0
-                    if time_energy == 0
-                    else int(
-                        np.floor(
-                            abs(freq_energy - time_energy)
-                            / time_energy
-                            * 1e6
-                            + 0.5
-                        )
-                    )
-                )
-                # exclude DC (bin 0): the text-derived samples are all
-                # positive ASCII codes, so DC always dominates raw
-                ac = mag2[1:]
-                dom = 0 if ac.size == 0 else int(np.argmax(ac)) + 1
-                centroid = (
-                    0
-                    if ac.sum() == 0
-                    else int(
-                        np.floor(
-                            (np.arange(1, mag2.size) * ac).sum()
-                            / ac.sum()
-                            * 1000
-                            + 0.5
-                        )
-                    )
-                )
-                out.append(
-                    [doc_id, int(mag2.size), dom, centroid, err_ppm]
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "n_bins",
-                    "dominant_bin",
-                    "centroid_mbin",
-                    "parseval_err_ppm",
-                ],
-            )
-
-    return p.mapInPandas(
-        run,
-        "doc_id LONG, n_bins LONG, dominant_bin LONG,"
-        " centroid_mbin LONG, parseval_err_ppm LONG",
-    )
-
-
 
 ENTROPY_FLAG_PPM = 3_500_000  # > 3.5 of 4 possible nibble bits ⇒ compressed-ish
 
@@ -1891,6 +434,853 @@ SELECT doc_id, n_bytes, entropy_ppm,
        CAST(CASE WHEN entropy_ppm > {ENTROPY_FLAG_PPM} THEN 1 ELSE 0 END
             AS INTEGER) AS high_entropy
 FROM scored
+"""
+
+
+# ---------------------------------------------------------------------------
+# REAL decode paths: one codec table, one loader, one fused query
+# ---------------------------------------------------------------------------
+
+
+class DecodeError(ValueError):
+    """A payload that is malformed, truncated or outside its codec's
+    fixed geometry. Every check on payload bytes raises this explicitly:
+    a bare ``assert`` is stripped under ``python -O``, which would turn a
+    corrupt payload into struct.error/IndexError or silently wrong
+    features."""
+
+
+def _need(ok: bool, codec: str, what: str) -> None:
+    if not ok:
+        raise DecodeError(f"bad {codec} payload: {what}")
+
+
+class Codec(NamedTuple):
+    """One real codec. ``encode(raws) -> payloads`` and
+    ``decode(payloads) -> samples`` each take one Arrow batch as a list
+    of bytes, so batch-wide kernels (PNG's filters, ADPCM's lockstep
+    replay) stay vectorized; ``stats(samples)`` reduces the decoded
+    batch to ``{column: values}`` typed by ``schema``."""
+
+    body_len: int
+    encode: Callable[[list], list]
+    decode: Callable[[list], Any]
+    stats: Callable[[Any], dict]
+    schema: str
+
+
+def _cycled_body(n: int):
+    """Spark Column: the document's printable-sanitized text cycled to
+    exactly ``n`` bytes — '[^ -~]'→'?' keeps every char single-byte
+    ASCII (chars == bytes), NULL/empty coalesce to ' ', and ``rpad``
+    cycles its pad string. ONE definition feeds every codec (through
+    ``_body``) so the byte construction cannot silently diverge between
+    formats."""
+    san = "coalesce(nullif(regexp_replace(text, '[^ -~]', '?'), ''), ' ')"
+    return F.expr(f"rpad({san}, {n}, {san})")
+
+
+def _cycled_body_sql(n: int) -> str:
+    """DuckDB twin of _cycled_body — identical semantics; DuckDB's
+    regexp_replace needs the explicit 'g' flag to replace all."""
+    san = "coalesce(nullif(regexp_replace(text, '[^ -~]', '?', 'g'), ''), ' ')"
+    return f"rpad({san}, {n}, {san})"
+
+
+def _body(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """(doc_id, raw): every document's text cycled to ``n`` bytes — the
+    one reader behind every codec. ``documents`` is one parquet file,
+    so the load repartitions it and the decode runs on every core
+    (NOTES trap 3)."""
+    d = io.load_table_parallel(spark, sf_dir, "documents")
+    return d.select("doc_id", F.encode(_cycled_body(n), "utf-8").alias("raw"))
+
+
+def _prepend(header: bytes) -> Callable[[list], list]:
+    """``encode`` of a header-only format: the header is constant for
+    the fixed geometry, so each file is header + body."""
+    return lambda raws: [header + r for r in raws]
+
+
+def _stack(parts: list, shape: tuple, dtype: str = "u1") -> np.ndarray:
+    """One batch of equal-size byte strings as an int64 array of shape
+    ``(len(parts), *shape)``."""
+    flat = np.frombuffer(b"".join(parts), dtype)
+    return flat.reshape(len(parts), *shape).astype(np.int64)
+
+
+def _oracle(body_len: int, ctes: str, select: str) -> str:
+    """DuckDB oracle of a codec query: the cycled body, the codec's own
+    sample CTEs, and one SELECT over them grouped per document."""
+    return f"""
+WITH body AS (
+  SELECT doc_id,
+         {_cycled_body_sql(body_len)} AS s
+  FROM documents
+), {ctes}
+{select}
+GROUP BY doc_id
+ORDER BY doc_id
+"""
+
+
+# --- shared stat families: RGB means, audio QA block, palette indexes ---
+
+_RGB_SCHEMA = (
+    "doc_id LONG, width INT, height INT, r_mean_milli LONG,"
+    " g_mean_milli LONG, b_mean_milli LONG"
+)
+
+
+def _rgb_stats(px: np.ndarray) -> dict:
+    """Per-channel means in integer milli-units over (n, H, W, 3)
+    pixels (PPM and PNG)."""
+    n, h, w, _ = px.shape
+    means = px.reshape(n, -1, 3).sum(axis=1) * 1000 // (w * h)
+    return {
+        "width": w,
+        "height": h,
+        "r_mean_milli": means[:, 0],
+        "g_mean_milli": means[:, 1],
+        "b_mean_milli": means[:, 2],
+    }
+
+
+def _rgb_oracle(w: int, h: int) -> str:
+    return _oracle(
+        w * h * 3,
+        f"""px AS (
+  SELECT doc_id, i, s
+  FROM body, unnest(range(0, {w * h})) AS t(i)
+)""",
+        f"""SELECT doc_id,
+       {w} AS width, {h} AS height,
+       CAST(sum(ascii(substr(s, i * 3 + 1, 1))) AS BIGINT) * 1000 // {w * h}
+         AS r_mean_milli,
+       CAST(sum(ascii(substr(s, i * 3 + 2, 1))) AS BIGINT) * 1000 // {w * h}
+         AS g_mean_milli,
+       CAST(sum(ascii(substr(s, i * 3 + 3, 1))) AS BIGINT) * 1000 // {w * h}
+         AS b_mean_milli
+FROM px""",
+    )
+
+
+_AUDIO_SCHEMA = (
+    "doc_id LONG, n_samples LONG, rms LONG, peak LONG,"
+    " floor_s LONG, mean_milli LONG"
+)
+
+
+def _audio_stats(s: np.ndarray) -> dict:
+    """The cheap audio QA block over (n, samples) int64 PCM — RMS on
+    the floor grid, peak, floor, milli-mean — in exact integer units
+    (sqrt is IEEE-correctly-rounded in both engines). Shared by WAV,
+    mu-law, A-law and ADPCM."""
+    m = s.shape[1]
+    return {
+        "n_samples": m,
+        "rms": np.floor(np.sqrt((s * s).sum(axis=1) / m)).astype(np.int64),
+        "peak": s.max(axis=1),
+        "floor_s": s.min(axis=1),
+        "mean_milli": s.sum(axis=1) * 1000 // m,
+    }
+
+
+# SQL twin of _audio_stats over pcm(doc_id, v). mean_milli uses FLOOR
+# division, not DuckDB's //: numpy // floors while DuckDB // truncates
+# toward zero, and sum(v) CAN go negative — mu-law samples from
+# printable bytes are all negative, A-law and ADPCM span both signs,
+# and a multibyte UTF-8 document puts a >=0x80 byte in a PCM16 high
+# byte (trap 30). |sum(v)*1000| < 2^53, so the double path is exact.
+_AUDIO_TAIL = """SELECT doc_id,
+       count(*) AS n_samples,
+       CAST(floor(sqrt(CAST(sum(v * v) AS DOUBLE) / count(*))) AS BIGINT) AS rms,
+       max(v) AS peak,
+       min(v) AS floor_s,
+       CAST(floor(CAST(sum(v) AS DOUBLE) * 1000 / count(*)) AS BIGINT)
+         AS mean_milli
+FROM pcm"""
+
+
+def _index_stats(idx: np.ndarray) -> dict:
+    """Palette-index stats over (n, H, W) images (GIF and BMP): mean in
+    milli-units, max, min and distinct count."""
+    n, h, w = idx.shape
+    srt = np.sort(idx.reshape(n, -1), axis=1)
+    return {
+        "width": w,
+        "height": h,
+        "n_pixels": h * w,
+        "idx_mean_milli": srt.sum(axis=1) * 1000 // (h * w),
+        "idx_max": srt[:, -1],
+        "idx_min": srt[:, 0],
+        "n_distinct_idx": (np.diff(srt, axis=1) != 0).sum(axis=1) + 1,
+    }
+
+
+def _index_oracle(w: int, h: int, pos_weighted: bool = False) -> str:
+    weighted = (
+        ",\n       CAST(sum((i + 1) * idx) AS BIGINT) AS pos_weighted"
+        if pos_weighted
+        else ""
+    )
+    return _oracle(
+        w * h,
+        f"""px AS (
+  SELECT doc_id, i, ascii(substr(s, i + 1, 1)) AS idx
+  FROM body, unnest(range(0, {w * h})) AS t(i)
+)""",
+        f"""SELECT doc_id,
+       {w} AS width, {h} AS height,
+       count(*) AS n_pixels,
+       CAST(sum(idx) AS BIGINT) * 1000 // count(*) AS idx_mean_milli,
+       max(idx) AS idx_max,
+       min(idx) AS idx_min,
+       count(DISTINCT idx) AS n_distinct_idx{weighted}
+FROM px""",
+    )
+
+
+# ---------------------------------------------------------------------------
+# PPM: P6 images — no codec, a real header parse + pixel reshape
+# ---------------------------------------------------------------------------
+
+PPM_W, PPM_H = 24, 16  # 24×16 RGB → 1152 pixel bytes
+_PPM_BODY_LEN = PPM_W * PPM_H * 3
+_PPM_HEADER = f"P6\n{PPM_W} {PPM_H}\n255\n".encode()
+
+
+def _ppm_decode(payloads: list) -> np.ndarray:
+    """P6 parse — magic, dims, maxval: three '\\n'-terminated fields —
+    then the pixel buffer as (n, H, W, 3)."""
+    pixels = []
+    for buf in payloads:
+        fields = buf.split(b"\n", 3)
+        _need(len(fields) == 4, "PPM", "header is not three fields")
+        magic, dims, maxval, px = fields
+        _need(magic == b"P6", "PPM", "missing P6 magic")
+        _need(dims.split() == _PPM_HEADER.split()[1:3], "PPM", f"dims {dims!r}")
+        _need(maxval == b"255", "PPM", f"maxval {maxval!r}")
+        _need(len(px) == _PPM_BODY_LEN, "PPM", "pixel data truncated")
+        pixels.append(px)
+    return _stack(pixels, (PPM_H, PPM_W, 3))
+
+
+PPM_DECODE_SQL = _rgb_oracle(PPM_W, PPM_H)
+
+
+# ---------------------------------------------------------------------------
+# REAL compressed-codec decode path: PNG (zlib + filter reconstruction,
+# both stdlib/numpy — no PIL needed)
+# ---------------------------------------------------------------------------
+
+PNG_W, PNG_H = 24, 16
+_PNG_BODY_LEN = PNG_W * PNG_H * 3
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _png_chunk(tag: bytes, data: bytes) -> bytes:
+    return struct.pack(">I", len(data)) + tag + data + struct.pack(
+        ">I", zlib.crc32(tag + data)
+    )
+
+
+def _filter_scanlines_batch(raws: np.ndarray) -> np.ndarray:
+    """Apply the cycling PNG scanline filters to a BATCH of images at
+    once: (n, H, W*3) int64 → (n, H*(1+W*3)) uint8 filtered streams.
+
+    Encoding filters reference RAW neighbors, so every filter type is
+    fully vectorizable over both pixels and images — the per-scanline
+    loop below runs H numpy steps regardless of batch size (the
+    per-byte Python loop version cost 6.3 s at sf0.1; this shape is
+    what keeps the Python hop Arrow-amortized)."""
+    n, h, stride = raws.shape
+    bpp = 3
+    out = np.empty((n, h, 1 + stride), np.uint8)
+    prior = np.zeros((n, stride), np.int64)
+    for y in range(h):
+        ft = y % 5
+        cur = raws[:, y, :]
+        left = np.zeros_like(cur)
+        left[:, bpp:] = cur[:, :-bpp]
+        if ft == 0:
+            filt = cur
+        elif ft == 1:  # Sub
+            filt = (cur - left) % 256
+        elif ft == 2:  # Up
+            filt = (cur - prior) % 256
+        elif ft == 3:  # Average
+            filt = (cur - (left + prior) // 2) % 256
+        else:  # Paeth
+            pl = np.zeros_like(prior)
+            pl[:, bpp:] = prior[:, :-bpp]
+            p = left + prior - pl
+            pa, pb, pc = np.abs(p - left), np.abs(p - prior), np.abs(p - pl)
+            pred = np.where(
+                (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prior, pl)
+            )
+            filt = (cur - pred) % 256
+        out[:, y, 0] = ft
+        out[:, y, 1:] = filt.astype(np.uint8)
+        prior = cur
+    return out.reshape(n, h * (1 + stride))
+
+
+def _defilter_batch(plains: np.ndarray, h: int, stride: int) -> np.ndarray:
+    """Reconstruct a BATCH of same-shape inflated scanline streams:
+    (n, H*(1+stride)) uint8 → (n, H, stride) int64 pixel rows.
+
+    Reconstruction of Sub/Average/Paeth rows is sequential in x (the
+    left neighbor is the RECONSTRUCTED byte), so those rows run a
+    stride-length loop of numpy steps vectorized across the batch;
+    None/Up rows are single vectorized ops. Requires every stream in
+    the batch to carry the same per-row filter types (true for the
+    cycling encoder; checked)."""
+    n = plains.shape[0]
+    bpp = 3
+    rows = plains.reshape(n, h, 1 + stride)
+    img = np.zeros((n, h, stride), np.int64)
+    prior = np.zeros((n, stride), np.int64)
+    zero = np.zeros(n, np.int64)
+    for y in range(h):
+        ft = int(rows[0, y, 0])
+        _need(ft <= 4, "PNG", f"bad filter type {ft}")
+        _need((rows[:, y, 0] == ft).all(), "PNG", "mixed filter types in batch")
+        filt = rows[:, y, 1:].astype(np.int64)
+        if ft == 0:
+            cur = filt
+        elif ft == 2:
+            cur = (filt + prior) % 256
+        else:
+            cur = np.zeros((n, stride), np.int64)
+            for x in range(stride):
+                a = cur[:, x - bpp] if x >= bpp else zero
+                b = prior[:, x]
+                c = prior[:, x - bpp] if x >= bpp else zero
+                if ft == 1:
+                    rec = filt[:, x] + a
+                elif ft == 3:
+                    rec = filt[:, x] + (a + b) // 2
+                else:
+                    p = a + b - c
+                    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
+                    pred = np.where(
+                        (pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c)
+                    )
+                    rec = filt[:, x] + pred
+                cur[:, x] = rec % 256
+        img[:, y, :] = cur
+        prior = cur
+    return img
+
+
+def _png_encode(raws: list, w: int = PNG_W, h: int = PNG_H) -> list:
+    """Truecolor-8 PNGs from one batch of raw (H, W, 3) pixel bodies.
+    Scanline filters CYCLE through all five spec types (None, Sub, Up,
+    Average, Paeth) so the decoder's reconstruction is exercised on
+    every image; the whole batch filters in one vectorized pass and
+    only the deflate (C-speed) runs per image."""
+    head = _PNG_SIG + _png_chunk(
+        b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    )
+    iend = _png_chunk(b"IEND", b"")
+    streams = _filter_scanlines_batch(_stack(raws, (h, w * 3)))
+    return [
+        head + _png_chunk(b"IDAT", zlib.compress(s.tobytes(), 6)) + iend
+        for s in streams
+    ]
+
+
+def _png_inflate(buf: bytes) -> tuple:
+    """Chunk walk with CRC verification, then zlib inflate of the IDAT
+    stream. Returns ``((w, h), scanline bytes)``."""
+    _need(buf[:8] == _PNG_SIG, "PNG", "bad signature")
+    pos, dims, idat = 8, None, bytearray()
+    while True:
+        _need(pos + 8 <= len(buf), "PNG", "truncated before IEND")
+        (length,) = struct.unpack(">I", buf[pos : pos + 4])
+        tag = buf[pos + 4 : pos + 8]
+        end = pos + 12 + length
+        _need(end <= len(buf), "PNG", f"{tag!r} chunk truncated")
+        data = buf[pos + 8 : end - 4]
+        _need(
+            buf[end - 4 : end] == struct.pack(">I", zlib.crc32(tag + data)),
+            "PNG",
+            f"chunk CRC mismatch in {tag!r}",
+        )
+        pos = end
+        if tag == b"IHDR":
+            _need(len(data) == 13, "PNG", "IHDR length")
+            w, h, depth, ctype, _c, _f, interlace = struct.unpack(
+                ">IIBBBBB", data
+            )
+            _need(
+                (depth, ctype, interlace) == (8, 2, 0),
+                "PNG",
+                "only 8-bit truecolor, non-interlaced",
+            )
+            dims = (w, h)
+        elif tag == b"IDAT":
+            idat += data
+        elif tag == b"IEND":
+            break
+    _need(dims is not None, "PNG", "missing IHDR")
+    try:
+        return dims, zlib.decompress(bytes(idat))
+    except zlib.error as e:
+        raise DecodeError(f"bad PNG payload: {e}") from None
+
+
+def _png_decode(payloads: list, w: int = PNG_W, h: int = PNG_H) -> np.ndarray:
+    """Inflate every image, then reconstruct all five filter types
+    batch-wide: (n, H, W, 3) pixels."""
+    plains = []
+    for buf in payloads:
+        dims, plain = _png_inflate(buf)
+        _need(dims == (w, h), "PNG", f"unexpected dims {dims}")
+        _need(len(plain) == h * (1 + w * 3), "PNG", "IDAT length mismatch")
+        plains.append(plain)
+    rows = _stack(plains, (h * (1 + w * 3),))
+    return _defilter_batch(rows, h, w * 3).reshape(-1, h, w, 3)
+
+
+PNG_DECODE_SQL = _rgb_oracle(PNG_W, PNG_H)
+
+
+# ---------------------------------------------------------------------------
+# REAL audio decode paths: RIFF/WAVE with PCM16 (WAV), ITU-T G.711
+# mu-law and A-law, and IMA ADPCM. One header builder and one chunk
+# walk serve all four; each format pins its own fmt (and, for the
+# compressed ones, fact) chunk field for field.
+# ---------------------------------------------------------------------------
+
+
+def _wave_header(fmt: bytes, data_len: int, fact: bytes | None = None) -> bytes:
+    """RIFF/WAVE header: the fmt chunk, the ``fact`` chunk (sample
+    count) the WAVE spec requires for non-PCM formats, and the data
+    chunk header — constant for a fixed geometry, so ``encode``
+    prepends it."""
+    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    if fact is not None:
+        chunks += b"fact" + struct.pack("<I", len(fact)) + fact
+    size = 4 + len(chunks) + 8 + data_len
+    return (
+        b"RIFF" + struct.pack("<I", size) + b"WAVE" + chunks
+        + b"data" + struct.pack("<I", data_len)
+    )
+
+
+def _wave_data(
+    buf: bytes, codec: str, fmt: bytes, data_len: int, fact: bytes | None = None
+) -> bytes:
+    """Walk one WAVE payload's RIFF chunks, require its fmt (and fact)
+    chunk to equal the codec's, and return the data chunk, which must
+    hold exactly ``data_len`` bytes."""
+    _need(
+        buf[:4] == b"RIFF" and buf[8:12] == b"WAVE", codec, "missing RIFF/WAVE magic"
+    )
+    chunks, pos = {}, 12
+    while pos < len(buf):
+        _need(pos + 8 <= len(buf), codec, "truncated chunk header")
+        (n,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
+        chunks[buf[pos : pos + 4]] = buf[pos + 8 : pos + 8 + n]
+        pos += 8 + n + n % 2  # chunks are word-aligned
+    _need(chunks.get(b"fmt ") == fmt, codec, "fmt chunk mismatch")
+    _need(fact is None or chunks.get(b"fact") == fact, codec, "fact chunk mismatch")
+    data = chunks.get(b"data", b"")
+    _need(len(data) == data_len, codec, f"data chunk holds {len(data)} bytes")
+    return data
+
+
+WAV_N_SAMPLES = 384
+WAV_RATE = 8000
+_WAV_BODY_LEN = WAV_N_SAMPLES * 2  # PCM16 mono
+_WAV_FMT = struct.pack("<HHIIHH", 1, 1, WAV_RATE, WAV_RATE * 2, 2, 16)
+
+
+def _wav_decode(payloads: list) -> np.ndarray:
+    """PCM16 mono: each consecutive byte pair of the data chunk is one
+    little-endian sample. Returns (n, WAV_N_SAMPLES) int64."""
+    data = [_wave_data(b, "WAV", _WAV_FMT, _WAV_BODY_LEN) for b in payloads]
+    return _stack(data, (WAV_N_SAMPLES,), "<i2")
+
+
+WAV_DECODE_SQL = _oracle(
+    _WAV_BODY_LEN,
+    f"""smp AS (
+  SELECT doc_id,
+         ascii(substr(s, i * 2 + 1, 1))
+           + 256 * ascii(substr(s, i * 2 + 2, 1)) AS raw
+  FROM body, unnest(range(0, {WAV_N_SAMPLES})) AS t(i)
+), pcm AS (
+  SELECT doc_id,
+         CAST(CASE WHEN raw >= 32768 THEN raw - 65536 ELSE raw END
+              AS BIGINT) AS v
+  FROM smp
+)""",
+    _AUDIO_TAIL,
+)
+
+
+# ITU-T G.711 (telephony companding — 8-bit logarithmic codewords ->
+# 14-bit linear PCM). Unlike PCM16 this is an actual audio CODEC: each
+# byte is a sign/exponent/mantissa triple on a logarithmic amplitude
+# grid, expanded with the public-spec law (ITU-T G.711 Tables 1a/2a /
+# the classic public-domain Sun g711.c formulation). The decode law is
+# closed-form integer math, so the DuckDB oracle re-derives every
+# sample VALUE — a hash-graded compressed-audio path.
+
+MULAW_N_SAMPLES = 1024
+MULAW_RATE = 8000
+_MULAW_BIAS = 0x84  # 132 — the G.711 mu-law bias
+_MULAW_FMT = 7  # WAVE_FORMAT_MULAW
+_ALAW_FMT = 6  # WAVE_FORMAT_ALAW
+
+
+def _mulaw_decode_table() -> np.ndarray:
+    """256-entry codeword -> linear-PCM LUT (how production decoders
+    ship G.711): complement, split 0x80 sign / 0x70 exponent / 0x0F
+    mantissa, expand ((m<<3)+BIAS)<<e, re-subtract the bias with the
+    sign applied. Anchors fixed by the spec: 0x00 -> -32124,
+    0x80 -> +32124, 0x7F and 0xFF -> 0."""
+    u = (~np.arange(256)) & 0xFF
+    t = (((u & 0x0F) << 3) + _MULAW_BIAS) << ((u & 0x70) >> 4)
+    return np.where(u & 0x80, _MULAW_BIAS - t, t - _MULAW_BIAS).astype(np.int64)
+
+
+def _alaw_decode_table() -> np.ndarray:
+    """256-entry A-law codeword -> linear-PCM LUT (ITU-T G.711 Table
+    1a / the public-domain Sun g711.c formulation): XOR the 0x55
+    toggle mask, split sign/segment/mantissa, expand with the A-law
+    segment switch (segment 0 adds 8, segment 1 adds 0x108, higher
+    segments shift). Distinct law from mu-law: no bias subtraction,
+    no all-ones complement, and NO zero output — minimum magnitude is
+    8. Anchors fixed by the spec: 0x2A -> -32256, 0xAA -> +32256,
+    0x55 -> -8, 0xD5 -> +8."""
+    u = np.arange(256) ^ 0x55
+    m = (u & 0x0F) << 4
+    seg = (u & 0x70) >> 4
+    t = np.where(
+        seg == 0, m + 8, (m + 0x108) << np.maximum(seg - 1, 0)
+    )
+    return np.where(u & 0x80, t, -t).astype(np.int64)
+
+
+def _g711(fmt_tag: int, lut: np.ndarray) -> Codec:
+    """G.711 WAVE codec (fmt 6 A-law / 7 mu-law): 8-bit mono, block
+    align 1, one codeword per sample, and the ``lut`` expansion to
+    linear PCM. Every printable byte IS a legal codeword; under mu-law
+    the cycled range [32,126] complements into sign-set codes spanning
+    exponent segments 0-5, and under A-law the same range XORs into
+    sign-clear codes across segments {0,1,2,3,6,7} — including both
+    laws' boundary segments and both switch arms of the A-law
+    expansion (the full 256-code space is covered by the LUT
+    round-trip pytest, not the corpus)."""
+    fmt = struct.pack("<HHIIHH", fmt_tag, 1, MULAW_RATE, MULAW_RATE, 1, 8)
+    fact = struct.pack("<I", MULAW_N_SAMPLES)
+
+    def decode(payloads: list) -> np.ndarray:
+        codes = [
+            _wave_data(b, "G.711", fmt, MULAW_N_SAMPLES, fact) for b in payloads
+        ]
+        return lut[_stack(codes, (MULAW_N_SAMPLES,))]
+
+    header = _wave_header(fmt, MULAW_N_SAMPLES, fact)
+    return Codec(
+        MULAW_N_SAMPLES, _prepend(header), decode, _audio_stats, _AUDIO_SCHEMA
+    )
+
+
+# the decode law, re-derived per byte in SQL: u = 255-b (8-bit
+# complement), exponent = (u//16)%8, t = ((u%16)*8 + 132) << e,
+# sample = 132-t when the (complemented) sign bit is set else t-132
+MULAW_DECODE_SQL = _oracle(
+    MULAW_N_SAMPLES,
+    f"""u AS (
+  SELECT doc_id, 255 - ascii(substr(s, i + 1, 1)) AS u
+  FROM body, unnest(range(0, {MULAW_N_SAMPLES})) AS t(i)
+), pcm AS (
+  SELECT doc_id,
+         CAST(CASE WHEN u >= 128
+              THEN {_MULAW_BIAS} - (((u % 16) * 8 + {_MULAW_BIAS})
+                                    * (1 << ((u // 16) % 8)))
+              ELSE (((u % 16) * 8 + {_MULAW_BIAS})
+                    * (1 << ((u // 16) % 8))) - {_MULAW_BIAS}
+              END AS BIGINT) AS v
+  FROM u
+)""",
+    _AUDIO_TAIL,
+)
+
+
+# the A-law decode law per byte: u = b XOR 0x55, mantissa m = u%16,
+# segment = (u//16)%8; t = m*16+8 (seg 0), m*16+264 (seg 1), else
+# (m*16+264) << (seg-1); sign bit of u picks +t / -t.
+ALAW_DECODE_SQL = _oracle(
+    MULAW_N_SAMPLES,
+    f"""u AS (
+  SELECT doc_id, xor(ascii(substr(s, i + 1, 1)), 85) AS u
+  FROM body, unnest(range(0, {MULAW_N_SAMPLES})) AS t(i)
+), mag AS (
+  SELECT doc_id, u,
+         CASE (u // 16) % 8
+           WHEN 0 THEN (u % 16) * 16 + 8
+           WHEN 1 THEN (u % 16) * 16 + 264
+           ELSE ((u % 16) * 16 + 264) * (1 << ((u // 16) % 8 - 1))
+         END AS t
+  FROM u
+), pcm AS (
+  SELECT doc_id,
+         CAST(CASE WHEN u >= 128 THEN t ELSE -t END AS BIGINT) AS v
+  FROM mag
+)""",
+    _AUDIO_TAIL,
+)
+
+
+# ---------------------------------------------------------------------------
+# REAL stateful compressed-audio decode path: IMA/DVI ADPCM (WAV fmt
+# 0x11). One genuine notch above G.711: the codec carries STATE — a
+# 16-bit predictor and an index into the 89-entry step-size table,
+# both updated per 4-bit codeword — so the decode of nibble i depends
+# on every nibble before it. The decoder below is the public IMA
+# reference algorithm (IMA Digital Audio Pack recommendation, the
+# classic adpcm.c formulation: delta = step/8 + b2*step + b1*step/2 +
+# b0*step/4, sign bit subtracts, predictor clamped to int16, index
+# adjusted by [-1,-1,-1,-1,2,4,6,8] and clamped to [0,88]).
+#
+# The DuckDB oracle replays the SAME state machine as a WITH RECURSIVE
+# iteration over sample index: state rows (doc_id, i, pred, idx) step
+# through the nibble relation — the sequential dependency that makes
+# ADPCM non-vectorizable is exactly what a recursive CTE expresses,
+# so the query is exactly hash-graded, not rows-only (the bfs_depth /
+# graph_kcore loop-oracle precedent).
+# ---------------------------------------------------------------------------
+
+_ADPCM_FMT = 0x11  # WAVE_FORMAT_IMA_ADPCM (DVI)
+ADPCM_DATA_BYTES = 128  # nibble bytes per clip = one IMA block payload
+ADPCM_N_SAMPLES = 1 + 2 * ADPCM_DATA_BYTES  # block-header sample + nibbles
+ADPCM_RATE = 8000
+_ADPCM_BLOCK_ALIGN = 4 + ADPCM_DATA_BYTES  # 4-byte block header + nibbles
+
+# the public 89-entry IMA step-size table (quarter-dB log grid)
+_ADPCM_STEPS = [
+    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
+    34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130,
+    143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449,
+    494, 544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411,
+    1552, 1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026,
+    4428, 4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442,
+    11487, 12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623,
+    27086, 29794, 32767,
+]
+_ADPCM_INDEX_ADJ = [-1, -1, -1, -1, 2, 4, 6, 8]
+
+# fmt chunk size 20: the 2-byte cbSize extension carries
+# wSamplesPerBlock, required for fmt 0x11; the fact chunk (sample
+# count) is mandatory for compressed WAVE; the data chunk is one block
+_ADPCM_FMT_CHUNK = struct.pack(
+    "<HHIIHHHH",
+    _ADPCM_FMT,
+    1,
+    ADPCM_RATE,
+    ADPCM_RATE * _ADPCM_BLOCK_ALIGN // ADPCM_N_SAMPLES,
+    _ADPCM_BLOCK_ALIGN,
+    4,
+    2,
+    ADPCM_N_SAMPLES,
+)
+_ADPCM_FACT = struct.pack("<I", ADPCM_N_SAMPLES)
+# the file up to the nibbles: WAVE header + the 4-byte block header
+# (initial predictor 0 as int16 LE, step index 0, reserved 0). Printable
+# bytes span low nibbles 0-15 and high nibbles 2-7, so sign-bit codes
+# (8-15) and every index-adjust arm are exercised in the low-nibble
+# position; the full 16-code space is covered by the encoder
+# round-trip pytest.
+_ADPCM_HEADER = (
+    _wave_header(_ADPCM_FMT_CHUNK, _ADPCM_BLOCK_ALIGN, _ADPCM_FACT)
+    + b"\x00\x00\x00\x00"
+)
+
+
+def _adpcm_decode_batch(codes, pred0, idx0):
+    """Vectorized IMA decode across a BATCH of clips: the per-sample
+    state recurrence is inherently sequential, but it is sequential in
+    the SAMPLE axis only — so the kernel runs 2·data_bytes lockstep
+    numpy iterations over [n_clips]-shaped predictor/step-index state
+    arrays instead of n_clips × n_samples Python steps (≈10× on a
+    5000-clip Arrow batch; the bench's one real new-query cost in
+    round 8). ``codes``: uint8 array [n, 2·ADPCM_DATA_BYTES];
+    ``pred0``/``idx0``: int arrays [n]. Returns int64 [n, n+1 samples]
+    including the block-header predictor as sample 0 (the IMA WAV
+    block convention)."""
+    codes = np.asarray(codes, np.int64)
+    n, m = codes.shape
+    pred = np.asarray(pred0, np.int64).copy()
+    idx = np.asarray(idx0, np.int64).copy()
+    steps = np.asarray(_ADPCM_STEPS, np.int64)
+    adj = np.asarray(_ADPCM_INDEX_ADJ, np.int64)
+    out = np.empty((n, m + 1), np.int64)
+    out[:, 0] = pred
+    for i in range(m):
+        c = codes[:, i]
+        step = steps[idx]
+        diff = (
+            (step >> 3)
+            + np.where(c & 4, step, 0)
+            + np.where(c & 2, step >> 1, 0)
+            + np.where(c & 1, step >> 2, 0)
+        )
+        pred = np.where(c & 8, pred - diff, pred + diff)
+        np.clip(pred, -32768, 32767, out=pred)
+        idx = np.clip(idx + adj[c & 7], 0, 88)
+        out[:, i + 1] = pred
+    return out
+
+
+def _adpcm_decode(payloads: list) -> np.ndarray:
+    """Validate each one-block payload, split its block header
+    (predictor, step index) from the 4-bit codes — low nibble of each
+    byte first, the IMA WAV packing order — and replay the whole batch
+    in lockstep."""
+    blocks = [
+        _wave_data(b, "IMA ADPCM", _ADPCM_FMT_CHUNK, _ADPCM_BLOCK_ALIGN, _ADPCM_FACT)
+        for b in payloads
+    ]
+    pred0, idx0 = zip(*(struct.unpack("<hB", b[:3]) for b in blocks))
+    _need(max(idx0) <= 88, "IMA ADPCM", f"step index {max(idx0)} out of range")
+    nibbles = _stack([b[4:] for b in blocks], (ADPCM_DATA_BYTES,))
+    codes = np.empty((len(blocks), 2 * ADPCM_DATA_BYTES), np.int64)
+    codes[:, 0::2] = nibbles & 0x0F
+    codes[:, 1::2] = nibbles >> 4
+    return _adpcm_decode_batch(codes, pred0, idx0)
+
+
+_ADPCM_STEPS_VALUES = ", ".join(
+    f"({i}, {s})" for i, s in enumerate(_ADPCM_STEPS)
+)
+
+# The oracle replays the decoder state machine with WITH RECURSIVE:
+# state(doc_id, i, pred, idx) steps once per nibble, joining the
+# nibble relation on (doc_id, i) and the step table on idx. All
+# arithmetic is exact integers; >> becomes // on provably nonnegative
+# step values (truncation == floor there); the audio tail reads the
+# replayed predictors as pcm.
+ADPCM_DECODE_SQL = f"""
+WITH RECURSIVE
+body AS (
+  SELECT doc_id,
+         {_cycled_body_sql(ADPCM_DATA_BYTES)} AS s
+  FROM documents
+),
+nib AS (
+  SELECT doc_id, i,
+         CASE WHEN i % 2 = 0
+              THEN ascii(substr(s, i // 2 + 1, 1)) % 16
+              ELSE ascii(substr(s, i // 2 + 1, 1)) // 16
+         END AS code
+  FROM body, unnest(range(0, {2 * ADPCM_DATA_BYTES})) AS t(i)
+),
+steps(si, step) AS (VALUES {_ADPCM_STEPS_VALUES}),
+state(doc_id, i, pred, idx) AS (
+  SELECT doc_id, 0, 0, 0 FROM body
+  UNION ALL
+  SELECT st.doc_id, st.i + 1,
+         greatest(-32768, least(32767,
+           st.pred
+           + (CASE WHEN n.code >= 8 THEN -1 ELSE 1 END)
+             * (sp.step // 8
+                + CASE WHEN (n.code % 8) >= 4 THEN sp.step ELSE 0 END
+                + CASE WHEN (n.code % 4) >= 2 THEN sp.step // 2 ELSE 0 END
+                + CASE WHEN (n.code % 2) = 1 THEN sp.step // 4 ELSE 0 END))),
+         greatest(0, least(88,
+           st.idx + CASE (n.code % 8)
+                      WHEN 4 THEN 2 WHEN 5 THEN 4
+                      WHEN 6 THEN 6 WHEN 7 THEN 8
+                      ELSE -1 END))
+  FROM state st
+  JOIN nib n ON n.doc_id = st.doc_id AND n.i = st.i
+  JOIN steps sp ON sp.si = st.idx
+  WHERE st.i < {2 * ADPCM_DATA_BYTES}
+),
+pcm AS (SELECT doc_id, CAST(pred AS BIGINT) AS v FROM state)
+{_AUDIO_TAIL}
+GROUP BY doc_id
+ORDER BY doc_id
+"""
+
+
+# ---------------------------------------------------------------------------
+# REAL video decode path: raw grayscale frame buffer, numpy frame ops
+# ---------------------------------------------------------------------------
+
+VID_W = VID_H = 16
+VID_FRAMES = 8
+VID_SAMPLE_EVERY = 2  # temporal sampling stride
+_VID_BODY_LEN = VID_W * VID_H * VID_FRAMES
+# VID_FRAMES contiguous W×H grayscale frames (the uncompressed y-plane
+# layout every codec decodes INTO) after a tiny self-describing header
+# ``RAWV<w><h><n>`` (one byte each)
+_VID_HEADER = b"RAWV" + bytes([VID_W, VID_H, VID_FRAMES])
+
+
+def _video_decode(payloads: list) -> np.ndarray:
+    """Parse the RAWV header and reshape each buffer to
+    (frames, H, W)."""
+    for buf in payloads:
+        _need(buf[:4] == b"RAWV", "video", "missing RAWV magic")
+        _need(buf[4:7] == _VID_HEADER[4:], "video", f"geometry {tuple(buf[4:7])}")
+        _need(len(buf) == len(_VID_HEADER) + _VID_BODY_LEN, "video", "frames truncated")
+    frames = [b[len(_VID_HEADER) :] for b in payloads]
+    return _stack(frames, (VID_FRAMES, VID_H, VID_W))
+
+
+def _video_stats(vid: np.ndarray) -> dict:
+    """Keep every VID_SAMPLE_EVERY-th frame (the decode-side temporal
+    sampling a video curation pipeline runs) and emit the sampled-frame
+    luma mean and a motion proxy (mean absolute difference between
+    consecutive SAMPLED frames), both in exact integer milli-units."""
+    n = len(vid)
+    sampled = vid[:, ::VID_SAMPLE_EVERY]
+    luma = sampled.reshape(n, -1)
+    diffs = np.abs(sampled[:, 1:] - sampled[:, :-1]).reshape(n, -1)
+    return {
+        "n_frames": vid.shape[1],
+        "n_sampled": sampled.shape[1],
+        "luma_milli": luma.sum(axis=1) * 1000 // luma.shape[1],
+        "motion_milli": diffs.sum(axis=1) * 1000 // diffs.shape[1],
+    }
+
+
+_VID_SAMPLED = list(range(0, VID_FRAMES, VID_SAMPLE_EVERY))
+
+VIDEO_DECODE_SQL = f"""
+WITH body AS (
+  SELECT doc_id,
+         {_cycled_body_sql(_VID_BODY_LEN)} AS s
+  FROM documents
+), px AS (
+  -- pixel i of sampled frame f (0-based), valued by its byte
+  SELECT doc_id, f, i,
+         CAST(ascii(substr(s, f * {VID_W * VID_H} + i + 1, 1)) AS BIGINT) AS v
+  FROM body,
+       unnest({_VID_SAMPLED}) AS tf(f),
+       unnest(range(0, {VID_W * VID_H})) AS ti(i)
+), luma AS (
+  SELECT doc_id, CAST(sum(v) AS BIGINT) * 1000 // count(*) AS luma_milli
+  FROM px GROUP BY doc_id
+), motion AS (
+  SELECT a.doc_id,
+         CAST(sum(abs(a.v - b.v)) AS BIGINT) * 1000 // count(*) AS motion_milli
+  FROM px a
+  JOIN px b ON a.doc_id = b.doc_id AND a.i = b.i
+           AND b.f = a.f + {VID_SAMPLE_EVERY}
+  GROUP BY a.doc_id
+)
+SELECT doc_id, {VID_FRAMES} AS n_frames,
+       {len(_VID_SAMPLED)} AS n_sampled, luma_milli, motion_milli
+FROM luma JOIN motion USING (doc_id)
+ORDER BY doc_id
 """
 
 
@@ -2053,8 +1443,6 @@ def _encode_jpeg(dcqs: list, pats: list) -> bytes:
     exactly verifiable — the decoded image is a deterministic function
     of the coefficients, and the oracle recomputes its statistics from
     the same text bytes through an independent IDCT."""
-    import struct
-
     q_zz = bytes(_JPEG_QUANT[_JPEG_ZIGZAG[i]] for i in range(64))
     out = bytearray(b"\xff\xd8")
     out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + q_zz
@@ -2129,22 +1517,7 @@ def _encode_jpeg(dcqs: list, pats: list) -> bytes:
     return bytes(out + buf + b"\xff\xd9")
 
 
-class JpegDecodeError(ValueError):
-    """Malformed/truncated/unsupported JPEG payload. Input validation
-    raises this explicitly (never bare ``assert``, which
-    PYTHONOPTIMIZE/-O strips — corrupt payloads would then surface as
-    IndexError/struct.error or silently wrong features; ADVICE r6).
-    ``assert`` remains only for internal invariants."""
-
-
-def _need(cond: bool, msg: str) -> None:
-    if not cond:
-        raise JpegDecodeError(msg)
-
-
-def _jpeg_idct_matrix() -> "np.ndarray":  # noqa: F821
-    import numpy as np
-
+def _jpeg_idct_matrix() -> np.ndarray:
     x = np.arange(8)
     u = np.arange(8)
     m = 0.5 * np.cos((2 * x[None, :] + 1) * u[:, None] * np.pi / 16)
@@ -2158,36 +1531,32 @@ def _decode_jpeg(buf: bytes) -> tuple:
     0xFF00 unstuffing, amplitude extend, dequantize, de-zigzag,
     float64 matrix IDCT, +128 level shift, floor(x+0.5), [0,255]
     clip. Returns ``(pixels h×w int64, dc_sum, nonzero_ac)``."""
-    import struct
-
-    import numpy as np
-
-    _need(buf[:2] == b"\xff\xd8", "bad SOI marker")
+    _need(buf[:2] == b"\xff\xd8", "JPEG", "bad SOI marker")
     pos = 2
     qt = None
     dims = None
     dec_tabs: dict = {}
     while pos < len(buf):
-        _need(pos + 4 <= len(buf), "truncated marker header")
-        _need(buf[pos] == 0xFF, "marker sync lost")
+        _need(pos + 4 <= len(buf), "JPEG", "truncated marker header")
+        _need(buf[pos] == 0xFF, "JPEG", "marker sync lost")
         marker = buf[pos + 1]
         pos += 2
         (seglen,) = struct.unpack(">H", buf[pos : pos + 2])
-        _need(seglen >= 2, "invalid marker segment length")
-        _need(pos + seglen <= len(buf), "truncated marker segment")
+        _need(seglen >= 2, "JPEG", "invalid marker segment length")
+        _need(pos + seglen <= len(buf), "JPEG", "truncated marker segment")
         data = buf[pos + 2 : pos + seglen]
         if marker == 0xDB:
-            _need(len(data) >= 65, "short DQT segment")
-            _need(data[0] == 0x00, "only 8-bit quant tables supported")
+            _need(len(data) >= 65, "JPEG", "short DQT segment")
+            _need(data[0] == 0x00, "JPEG", "only 8-bit quant tables supported")
             qt = [0] * 64
             for i in range(64):
                 qt[_JPEG_ZIGZAG[i]] = data[1 + i]
         elif marker == 0xC4:
-            _need(len(data) >= 17, "short DHT segment")
+            _need(len(data) >= 17, "JPEG", "short DHT segment")
             tc, th = data[0] >> 4, data[0] & 15
             bits = list(data[1:17])
             vals = list(data[17 : 17 + sum(bits)])
-            _need(len(vals) == sum(bits), "truncated Huffman table")
+            _need(len(vals) == sum(bits), "JPEG", "truncated Huffman table")
             dec: dict = {}
             code = k = 0
             for ln in range(1, 17):
@@ -2198,21 +1567,21 @@ def _decode_jpeg(buf: bytes) -> tuple:
                 code <<= 1
             dec_tabs[(tc, th)] = dec
         elif marker == 0xC0:
-            _need(len(data) >= 8, "short SOF0 segment")
+            _need(len(data) >= 8, "JPEG", "short SOF0 segment")
             prec, h, w, nf = struct.unpack(">BHHB", data[:6])
-            _need((prec, nf) == (8, 1), "8-bit single-component baseline only")
-            _need(data[7] == 0x11, "subsampling unsupported")
+            _need((prec, nf) == (8, 1), "JPEG", "8-bit single-component baseline only")
+            _need(data[7] == 0x11, "JPEG", "subsampling unsupported")
             dims = (w, h)
         elif marker == 0xDA:
             pos += seglen
             break
         else:
-            raise JpegDecodeError(f"unexpected marker 0x{marker:02x}")
+            raise DecodeError(f"bad JPEG payload: unexpected marker 0x{marker:02x}")
         pos += seglen
     _need(
         bool(qt) and dims is not None
         and (0, 0) in dec_tabs and (1, 0) in dec_tabs,
-        "missing DQT/SOF0/DHT before SOS",
+        "JPEG", "missing DQT/SOF0/DHT before SOS",
     )
     w, h = dims
 
@@ -2221,25 +1590,25 @@ def _decode_jpeg(buf: bytes) -> tuple:
     while pos < len(buf):
         b = buf[pos]
         if b == 0xFF:
-            _need(pos + 1 < len(buf), "entropy stream truncated at 0xFF")
+            _need(pos + 1 < len(buf), "JPEG", "entropy stream truncated at 0xFF")
             nxt = buf[pos + 1]
             if nxt == 0x00:
                 ent.append(0xFF)
                 pos += 2
                 continue
-            _need(nxt == 0xD9, f"unexpected in-stream marker 0x{nxt:02x}")
+            _need(nxt == 0xD9, "JPEG", f"unexpected in-stream marker 0x{nxt:02x}")
             saw_eoi = True
             break
         ent.append(b)
         pos += 1
-    _need(saw_eoi, "entropy stream ends without EOI")
+    _need(saw_eoi, "JPEG", "entropy stream ends without EOI")
 
     bitpos = 0
     total = len(ent) * 8
 
     def read_bit() -> int:
         nonlocal bitpos
-        _need(bitpos < total, "entropy stream truncated")
+        _need(bitpos < total, "JPEG", "entropy stream truncated")
         b = (ent[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
         bitpos += 1
         return b
@@ -2255,7 +1624,7 @@ def _decode_jpeg(buf: bytes) -> tuple:
         while True:
             code = (code << 1) | read_bit()
             ln += 1
-            _need(ln <= 16, "invalid Huffman code")
+            _need(ln <= 16, "JPEG", "invalid Huffman code")
             sym = dec.get((ln, code))
             if sym is not None:
                 return sym
@@ -2283,7 +1652,7 @@ def _decode_jpeg(buf: bytes) -> tuple:
                 k += 16
                 continue
             k += sym >> 4
-            _need(k <= 63, "AC coefficient index overflow")
+            _need(k <= 63, "JPEG", "AC coefficient index overflow")
             val = extend(read_bits(sym & 15), sym & 15)
             nat = _JPEG_ZIGZAG[k]
             coefs[nat] = val * qt[nat]
@@ -2298,104 +1667,46 @@ def _decode_jpeg(buf: bytes) -> tuple:
     return img, int(dc_sum), int(nz)
 
 
-def _jpeg_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, raw) coefficient-byte relation shared by the JPEG
-    encoder's two consumers (payload builder and the fused decode)."""
-    d = io.load_table_parallel(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id", F.encode(_cycled_body(_JPEG_BODY_LEN), "utf-8").alias("raw")
-    )
+def _jpeg_encode(raws: list) -> list:
+    """Baseline JPEGs: 2 printable text bytes per 8×8 block pick the
+    quantized DC level and one of ``JPEG_N_PATTERNS`` AC menus, which
+    ``_encode_jpeg`` Huffman-codes into a real entropy stream."""
+    return [
+        _encode_jpeg(
+            [b[2 * i] - _JPEG_DC_BIAS for i in range(JPEG_N_BLOCKS)],
+            [b[2 * i + 1] % JPEG_N_PATTERNS for i in range(JPEG_N_BLOCKS)],
+        )
+        for b in raws
+    ]
 
 
-def _jpeg_enc_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Arrow-batched JPEG encoder: (doc_id, raw) → (doc_id, payload).
-    Module-level so the decode query composes it with the feature
-    kernel in ONE Python eval node (see _png_enc_batches)."""
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        payloads = []
-        for r in pdf["raw"]:
-            b = bytes(r)
-            payloads.append(
-                _encode_jpeg(
-                    [b[2 * i] - _JPEG_DC_BIAS for i in range(JPEG_N_BLOCKS)],
-                    [b[2 * i + 1] % JPEG_N_PATTERNS for i in range(JPEG_N_BLOCKS)],
-                )
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+def _jpeg_decode(payloads: list) -> tuple:
+    """Full baseline decode of every image: ``(pixels (n, H, W),
+    dc_sums, nonzero_ac counts)``."""
+    imgs, dc_sums, nzs = zip(*(_decode_jpeg(b) for b in payloads))
+    for img in imgs:
+        _need(img.shape == (JPEG_H, JPEG_W), "JPEG", f"dims {img.shape}")
+    return np.stack(imgs), np.array(dc_sums), np.array(nzs)
 
 
-def with_jpeg_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → VALID baseline JPEG images: 2 printable text bytes
-    per 8×8 block pick the quantized DC level and one of
-    ``JPEG_N_PATTERNS`` AC menus; the Arrow-batched encoder
-    Huffman-codes them into a real entropy stream (the same
-    worker-side hop where a libjpeg encoder would sit)."""
-    return _jpeg_raw(spark, sf_dir).mapInPandas(
-        _jpeg_enc_batches, "doc_id LONG, payload BINARY"
-    )
+# the weighted checksum's per-pixel weight (1+x+8y)², tiled per block
+_JPEG_WTILE = np.tile(
+    (1 + np.arange(8)[None, :] + 8 * np.arange(8)[:, None]) ** 2,
+    (JPEG_H // 8, JPEG_W // 8),
+).astype(np.int64)
 
 
-def jpeg_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode REAL baseline JPEG payloads — the ffmpeg-class seam's
-    image half, now honest-real: canonical Huffman entropy decode
-    (EOB/ZRL/negative extend/byte unstuffing), dequantization, and a
-    float64 IDCT — emitting per-image dc_sum, nonzero-AC count, and
-    the total decoded pixel sum.
-
-    The DuckDB oracle never sees the codec: it recomputes the same
-    integers from the text bytes, using per-pattern pixel-sum
-    constants generated by an independent spec-literal O(N⁴) IDCT
-    (see ``_jpeg_pattern_constants`` for the exactness argument), so
-    the driver hash match proves the whole pipeline — including the
-    IDCT and its rounding — pixel-exactly. Remaining declared stub:
-    H.264/MP3 (``decode_payload``).
-
-    Scale: payload bytes never leave the Python worker (encoder and
-    decoder compose in ONE mapInPandas — r9); decode is embarrassingly
-    parallel across partitions; per-image output is 6 ints."""
-    raw = _jpeg_raw(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        wtile = np.tile(
-            (1 + np.arange(8)[None, :] + 8 * np.arange(8)[:, None]) ** 2,
-            (JPEG_H // 8, JPEG_W // 8),
-        ).astype(np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img, dc_sum, nz = _decode_jpeg(bytes(payload))
-                rows.append(
-                    [
-                        doc_id, JPEG_W, JPEG_H, dc_sum, nz,
-                        int(img.sum()), int((img * wtile).sum()),
-                    ]
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "dc_sum", "nonzero_ac",
-                    "pixel_sum", "pix_weighted",
-                ],
-            )
-
-    def enc_then_run(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        return run(_jpeg_enc_batches(batches))
-
-    return raw.mapInPandas(
-        enc_then_run,
-        "doc_id LONG, width INT, height INT, dc_sum LONG,"
-        " nonzero_ac LONG, pixel_sum LONG, pix_weighted LONG",
-    ).orderBy("doc_id")
+def _jpeg_stats(decoded: tuple) -> dict:
+    imgs, dc_sums, nzs = decoded
+    n = len(imgs)
+    return {
+        "width": JPEG_W,
+        "height": JPEG_H,
+        "dc_sum": dc_sums,
+        "nonzero_ac": nzs,
+        "pixel_sum": imgs.reshape(n, -1).sum(axis=1),
+        "pix_weighted": (imgs * _JPEG_WTILE).reshape(n, -1).sum(axis=1),
+    }
 
 
 _JPEG_CONSTS = _jpeg_pattern_constants()
@@ -2409,20 +1720,22 @@ _JPEG_NZ_CASE = " ".join(
     f"WHEN {i} THEN {nz}" for i, (_, _, nz) in enumerate(_JPEG_CONSTS)
 )
 
-JPEG_DECODE_SQL = f"""
-WITH body AS (
-  SELECT doc_id,
-         {_cycled_body_sql(_JPEG_BODY_LEN)} AS s
-  FROM documents
-), blocks AS (
+# The oracle never sees the codec: it recomputes the same integers from
+# the text bytes, with per-pattern pixel-sum constants from the
+# independent spec-literal IDCT (_jpeg_pattern_constants), so a hash
+# match proves entropy decode, dequantization, IDCT and rounding
+# pixel-exactly.
+JPEG_DECODE_SQL = _oracle(
+    _JPEG_BODY_LEN,
+    f"""blocks AS (
   SELECT doc_id, unnest(range(0, {JPEG_N_BLOCKS})) AS b, s FROM body
 ), per AS (
   SELECT doc_id,
          ascii(substr(s, 2 * b + 1, 1)) - {_JPEG_DC_BIAS} AS dcq,
          ascii(substr(s, 2 * b + 2, 1)) % {JPEG_N_PATTERNS} AS p
   FROM blocks
-)
-SELECT doc_id,
+)""",
+    f"""SELECT doc_id,
        {JPEG_W} AS width, {JPEG_H} AS height,
        CAST(sum({_JPEG_QUANT[0]} * dcq) AS BIGINT) AS dc_sum,
        CAST(sum(CASE p {_JPEG_NZ_CASE} END) AS BIGINT) AS nonzero_ac,
@@ -2430,9 +1743,8 @@ SELECT doc_id,
          AS pixel_sum,
        CAST(sum({_JPEG_WSUM} * (128 + dcq) + CASE p {_JPEG_W_CASE} END)
             AS BIGINT) AS pix_weighted
-FROM per GROUP BY doc_id
-ORDER BY doc_id
-"""
+FROM per""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2457,16 +1769,6 @@ _GIF_MIN_CODE_SIZE = 8  # 256-color image
 _GIF_CLEAR = 1 << _GIF_MIN_CODE_SIZE  # 256
 _GIF_EOI = _GIF_CLEAR + 1  # 257
 _GIF_MAX_WIDTH = 12  # LZW code width cap (4096-entry dictionary)
-
-
-class GifDecodeError(ValueError):
-    """Malformed/truncated/unsupported GIF payload (explicit raise —
-    same policy as JpegDecodeError)."""
-
-
-def _gneed(cond: bool, msg: str) -> None:
-    if not cond:
-        raise GifDecodeError(msg)
 
 
 def _lzw_encode(data: bytes) -> bytes:
@@ -2529,7 +1831,7 @@ def _lzw_decode(stream: bytes, n_expected: int) -> bytes:
     def get(width: int) -> int:
         nonlocal acc, nbits, pos
         while nbits < width:
-            _gneed(pos < len(stream), "LZW stream truncated")
+            _need(pos < len(stream), "GIF", "LZW stream truncated")
             acc |= stream[pos] << nbits
             pos += 1
             nbits += 8
@@ -2553,18 +1855,17 @@ def _lzw_decode(stream: bytes, n_expected: int) -> bytes:
             continue
         if code == _GIF_EOI:
             break
-        _gneed(bool(table), "data code before CLEAR")
+        _need(bool(table), "GIF", "data code before CLEAR")
         if prev is None:  # first code after CLEAR must be a root
-            _gneed(code < 256, "non-root code after CLEAR")
+            _need(code < 256, "GIF", "non-root code after CLEAR")
             out += table[code]
             prev = table[code]
             continue
         if code < nxt:
             entry = table[code]
-        elif code == nxt:  # KwKwK
+        else:  # KwKwK
+            _need(code == nxt, "GIF", "LZW code beyond dictionary")
             entry = prev + prev[:1]
-        else:
-            raise GifDecodeError("LZW code beyond dictionary")
         out += entry
         if nxt < (1 << _GIF_MAX_WIDTH):
             table.append(prev + entry[:1])
@@ -2572,8 +1873,8 @@ def _lzw_decode(stream: bytes, n_expected: int) -> bytes:
             if nxt == (1 << width) and width < _GIF_MAX_WIDTH:
                 width += 1
         prev = entry
-        _gneed(len(out) <= n_expected, "LZW output exceeds pixel count")
-    _gneed(len(out) == n_expected, "LZW output short of pixel count")
+        _need(len(out) <= n_expected, "GIF", "LZW output exceeds pixel count")
+    _need(len(out) == n_expected, "GIF", "LZW output short of pixel count")
     return bytes(out)
 
 
@@ -2582,8 +1883,6 @@ def _gif_header() -> bytes:
     global color table + image descriptor — constant for the fixed
     geometry, so Spark prepends it as a literal. Palette entry i is
     (i,i,i): pixel luminance == palette index == body byte."""
-    import struct
-
     gct = bytes(v for i in range(256) for v in (i, i, i))
     return (
         b"GIF87a"
@@ -2600,172 +1899,76 @@ def _decode_gif(buf: bytes) -> tuple:
     """Full GIF87a walk — signature, screen descriptor, grayscale
     global-color-table validation, image descriptor, sub-block
     reassembly, LZW decompression. Returns ``(w, h, indexes uint8)``.
-    Input validation raises GifDecodeError (same policy as JPEG)."""
-    import struct
-
-    import numpy as np
-
-    _gneed(buf[:6] == b"GIF87a", "bad GIF signature")
-    _gneed(len(buf) >= 13, "truncated screen descriptor")
+    Input validation raises DecodeError."""
+    _need(buf[:6] == b"GIF87a", "GIF", "bad signature")
+    _need(len(buf) >= 13, "GIF", "truncated screen descriptor")
     sw, sh = struct.unpack("<HH", buf[6:10])
     packed = buf[10]
-    _gneed(bool(packed & 0x80), "missing global color table")
+    _need(bool(packed & 0x80), "GIF", "missing global color table")
     gct_n = 2 << (packed & 0x07)
     pos = 13
-    _gneed(len(buf) >= pos + 3 * gct_n, "truncated color table")
+    _need(len(buf) >= pos + 3 * gct_n, "GIF", "truncated color table")
     gct = np.frombuffer(buf, np.uint8, count=3 * gct_n, offset=pos).reshape(
         gct_n, 3
     )
-    _gneed(
+    _need(
         bool((gct[:, 0] == gct[:, 1]).all() and (gct[:, 0] == gct[:, 2]).all()),
-        "non-grayscale palette",
+        "GIF", "non-grayscale palette",
     )
     pos += 3 * gct_n
-    _gneed(pos + 10 <= len(buf) and buf[pos] == 0x2C, "missing image descriptor")
+    _need(pos + 10 <= len(buf) and buf[pos] == 0x2C, "GIF", "missing image descriptor")
     ix, iy, iw, ih = struct.unpack("<HHHH", buf[pos + 1 : pos + 9])
-    _gneed(buf[pos + 9] & 0xC0 == 0, "local table/interlace unsupported")
-    _gneed((ix, iy, iw, ih) == (0, 0, sw, sh), "sub-rect unsupported")
+    _need(buf[pos + 9] & 0xC0 == 0, "GIF", "local table/interlace unsupported")
+    _need((ix, iy, iw, ih) == (0, 0, sw, sh), "GIF", "sub-rect unsupported")
     pos += 10
-    _gneed(pos < len(buf), "missing LZW code size")
-    _gneed(buf[pos] == _GIF_MIN_CODE_SIZE, "unexpected code size")
+    _need(pos < len(buf), "GIF", "missing LZW code size")
+    _need(buf[pos] == _GIF_MIN_CODE_SIZE, "GIF", "unexpected code size")
     pos += 1
     stream = bytearray()
     while True:
-        _gneed(pos < len(buf), "truncated sub-blocks")
+        _need(pos < len(buf), "GIF", "truncated sub-blocks")
         n = buf[pos]
         pos += 1
         if n == 0:
             break
-        _gneed(pos + n <= len(buf), "truncated sub-block body")
+        _need(pos + n <= len(buf), "GIF", "truncated sub-block body")
         stream += buf[pos : pos + n]
         pos += n
-    _gneed(pos < len(buf) and buf[pos] == 0x3B, "missing trailer")
+    _need(pos < len(buf) and buf[pos] == 0x3B, "GIF", "missing trailer")
     idx = np.frombuffer(_lzw_decode(bytes(stream), iw * ih), np.uint8)
     return iw, ih, idx
 
 
-def with_gif_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → VALID GIF87a images: constant header + the LZW
-    minimum-code-size byte + the REAL LZW-compressed index stream in
-    length-prefixed sub-blocks + trailer. The compressor runs in an
-    Arrow-batched mapInPandas (the same worker-side hop as the PNG
-    zlib encoder)."""
-    return _gif_raw(spark, sf_dir).mapInPandas(
-        _gif_enc_batches, "doc_id LONG, payload BINARY"
-    )
-
-
-def _gif_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, raw) index-byte relation shared by the GIF encoder's
-    two consumers (payload builder and the fused decode query)."""
-    return io.load_table_parallel(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(_cycled_body(_GIF_BODY_LEN), "utf-8").alias("raw")
-    )
-
-
-def _gif_enc_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Arrow-batched GIF87a/LZW encoder: (doc_id, raw) → (doc_id,
-    payload). Module-level so the decode query composes it with the
-    feature kernel in ONE Python eval node (see _png_enc_batches)."""
+def _gif_encode(raws: list) -> list:
+    """GIF87a files: constant header + the LZW minimum-code-size byte +
+    the REAL LZW-compressed index stream in length-prefixed sub-blocks
+    + trailer."""
     header = _gif_header()
-    for pdf in batches:
-        payloads = []
-        for body in pdf["raw"]:
-            stream = _lzw_encode(bytes(body))
-            blocks = bytearray([_GIF_MIN_CODE_SIZE])
-            for i in range(0, len(stream), 255):
-                chunk = stream[i : i + 255]
-                blocks.append(len(chunk))
-                blocks += chunk
-            blocks.append(0x00)  # block terminator
-            payloads.append(header + bytes(blocks) + b"\x3b")
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    out = []
+    for body in raws:
+        stream = _lzw_encode(body)
+        blocks = bytearray([_GIF_MIN_CODE_SIZE])
+        for i in range(0, len(stream), 255):
+            chunk = stream[i : i + 255]
+            blocks.append(len(chunk))
+            blocks += chunk
+        blocks.append(0x00)  # block terminator
+        out.append(header + bytes(blocks) + b"\x3b")
+    return out
 
 
-def gif_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode the GIF payloads and extract image features — real codec
-    decode, no stub: signature/descriptor walk, grayscale palette
-    load, sub-block reassembly, full LZW decompression, then exact
-    integer stats over the recovered indexes (mean in milli-units,
-    min/max, distinct count). The DuckDB oracle re-derives the stats
-    from the same byte construction, so a hash match proves the LZW
-    round-trip bit-exactly — the same proof shape as PNG's zlib path.
-
-    Scale: payload bytes never leave the Python worker (encoder and
-    decoder compose in ONE mapInPandas — r9); LZW is linear in pixels;
-    only a few ints per image shuffle."""
-    raw = _gif_raw(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                iw, ih, idx = _decode_gif(bytes(payload))
-                idx = idx.astype(np.int64)
-                # grayscale palette: luminance == index
-                out.append(
-                    [
-                        doc_id,
-                        int(iw),
-                        int(ih),
-                        int(idx.size),
-                        int((idx.sum() * 1000) // idx.size),
-                        int(idx.max()),
-                        int(idx.min()),
-                        int(np.unique(idx).size),
-                    ]
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "n_pixels",
-                    "idx_mean_milli",
-                    "idx_max",
-                    "idx_min",
-                    "n_distinct_idx",
-                ],
-            )
-
-    def enc_then_run(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        return run(_gif_enc_batches(batches))
-
-    return raw.mapInPandas(
-        enc_then_run,
-        "doc_id LONG, width LONG, height LONG, n_pixels LONG,"
-        " idx_mean_milli LONG, idx_max LONG, idx_min LONG,"
-        " n_distinct_idx LONG",
-    ).orderBy("doc_id")
+def _gif_decode(payloads: list) -> np.ndarray:
+    """Decode every GIF to its (H, W) palette indexes — with the
+    grayscale palette, luminance == index."""
+    imgs = []
+    for buf in payloads:
+        w, h, idx = _decode_gif(buf)
+        _need((w, h) == (GIF_W, GIF_H), "GIF", f"dims {(w, h)}")
+        imgs.append(idx.tobytes())
+    return _stack(imgs, (GIF_H, GIF_W))
 
 
-GIF_DECODE_SQL = f"""
-WITH body AS (
-  SELECT doc_id,
-         {_cycled_body_sql(_GIF_BODY_LEN)} AS s
-  FROM documents
-), px AS (
-  SELECT doc_id, ascii(substr(s, i + 1, 1)) AS idx
-  FROM body, unnest(range(0, {_GIF_BODY_LEN})) AS t(i)
-)
-SELECT doc_id,
-       {GIF_W} AS width, {GIF_H} AS height,
-       count(*) AS n_pixels,
-       CAST(sum(idx) AS BIGINT) * 1000 // count(*) AS idx_mean_milli,
-       max(idx) AS idx_max,
-       min(idx) AS idx_min,
-       count(DISTINCT idx) AS n_distinct_idx
-FROM px
-GROUP BY doc_id
-ORDER BY doc_id
-"""
+GIF_DECODE_SQL = _index_oracle(GIF_W, GIF_H)
 
 
 # ---------------------------------------------------------------------------
@@ -2790,22 +1993,10 @@ _BMP_BODY_LEN = BMP_W * BMP_H
 _BMP_OFFBITS = 14 + 40 + 256 * 4  # file header + info header + palette
 
 
-class BmpDecodeError(ValueError):
-    """Malformed/truncated/unsupported BMP payload (explicit raise —
-    same policy as the other codec decoders)."""
-
-
-def _bneed(cond: bool, msg: str) -> None:
-    if not cond:
-        raise BmpDecodeError(f"bad BMP payload: {msg}")
-
-
 def _bmp_headers(data_len: int) -> bytes:
     """BITMAPFILEHEADER + BITMAPINFOHEADER (biCompression=1, BI_RLE8)
     + a 256-entry grayscale BGRA palette. Positive biHeight = the
     spec's bottom-up row order."""
-    import struct
-
     file_hdr = b"BM" + struct.pack(
         "<IHHI", _BMP_OFFBITS + data_len, 0, 0, _BMP_OFFBITS
     )
@@ -2870,204 +2061,292 @@ def _rle8_decode(data: bytes, w: int, h: int):
     DELTA (0,2,dx,dy), ABSOLUTE (0,n>=3 + word pad). Returns the
     image TOP-DOWN row-major (flipping BMP's bottom-up storage);
     skipped pixels (delta/early EOL) are zero-filled. Raises
-    BmpDecodeError on overruns or truncation."""
-    import numpy as np
-
+    DecodeError on overruns or truncation."""
     img = np.zeros((h, w), np.uint8)  # storage order (bottom-up rows)
     x = 0
     y = 0  # y counts stored rows from the bottom
     pos = 0
     ended = False
     while pos < len(data):
-        _bneed(pos + 2 <= len(data), "escape/run pair truncated")
+        _need(pos + 2 <= len(data), "BMP", "escape/run pair truncated")
         a, b = data[pos], data[pos + 1]
         pos += 2
         if a > 0:  # encoded run
-            _bneed(y < h and x + a <= w, "run overflows the row")
+            _need(y < h and x + a <= w, "BMP", "run overflows the row")
             img[y, x : x + a] = b
             x += a
         elif b == 0:  # end of line
-            _bneed(y < h, "EOL past the last row")
+            _need(y < h, "BMP", "EOL past the last row")
             x, y = 0, y + 1
         elif b == 1:  # end of bitmap
             ended = True
             break
         elif b == 2:  # delta jump
-            _bneed(pos + 2 <= len(data), "delta operands truncated")
+            _need(pos + 2 <= len(data), "BMP", "delta operands truncated")
             dx, dy = data[pos], data[pos + 1]
             pos += 2
-            _bneed(y + dy < h and x + dx <= w, "delta jumps out of image")
+            _need(y + dy < h and x + dx <= w, "BMP", "delta jumps out of image")
             x, y = x + dx, y + dy
         else:  # absolute mode: b literal bytes, word-padded
             n = b
             pad = n % 2
-            _bneed(pos + n + pad <= len(data), "absolute block truncated")
-            _bneed(y < h and x + n <= w, "absolute block overflows the row")
+            _need(pos + n + pad <= len(data), "BMP", "absolute block truncated")
+            _need(y < h and x + n <= w, "BMP", "absolute block overflows the row")
             img[y, x : x + n] = np.frombuffer(
                 data, np.uint8, count=n, offset=pos
             )
             x += n
             pos += n + pad
-    _bneed(ended, "missing end-of-bitmap escape")
+    _need(ended, "BMP", "missing end-of-bitmap escape")
     return img[::-1].reshape(-1)  # flip bottom-up storage to top-down
 
 
-def with_bmp_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → VALID RLE8-compressed BMP files: per-doc headers
-    (the file/info headers carry the per-payload biSizeImage), the
-    grayscale palette, and the REAL RLE8-encoded pixel data, rows
-    stored bottom-up with EOL escapes and a final EOB. The encoder
-    runs worker-side in an Arrow-batched mapInPandas (the GIF/PNG
-    hop)."""
-    return _bmp_raw(spark, sf_dir).mapInPandas(
-        _bmp_enc_batches, "doc_id LONG, payload BINARY"
-    )
+def _bmp_encode(raws: list) -> list:
+    """RLE8-compressed BMP files: per-file headers (the file and info
+    headers carry the per-payload biSizeImage), the grayscale palette,
+    and the REAL RLE8-encoded pixel rows, stored bottom-up with EOL
+    escapes and a final EOB."""
+    out = []
+    for px in raws:
+        data = bytearray()
+        for r in range(BMP_H):  # bottom-up storage order
+            data += _rle8_encode_row(px[(BMP_H - 1 - r) * BMP_W : (BMP_H - r) * BMP_W])
+            data += b"\x00\x00"  # EOL
+        data += b"\x00\x01"  # EOB
+        out.append(_bmp_headers(len(data)) + bytes(data))
+    return out
 
 
-def _bmp_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, raw) pixel-byte relation shared by the BMP encoder's
-    two consumers (payload builder and the fused decode query)."""
-    return io.load_table_parallel(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(_cycled_body(_BMP_BODY_LEN), "utf-8").alias("raw")
-    )
+def _bmp_decode(payloads: list) -> np.ndarray:
+    """Header walk (magic, pixel offset, BITMAPINFOHEADER, BI_RLE8,
+    geometry), then the full escape-coded RLE decode with the
+    bottom-up flip: (n, H, W) top-down palette indexes."""
+    imgs = []
+    for buf in payloads:
+        _need(len(buf) >= _BMP_OFFBITS, "BMP", "header truncated")
+        _need(buf[0:2] == b"BM", "BMP", "missing BM magic")
+        (off,) = struct.unpack("<I", buf[10:14])
+        _need(off == _BMP_OFFBITS, "BMP", "unexpected pixel offset")
+        bisize, w, h, planes, bpp, comp, size_img = struct.unpack(
+            "<IiiHHII", buf[14:38]
+        )
+        _need(bisize == 40, "BMP", "not a BITMAPINFOHEADER")
+        _need(
+            (w, h, planes, bpp, comp) == (BMP_W, BMP_H, 1, 8, 1),
+            "BMP",
+            f"geometry/compression mismatch {(w, h, planes, bpp, comp)}",
+        )
+        _need(len(buf) >= off + size_img, "BMP", "pixel data truncated")
+        imgs.append(_rle8_decode(buf[off : off + size_img], w, h).tobytes())
+    return _stack(imgs, (BMP_H, BMP_W))
 
 
-def _bmp_enc_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Arrow-batched BMP/RLE8 encoder: (doc_id, raw) → (doc_id,
-    payload). Module-level so the decode query composes it with the
-    feature kernel in ONE Python eval node (see _png_enc_batches)."""
-    for pdf in batches:
-        payloads = []
-        for body in pdf["raw"]:
-            px = bytes(body)
-            data = bytearray()
-            for r in range(BMP_H):  # bottom-up storage order
-                row = px[(BMP_H - 1 - r) * BMP_W : (BMP_H - r) * BMP_W]
-                data += _rle8_encode_row(row)
-                data += b"\x00\x00"  # EOL
-            data += b"\x00\x01"  # EOB
-            payloads.append(_bmp_headers(len(data)) + bytes(data))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+def _bmp_stats(idx: np.ndarray) -> dict:
+    """The palette-index stats plus a position-weighted checksum over
+    the top-down pixel order — the stat that fails if rows are
+    unflipped, deltas mis-accounted, or absolute padding skipped."""
+    flat = idx.reshape(len(idx), -1)
+    pos = np.arange(1, flat.shape[1] + 1, dtype=np.int64)
+    return {**_index_stats(idx), "pos_weighted": flat @ pos}
 
 
-def bmp_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode the RLE8 BMP payloads and extract image features: header
-    walk (magic, offsets, BI_RLE8, geometry), full escape-coded RLE
-    decode with the bottom-up flip, then exact integer stats INCLUDING
-    a position-weighted checksum over the top-down pixel order — the
-    stat that fails if rows are unflipped, deltas mis-accounted, or
-    absolute padding skipped. The oracle re-derives everything from
-    the byte construction, so a hash match proves the RLE8 round trip.
+BMP_DECODE_SQL = _index_oracle(BMP_W, BMP_H, pos_weighted=True)
 
-    Scale: payload bytes never leave the Python worker (encoder and
-    decoder compose in ONE mapInPandas — r9); RLE decode is linear in
-    encoded bytes; a handful of ints per image shuffles."""
-    import struct
 
-    raw = _bmp_raw(spark, sf_dir)
+# ---------------------------------------------------------------------------
+# The codec table and the two queries built from it
+# ---------------------------------------------------------------------------
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                _bneed(len(buf) >= _BMP_OFFBITS, "header truncated")
-                _bneed(buf[0:2] == b"BM", "missing BM magic")
-                off = struct.unpack("<I", buf[10:14])[0]
-                _bneed(off == _BMP_OFFBITS, "unexpected pixel offset")
-                (
-                    bisize, w, h, planes, bpp, comp, size_img,
-                ) = struct.unpack("<IiiHHII", buf[14:38])
-                _bneed(bisize == 40, "not a BITMAPINFOHEADER")
-                _bneed(
-                    (w, h, planes, bpp, comp) == (BMP_W, BMP_H, 1, 8, 1),
-                    f"geometry/compression mismatch {(w, h, planes, bpp, comp)}",
-                )
-                _bneed(
-                    len(buf) >= off + size_img, "pixel data truncated"
-                )
-                px = _rle8_decode(buf[off : off + size_img], w, h)
-                s = px.astype(np.int64)
-                idx = np.arange(1, s.size + 1, dtype=np.int64)
-                out.append(
-                    [
-                        doc_id,
-                        int(w),
-                        int(h),
-                        int(s.size),
-                        int((s.sum() * 1000) // s.size),
-                        int(s.max()),
-                        int(s.min()),
-                        int(np.unique(s).size),
-                        int((idx * s).sum()),
-                    ]
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "idx_mean_milli", "idx_max", "idx_min",
-                    "n_distinct_idx", "pos_weighted",
-                ],
-            )
-
-    def enc_then_run(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        return run(_bmp_enc_batches(batches))
-
-    return raw.mapInPandas(
-        enc_then_run,
+CODECS: dict[str, Codec] = {
+    "ppm": Codec(
+        _PPM_BODY_LEN, _prepend(_PPM_HEADER), _ppm_decode, _rgb_stats, _RGB_SCHEMA
+    ),
+    "png": Codec(_PNG_BODY_LEN, _png_encode, _png_decode, _rgb_stats, _RGB_SCHEMA),
+    "wav": Codec(
+        _WAV_BODY_LEN,
+        _prepend(_wave_header(_WAV_FMT, _WAV_BODY_LEN)),
+        _wav_decode,
+        _audio_stats,
+        _AUDIO_SCHEMA,
+    ),
+    "mulaw": _g711(_MULAW_FMT, _mulaw_decode_table()),
+    "alaw": _g711(_ALAW_FMT, _alaw_decode_table()),
+    "adpcm": Codec(
+        ADPCM_DATA_BYTES,
+        _prepend(_ADPCM_HEADER),
+        _adpcm_decode,
+        _audio_stats,
+        _AUDIO_SCHEMA,
+    ),
+    "video": Codec(
+        _VID_BODY_LEN,
+        _prepend(_VID_HEADER),
+        _video_decode,
+        _video_stats,
+        "doc_id LONG, n_frames INT, n_sampled INT,"
+        " luma_milli LONG, motion_milli LONG",
+    ),
+    "jpeg": Codec(
+        _JPEG_BODY_LEN,
+        _jpeg_encode,
+        _jpeg_decode,
+        _jpeg_stats,
+        "doc_id LONG, width INT, height INT, dc_sum LONG,"
+        " nonzero_ac LONG, pixel_sum LONG, pix_weighted LONG",
+    ),
+    "gif": Codec(
+        _GIF_BODY_LEN,
+        _gif_encode,
+        _gif_decode,
+        _index_stats,
+        "doc_id LONG, width LONG, height LONG, n_pixels LONG,"
+        " idx_mean_milli LONG, idx_max LONG, idx_min LONG,"
+        " n_distinct_idx LONG",
+    ),
+    "bmp": Codec(
+        _BMP_BODY_LEN,
+        _bmp_encode,
+        _bmp_decode,
+        _bmp_stats,
         "doc_id LONG, width INT, height INT, n_pixels LONG,"
         " idx_mean_milli LONG, idx_max LONG, idx_min LONG,"
         " n_distinct_idx LONG, pos_weighted LONG",
-    ).orderBy("doc_id")
+    ),
+}
 
 
-BMP_DECODE_SQL = f"""
-WITH body AS (
-  SELECT doc_id,
-         {_cycled_body_sql(_BMP_BODY_LEN)} AS s
-  FROM documents
-), px AS (
-  SELECT doc_id, i, ascii(substr(s, i + 1, 1)) AS idx
-  FROM body, unnest(range(0, {_BMP_BODY_LEN})) AS t(i)
-)
-SELECT doc_id,
-       {BMP_W} AS width, {BMP_H} AS height,
-       count(*) AS n_pixels,
-       CAST(sum(idx) AS BIGINT) * 1000 // count(*) AS idx_mean_milli,
-       max(idx) AS idx_max,
-       min(idx) AS idx_min,
-       count(DISTINCT idx) AS n_distinct_idx,
-       CAST(sum((i + 1) * idx) AS BIGINT) AS pos_weighted
-FROM px
-GROUP BY doc_id
-ORDER BY doc_id
-"""
+def payload(spark: SparkSession, sf_dir: str, codec: str) -> DataFrame:
+    """(doc_id, payload): the encoded ``codec`` files themselves, for
+    readers that re-parse a payload independently."""
+    c = CODECS[codec]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            raws = [bytes(r) for r in pdf["raw"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": c.encode(raws)})
+
+    return _body(spark, sf_dir, c.body_len).mapInPandas(
+        run, "doc_id LONG, payload BINARY"
+    )
+
+
+def decode_features(spark: SparkSession, sf_dir: str, codec: str) -> DataFrame:
+    """Encode every document's body as a ``codec`` file, decode it back
+    and emit the codec's exact integer features, ordered by doc_id.
+
+    Encode and decode compose inside ONE mapInPandas, so payload bytes
+    never leave the Python worker (two chained Python eval nodes cost
+    0.5-0.7 s per query: every payload went JVM→Python→JVM→Python). The
+    DuckDB oracle never sees the codec — it re-derives the features
+    from the same text bytes — so a hash match proves the round trip
+    pixel- and sample-exactly. Decode is embarrassingly parallel across
+    partitions, and only a handful of ints per document shuffles."""
+    c = CODECS[codec]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf):
+                samples = c.decode(c.encode([bytes(r) for r in pdf["raw"]]))
+                yield pd.DataFrame(
+                    {"doc_id": pdf["doc_id"].to_numpy(), **c.stats(samples)}
+                )
+
+    return (
+        _body(spark, sf_dir, c.body_len)
+        .mapInPandas(run, c.schema)
+        .orderBy("doc_id")
+    )
+
+
+def audio_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spectral features over the WAV codec's validated samples — a
+    REAL FFT (numpy rfft) per clip: dominant frequency bin, spectral
+    centroid, and a Parseval consistency check (time-domain energy vs
+    frequency-domain energy — a self-evidencing correctness witness
+    carried in the output, ppm-scale).
+
+    This is the second stage of a real audio pipeline (decode →
+    spectrogram → features); the Arrow-batched mapInPandas plumbing is
+    identical to the decode stage, so at 100 TB the FFT cost is
+    per-row Python-side work on ~N/cores clips with zero extra
+    exchanges. Rows-only (no FFT in SQL); the pytest gate recomputes
+    the spectrum with an EXPLICIT DFT matrix — a different algorithm
+    than numpy's FFT — and asserts bin-level agreement.
+    """
+    wav = CODECS["wav"]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            s = wav.decode(wav.encode([bytes(r) for r in pdf["raw"]]))
+            s = s.astype(np.float64)
+            n = s.shape[1]
+            spec = np.fft.rfft(s, axis=1)
+            mag2 = spec.real**2 + spec.imag**2
+            # Parseval for rfft, valid for ANY N: every bin except
+            # DC — and, when N is even, the Nyquist bin — has a
+            # mirrored conjugate and counts twice
+            w = np.full(mag2.shape[1], 2.0)
+            w[0] = 1.0
+            if n % 2 == 0:
+                w[-1] = 1.0
+            freq_energy = (w * mag2).sum(axis=1) / n
+            time_energy = (s * s).sum(axis=1)
+            safe = np.where(time_energy == 0, 1.0, time_energy)
+            err = np.floor(np.abs(freq_energy - time_energy) / safe * 1e6 + 0.5)
+            # exclude DC (bin 0): the text-derived samples are all
+            # positive ASCII codes, so DC always dominates raw
+            ac = mag2[:, 1:]
+            ac_sum = ac.sum(axis=1)
+            centroid = np.floor(
+                (ac * np.arange(1, mag2.shape[1])).sum(axis=1)
+                / np.where(ac_sum == 0, 1.0, ac_sum)
+                * 1000
+                + 0.5
+            )
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].to_numpy(),
+                    "n_bins": mag2.shape[1],
+                    "dominant_bin": np.argmax(ac, axis=1) + 1,
+                    "centroid_mbin": np.where(ac_sum == 0, 0, centroid).astype(
+                        np.int64
+                    ),
+                    "parseval_err_ppm": np.where(time_energy == 0, 0, err).astype(
+                        np.int64
+                    ),
+                }
+            )
+
+    return _body(spark, sf_dir, wav.body_len).mapInPandas(
+        run,
+        "doc_id LONG, n_bins LONG, dominant_bin LONG,"
+        " centroid_mbin LONG, parseval_err_ppm LONG",
+    )
+
+
+def _query(codec: str):
+    return partial(decode_features, codec=codec)
 
 
 QUERIES = {
     "mm_binary_metadata": (binary_metadata, BINARY_METADATA_SQL),
-    "mm_decode_stub_features": (decode_stub_features, None),
+    "mm_decode_stub_features": (frame_sample_checksum, FRAME_SAMPLE_SQL),
     "mm_frame_sample_checksum": (frame_sample_checksum, FRAME_SAMPLE_SQL),
     "mm_byte_histogram": (byte_histogram_features, BYTE_HISTOGRAM_SQL),
     "mm_modality_routing": (modality_routing, MODALITY_ROUTING_SQL),
     "mm_phash_neardup": (phash_neardup, None),
-    "mm_ppm_decode_features": (ppm_decode_features, PPM_DECODE_SQL),
-    "mm_png_decode_features": (png_decode_features, PNG_DECODE_SQL),
-    "mm_wav_decode_features": (wav_decode_features, WAV_DECODE_SQL),
+    "mm_ppm_decode_features": (_query("ppm"), PPM_DECODE_SQL),
+    "mm_png_decode_features": (_query("png"), PNG_DECODE_SQL),
+    "mm_wav_decode_features": (_query("wav"), WAV_DECODE_SQL),
     "mm_audio_spectral_features": (audio_spectral_features, None),
-    "mm_video_frame_features": (video_decode_features, VIDEO_DECODE_SQL),
+    "mm_video_frame_features": (_query("video"), VIDEO_DECODE_SQL),
     "mm_byte_entropy": (byte_entropy, BYTE_ENTROPY_SQL),
-    "mm_jpeg_decode_features": (jpeg_decode_features, JPEG_DECODE_SQL),
-    "mm_mulaw_decode_features": (mulaw_decode_features, MULAW_DECODE_SQL),
-    "mm_alaw_decode_features": (alaw_decode_features, ALAW_DECODE_SQL),
-    "mm_gif_decode_features": (gif_decode_features, GIF_DECODE_SQL),
-    "mm_adpcm_decode_features": (adpcm_decode_features, ADPCM_DECODE_SQL),
-    "mm_bmp_rle8_decode_features": (bmp_decode_features, BMP_DECODE_SQL),
+    "mm_jpeg_decode_features": (_query("jpeg"), JPEG_DECODE_SQL),
+    "mm_mulaw_decode_features": (_query("mulaw"), MULAW_DECODE_SQL),
+    "mm_alaw_decode_features": (_query("alaw"), ALAW_DECODE_SQL),
+    "mm_gif_decode_features": (_query("gif"), GIF_DECODE_SQL),
+    "mm_adpcm_decode_features": (_query("adpcm"), ADPCM_DECODE_SQL),
+    "mm_bmp_rle8_decode_features": (_query("bmp"), BMP_DECODE_SQL),
 }

@@ -76,32 +76,6 @@ def test_ivf_recall_vs_brute_force(spark):
     assert overall >= floor, f"overall recall {overall:.3f} < floor {floor}"
 
 
-def test_decode_stub_matches_jvm_checksum(spark):
-    """The mapInPandas fake decoder's checksum equals the pure-JVM twin —
-    proves the Arrow batch path computes on the same bytes."""
-    from seamless_sharepoint_etl_spark.llm_ops import multimodal
-
-    py = {
-        r["doc_id"]: r["byte_checksum"]
-        for r in multimodal.decode_stub_features(spark, SF_DIR).collect()
-    }
-    jvm = {
-        r["doc_id"]: r["byte_checksum"]
-        for r in multimodal.frame_sample_checksum(spark, SF_DIR).collect()
-    }
-    assert py == jvm
-
-
-def test_decode_real_path_is_explicit_stub(spark):
-    import pytest
-
-    from seamless_sharepoint_etl_spark.llm_ops import multimodal
-
-    df = multimodal.with_payload(spark, SF_DIR)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_payload(df, real=True)
-
-
 def test_approx_distinct_within_rsd(spark):
     """agg_approx_distinct (rows-only for the driver): HLL estimate is
     within 3×rsd of the exact count."""
@@ -918,14 +892,13 @@ def test_rerank_two_stage_beats_pq_alone(spark):
 def test_ppm_decode_is_a_real_image_pipeline(spark):
     """The PPM path decodes real images: every payload is a valid P6
     file a reference parser accepts; a constant-color crafted image
-    decodes to exactly that color and a constant thumbnail; the corpus
-    pass is deterministic."""
+    decodes to exactly that color; the corpus pass is deterministic."""
     import numpy as np
 
     from seamless_sharepoint_etl_spark.llm_ops import multimodal as mm
 
     # payloads are valid P6: re-parse one with an independent reader
-    row = mm.with_ppm_payload(spark, SF_DIR).limit(1).collect()[0]
+    row = mm.payload(spark, SF_DIR, "ppm").limit(1).collect()[0]
     buf = bytes(row["payload"])
     assert buf.startswith(b"P6\n")
     header, rest = buf.split(b"\n", 1)
@@ -935,26 +908,22 @@ def test_ppm_decode_is_a_real_image_pipeline(spark):
     assert (w, h) == (mm.PPM_W, mm.PPM_H) and int(maxval) == 255
     assert len(pixels) == w * h * 3
 
-    rows = mm.ppm_decode_features(spark, SF_DIR).collect()
-    assert len(rows) == mm.with_ppm_payload(spark, SF_DIR).count()
+    rows = mm.decode_features(spark, SF_DIR, "ppm").collect()
+    assert len(rows) == mm.payload(spark, SF_DIR, "ppm").count()
     for r in rows[:5]:
         assert (r["width"], r["height"]) == (mm.PPM_W, mm.PPM_H)
         for c in ("r_mean_milli", "g_mean_milli", "b_mean_milli"):
             assert 0 <= r[c] <= 255_000
 
-    again = mm.ppm_decode_features(spark, SF_DIR).collect()
+    again = mm.decode_features(spark, SF_DIR, "ppm").collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
-    # crafted constant image through the same decode math: constant
-    # color in → exactly that color out, constant thumbnail
+    # crafted constant image through the codec: constant color in →
+    # exactly that color out
+    ppm = mm.CODECS["ppm"]
     img = np.full((mm.PPM_H, mm.PPM_W, 3), 77, np.uint8)
-    buf = f"P6\n{mm.PPM_W} {mm.PPM_H}\n255\n".encode() + img.tobytes()
-    nl3 = buf.index(b"\n", buf.index(b"\n", buf.index(b"\n") + 1) + 1)
-    arr = np.frombuffer(buf, np.uint8, count=mm.PPM_W * mm.PPM_H * 3, offset=nl3 + 1)
-    im = arr.reshape(mm.PPM_H, mm.PPM_W, 3).astype(np.int64)
-    assert list((im.sum(axis=(0, 1)) * 1000) // (mm.PPM_W * mm.PPM_H)) == [77000] * 3
-    pooled = im.reshape(mm.PPM_H // 4, 4, mm.PPM_W // 4, 4, 3).sum(axis=(1, 3)) // 16
-    assert (pooled == 77).all()
+    stats = ppm.stats(ppm.decode(ppm.encode([img.tobytes()])))
+    assert [int(stats[c][0]) for c in ("r_mean_milli", "g_mean_milli", "b_mean_milli")] == [77000] * 3
 
 
 def test_wav_decode_is_a_real_audio_pipeline(spark):
@@ -967,7 +936,7 @@ def test_wav_decode_is_a_real_audio_pipeline(spark):
 
     from seamless_sharepoint_etl_spark.llm_ops import multimodal as mm
 
-    row = mm.with_wav_payload(spark, SF_DIR).limit(1).collect()[0]
+    row = mm.payload(spark, SF_DIR, "wav").limit(1).collect()[0]
     buf = bytes(row["payload"])
     assert buf[0:4] == b"RIFF" and buf[8:12] == b"WAVE" and buf[36:40] == b"data"
     fmt, nch, rate = struct.unpack("<HHI", buf[20:28])
@@ -975,19 +944,16 @@ def test_wav_decode_is_a_real_audio_pipeline(spark):
     (data_len,) = struct.unpack("<I", buf[40:44])
     assert data_len == mm.WAV_N_SAMPLES * 2 == len(buf) - 44
 
-    rows = mm.wav_decode_features(spark, SF_DIR).collect()
-    assert len(rows) == mm.with_wav_payload(spark, SF_DIR).count()
-    again = mm.wav_decode_features(spark, SF_DIR).collect()
+    rows = mm.decode_features(spark, SF_DIR, "wav").collect()
+    assert len(rows) == mm.payload(spark, SF_DIR, "wav").count()
+    again = mm.decode_features(spark, SF_DIR, "wav").collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
-    # crafted constant signal through the same decode math
+    # crafted constant signal through the codec
+    wav = mm.CODECS["wav"]
     tone = np.full(mm.WAV_N_SAMPLES, 1234, np.int16)
-    buf = mm._wav_header() + tone.tobytes()
-    s = np.frombuffer(buf, np.int16, count=mm.WAV_N_SAMPLES, offset=44).astype(
-        np.int64
-    )
-    assert int(np.floor(np.sqrt((s * s).sum() / s.size))) == 1234
-    assert int(s.max()) == int(s.min()) == 1234
+    stats = wav.stats(wav.decode(wav.encode([tone.tobytes()])))
+    assert (stats["rms"][0], stats["peak"][0], stats["floor_s"][0]) == (1234,) * 3
 
 
 def test_wav_mean_milli_uses_floor_division_semantics():
@@ -1048,7 +1014,7 @@ def test_mulaw_decode_is_a_real_g711_codec(spark):
     assert (np.diff(lut[np.arange(0x00, 0x80)]) > 0).all()
     assert (np.diff(lut[np.arange(0x80, 0x100)]) < 0).all()
 
-    row = mm.with_mulaw_payload(spark, SF_DIR).limit(1).collect()[0]
+    row = mm.payload(spark, SF_DIR, "mulaw").limit(1).collect()[0]
     buf = bytes(row["payload"])
     assert buf[0:4] == b"RIFF" and buf[8:12] == b"WAVE"
     fmt, nch, rate = struct.unpack("<HHI", buf[20:28])
@@ -1059,16 +1025,13 @@ def test_mulaw_decode_is_a_real_g711_codec(spark):
 
     # crafted clip: every codeword 0x00 -> every sample is the spec
     # maximum-magnitude negative value
-    clip = mm._g711_header(
-        mm._MULAW_FMT, mm.MULAW_N_SAMPLES, mm.MULAW_RATE
-    ) + bytes(mm.MULAW_N_SAMPLES)
-    codes = np.frombuffer(clip, np.uint8, count=mm.MULAW_N_SAMPLES, offset=56)
-    s = lut[codes]
+    mulaw = mm.CODECS["mulaw"]
+    s = mulaw.decode(mulaw.encode([bytes(mm.MULAW_N_SAMPLES)]))
     assert int(s.max()) == int(s.min()) == -32124
 
-    rows = mm.mulaw_decode_features(spark, SF_DIR).collect()
-    assert len(rows) == mm.with_mulaw_payload(spark, SF_DIR).count()
-    again = mm.mulaw_decode_features(spark, SF_DIR).collect()
+    rows = mm.decode_features(spark, SF_DIR, "mulaw").collect()
+    assert len(rows) == mm.payload(spark, SF_DIR, "mulaw").count()
+    again = mm.decode_features(spark, SF_DIR, "mulaw").collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
@@ -1117,29 +1080,30 @@ def test_alaw_decode_is_a_real_g711_codec(spark):
     assert (np.diff(lut_by_u[:128]) < 0).all()
     assert (np.diff(lut_by_u[128:]) > 0).all()
 
-    row = mm.with_alaw_payload(spark, SF_DIR).limit(1).collect()[0]
+    row = mm.payload(spark, SF_DIR, "alaw").limit(1).collect()[0]
     buf = bytes(row["payload"])
     fmt, nch, rate = struct.unpack("<HHI", buf[20:28])
     assert (fmt, nch, rate) == (mm._ALAW_FMT, 1, mm.MULAW_RATE)
     assert buf[36:40] == b"fact" and buf[48:52] == b"data"
 
-    rows = mm.alaw_decode_features(spark, SF_DIR).collect()
+    rows = mm.decode_features(spark, SF_DIR, "alaw").collect()
     assert rows and all(r["floor_s"] <= -8 and r["peak"] <= -8 for r in rows)
 
 
 def test_g711_payload_validation_raises_labeled_error():
-    """Corrupt G.711 WAV payloads must raise the labeled
-    G711DecodeError (never bare assert/struct.error/IndexError —
-    ADVICE r7, matching the JPEG/GIF explicit-raise policy)."""
+    """Corrupt G.711 WAV payloads must raise the labeled DecodeError
+    (never bare assert/struct.error/IndexError — ADVICE r7, the
+    explicit-raise policy every codec shares)."""
     import numpy as np
     import pytest
 
     from seamless_sharepoint_etl_spark.llm_ops import multimodal as mm
 
-    n = 64
-    good = mm._g711_header(mm._MULAW_FMT, n, mm.MULAW_RATE) + bytes(n)
-    codes = mm._g711_codes(good, mm._MULAW_FMT)
-    assert isinstance(codes, np.ndarray) and codes.size == n
+    n = mm.MULAW_N_SAMPLES
+    mulaw, alaw = mm.CODECS["mulaw"], mm.CODECS["alaw"]
+    good = mulaw.encode([bytes(n)])[0]
+    samples = mulaw.decode([good])
+    assert isinstance(samples, np.ndarray) and samples.shape == (1, n)
 
     bad = [
         b"",  # too short
@@ -1148,16 +1112,16 @@ def test_g711_payload_validation_raises_labeled_error():
         good[:36] + b"fakt" + good[40:],  # fact chunk missing
         good[:48] + b"dat@" + good[52:],  # data chunk missing
         good[: 56 + n - 8],  # truncated data
-        mm._g711_header(mm._ALAW_FMT, n, mm.MULAW_RATE) + bytes(n),  # law mismatch
+        alaw.encode([bytes(n)])[0],  # law mismatch
     ]
     for buf in bad:
-        with pytest.raises(mm.G711DecodeError):
-            mm._g711_codes(buf, mm._MULAW_FMT)
+        with pytest.raises(mm.DecodeError):
+            mulaw.decode([buf])
     # fact/data disagreement: patch the fact count in place
     tampered = bytearray(good)
     tampered[44:48] = (n + 1).to_bytes(4, "little")
-    with pytest.raises(mm.G711DecodeError):
-        mm._g711_codes(bytes(tampered), mm._MULAW_FMT)
+    with pytest.raises(mm.DecodeError):
+        mulaw.decode([bytes(tampered)])
 
 
 def test_adpcm_decode_is_a_real_stateful_codec(spark):
@@ -1208,6 +1172,10 @@ def test_adpcm_decode_is_a_real_stateful_codec(spark):
             recon.append(pred)
         return codes, recon
 
+    def decode(codes, pred0, idx0):  # the batch kernel on one row
+        codes = np.asarray(codes, np.uint8).reshape(1, -1)
+        return mm._adpcm_decode_batch(codes, [pred0], [idx0])[0]
+
     rng_t = np.arange(256)
     for signal in (
         (3000 * np.sin(rng_t / 7.0)).astype(np.int64),  # tone
@@ -1215,20 +1183,20 @@ def test_adpcm_decode_is_a_real_stateful_codec(spark):
         np.where(rng_t % 2 == 0, 20000, -20000),  # worst-case alternation
     ):
         codes, recon = spec_encode(signal)
-        got = mm._adpcm_decode(np.asarray(codes, np.uint8), 0, 0)
+        got = decode(codes, 0, 0)
         assert got.tolist() == recon, "decoder diverged from spec encoder"
 
     # clamp pins: all-7 codes saturate pred upward and idx to 88;
     # all-15 codes then saturate downward; code 0 walks idx back to 0
-    up = mm._adpcm_decode(np.full(200, 7, np.uint8), 0, 0)
+    up = decode(np.full(200, 7, np.uint8), 0, 0)
     assert up.max() == 32767, "positive predictor clamp never hit"
-    down = mm._adpcm_decode(np.full(200, 15, np.uint8), 0, 88)
+    down = decode(np.full(200, 15, np.uint8), 0, 88)
     assert down.min() == -32768, "negative predictor clamp never hit"
-    calm = mm._adpcm_decode(np.zeros(100, np.uint8), 0, 88)
+    calm = decode(np.zeros(100, np.uint8), 0, 88)
     assert calm.size == 101  # idx walked 88 -> 0 without error
 
     # staged payload framing (independent re-parse)
-    row = mm.with_adpcm_payload(spark, SF_DIR).limit(1).collect()[0]
+    row = mm.payload(spark, SF_DIR, "adpcm").limit(1).collect()[0]
     buf = bytes(row["payload"])
     assert buf[0:4] == b"RIFF" and buf[8:12] == b"WAVE"
     fmt, nch, rate = struct.unpack("<HHI", buf[20:28])
@@ -1240,24 +1208,25 @@ def test_adpcm_decode_is_a_real_stateful_codec(spark):
     assert buf[40:44] == b"fact" and buf[52:56] == b"data"
     assert len(buf) == 64 + mm.ADPCM_DATA_BYTES
 
-    rows = mm.adpcm_decode_features(spark, SF_DIR).collect()
-    assert len(rows) == mm.with_adpcm_payload(spark, SF_DIR).count()
+    rows = mm.decode_features(spark, SF_DIR, "adpcm").collect()
+    assert len(rows) == mm.payload(spark, SF_DIR, "adpcm").count()
     assert all(r["n_samples"] == mm.ADPCM_N_SAMPLES for r in rows)
-    again = mm.adpcm_decode_features(spark, SF_DIR).collect()
+    again = mm.decode_features(spark, SF_DIR, "adpcm").collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
 def test_adpcm_payload_validation_raises_labeled_error(spark):
-    """Corrupt IMA ADPCM payloads raise the labeled AdpcmDecodeError
+    """Corrupt IMA ADPCM payloads raise the labeled DecodeError
     (explicit-raise policy), including every framing-field defect and
     an out-of-range initial step index."""
     import pytest
 
     from seamless_sharepoint_etl_spark.llm_ops import multimodal as mm
 
-    row = mm.with_adpcm_payload(spark, SF_DIR).limit(1).collect()[0]
+    adpcm = mm.CODECS["adpcm"]
+    row = mm.payload(spark, SF_DIR, "adpcm").limit(1).collect()[0]
     good = bytes(row["payload"])
-    mm._adpcm_block(good)  # sanity: the real payload parses
+    adpcm.decode([good])  # sanity: the real payload parses
 
     tampers = [
         b"",
@@ -1270,12 +1239,12 @@ def test_adpcm_payload_validation_raises_labeled_error(spark):
         good[: len(good) - 8],  # truncated nibbles
     ]
     for buf in tampers:
-        with pytest.raises(mm.AdpcmDecodeError):
-            mm._adpcm_block(buf)
+        with pytest.raises(mm.DecodeError):
+            adpcm.decode([buf])
     bad_idx = bytearray(good)
     bad_idx[62] = 89  # step index out of range
-    with pytest.raises(mm.AdpcmDecodeError):
-        mm._adpcm_block(bytes(bad_idx))
+    with pytest.raises(mm.DecodeError):
+        adpcm.decode([bytes(bad_idx)])
 
 
 def test_bmp_rle8_is_a_real_escape_codec(spark):
@@ -1286,7 +1255,7 @@ def test_bmp_rle8_is_a_real_escape_codec(spark):
     just values; (b) random, run-heavy, and constant images round-trip
     bit-exactly through the production encoder+decoder, including runs
     past the 255 count cap; (c) every truncation of a real payload's
-    pixel data raises the labeled BmpDecodeError; (d) header-field
+    pixel data raises the labeled DecodeError; (d) header-field
     tampering raises; (e) corpus decode is deterministic."""
     import struct
 
@@ -1325,7 +1294,7 @@ def test_bmp_rle8_is_a_real_escape_codec(spark):
         assert np.array_equal(mm._rle8_decode(bytes(enc), w, h), px)
 
     # (c) truncation sweep over a real payload's pixel data
-    row = mm.with_bmp_payload(spark, SF_DIR).limit(1).collect()[0]
+    row = mm.payload(spark, SF_DIR, "bmp").limit(1).collect()[0]
     buf = bytes(row["payload"])
     assert buf[0:2] == b"BM"
     size_img = struct.unpack("<I", buf[34:38])[0]
@@ -1333,26 +1302,26 @@ def test_bmp_rle8_is_a_real_escape_codec(spark):
     full = mm._rle8_decode(pixel, w, h)
     assert full.size == w * h
     for cut in range(1, len(pixel)):
-        with pytest.raises(mm.BmpDecodeError):
+        with pytest.raises(mm.DecodeError):
             mm._rle8_decode(pixel[:cut], w, h)
 
     # (d) structural defects raise the labeled error
-    with pytest.raises(mm.BmpDecodeError):
+    with pytest.raises(mm.DecodeError):
         mm._rle8_decode(b"", w, h)  # empty data: missing EOB
-    with pytest.raises(mm.BmpDecodeError):
+    with pytest.raises(mm.DecodeError):
         mm._rle8_decode(bytes([255, 7, 0, 1]), 4, 2)  # run overflows row
-    with pytest.raises(mm.BmpDecodeError):
+    with pytest.raises(mm.DecodeError):
         mm._rle8_decode(bytes([0, 2, 9, 9, 0, 1]), 4, 2)  # delta off-image
     assert struct.unpack("<I", buf[30:34])[0] == 1  # BI_RLE8 on disk
 
     # (e) corpus determinism
-    rows = mm.bmp_decode_features(spark, SF_DIR).collect()
-    assert len(rows) == mm.with_bmp_payload(spark, SF_DIR).count()
+    rows = mm.decode_features(spark, SF_DIR, "bmp").collect()
+    assert len(rows) == mm.payload(spark, SF_DIR, "bmp").count()
     assert all(
         r["n_pixels"] == w * h and r["width"] == w and r["height"] == h
         for r in rows
     )
-    again = mm.bmp_decode_features(spark, SF_DIR).collect()
+    again = mm.decode_features(spark, SF_DIR, "bmp").collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
@@ -1366,7 +1335,7 @@ def test_gif_decode_is_a_real_lzw_codec(spark):
     round-trip bit-exactly, with the 384-pixel corpus shape crossing
     the 9->10 width-growth boundary both sides must synchronize on;
     (d) EVERY truncation of a real payload raises the labeled
-    GifDecodeError; (e) corpus decode is deterministic."""
+    DecodeError; (e) corpus decode is deterministic."""
     import numpy as np
     import pytest
 
@@ -1398,22 +1367,22 @@ def test_gif_decode_is_a_real_lzw_codec(spark):
     assert mm._GIF_BODY_LEN + mm._GIF_EOI + 1 > 512
 
     # (d) corruption rejection on a real payload
-    row = mm.with_gif_payload(spark, SF_DIR).limit(1).collect()[0]
+    row = mm.payload(spark, SF_DIR, "gif").limit(1).collect()[0]
     buf = bytes(row["payload"])
     assert buf[:6] == b"GIF87a" and buf[-1] == 0x3B
     for cut in range(0, len(buf)):
-        with pytest.raises(mm.GifDecodeError):
+        with pytest.raises(mm.DecodeError):
             mm._decode_gif(buf[:cut])
     w, h, idx = mm._decode_gif(buf)
     assert (w, h, idx.size) == (mm.GIF_W, mm.GIF_H, mm._GIF_BODY_LEN)
 
     # (e) corpus determinism + schema
-    rows = mm.gif_decode_features(spark, SF_DIR).collect()
-    assert len(rows) == mm.with_gif_payload(spark, SF_DIR).count()
+    rows = mm.decode_features(spark, SF_DIR, "gif").collect()
+    assert len(rows) == mm.payload(spark, SF_DIR, "gif").count()
     for r in rows[:5]:
         assert (r["width"], r["height"]) == (mm.GIF_W, mm.GIF_H)
         assert 32 <= r["idx_min"] <= r["idx_max"] <= 126
-    again = mm.gif_decode_features(spark, SF_DIR).collect()
+    again = mm.decode_features(spark, SF_DIR, "gif").collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
@@ -1425,26 +1394,25 @@ def test_video_decode_frame_sampling_math(spark):
 
     from seamless_sharepoint_etl_spark.llm_ops import multimodal as mm
 
-    row = mm.with_video_payload(spark, SF_DIR).limit(1).collect()[0]
+    row = mm.payload(spark, SF_DIR, "video").limit(1).collect()[0]
     buf = bytes(row["payload"])
     assert buf[:4] == b"RAWV"
     assert (buf[4], buf[5], buf[6]) == (mm.VID_W, mm.VID_H, mm.VID_FRAMES)
     assert len(buf) == 7 + mm.VID_W * mm.VID_H * mm.VID_FRAMES
 
-    rows = mm.video_decode_features(spark, SF_DIR).collect()
+    rows = mm.decode_features(spark, SF_DIR, "video").collect()
     for r in rows[:5]:
         assert r["n_frames"] == mm.VID_FRAMES
         assert r["n_sampled"] == len(range(0, mm.VID_FRAMES, mm.VID_SAMPLE_EVERY))
 
     # crafted: frames alternate all-10 / all-30 → sampled frames (stride
     # 2) are all-10, motion 0; with stride 1 motion would be 20
-    vid = np.zeros((mm.VID_FRAMES, mm.VID_H, mm.VID_W), np.int64)
+    video = mm.CODECS["video"]
+    vid = np.zeros((mm.VID_FRAMES, mm.VID_H, mm.VID_W), np.uint8)
     vid[0::2] = 10
     vid[1::2] = 30
-    sampled = vid[:: mm.VID_SAMPLE_EVERY]
-    assert int(sampled.sum() * 1000 // sampled.size) == 10_000
-    diffs = np.abs(sampled[1:] - sampled[:-1])
-    assert int(diffs.sum() * 1000 // diffs.size) == 0
+    stats = video.stats(video.decode(video.encode([vid.tobytes()])))
+    assert (stats["luma_milli"][0], stats["motion_milli"][0]) == (10_000, 0)
 
 
 def test_session2_ops_survive_degenerate_docs(spark, tmp_path):
@@ -1490,11 +1458,11 @@ def test_session2_ops_survive_degenerate_docs(spark, tmp_path):
 
     # decode paths: NULL text coalesces to ' ' padding -> still valid
     # PPM/WAV/RAWV files with full-size bodies
-    for r in multimodal.ppm_decode_features(spark, d).collect():
+    for r in multimodal.decode_features(spark, d, "ppm").collect():
         assert (r["width"], r["height"]) == (multimodal.PPM_W, multimodal.PPM_H)
-    for r in multimodal.wav_decode_features(spark, d).collect():
+    for r in multimodal.decode_features(spark, d, "wav").collect():
         assert r["n_samples"] == multimodal.WAV_N_SAMPLES
-    for r in multimodal.video_decode_features(spark, d).collect():
+    for r in multimodal.decode_features(spark, d, "video").collect():
         assert r["n_frames"] == multimodal.VID_FRAMES
 
 
@@ -1783,7 +1751,7 @@ def test_audio_spectral_matches_explicit_dft(spark):
     }
     payloads = {
         r["doc_id"]: bytes(r["payload"])
-        for r in multimodal.with_wav_payload(spark, SF_DIR).limit(25).collect()
+        for r in multimodal.payload(spark, SF_DIR, "wav").limit(25).collect()
     }
     assert rows and payloads
     for doc_id, buf in payloads.items():
@@ -2161,13 +2129,13 @@ def test_png_decode_roundtrips_all_five_filters(spark):
         ).astype(np.uint8),
         np.full((mm.PNG_H, mm.PNG_W, 3), 200, np.uint8),
     ):
-        buf = mm._encode_png(img)
+        buf = mm._png_encode([img.tobytes()])[0]
         assert buf[:8] == mm._PNG_SIG
-        back = mm._decode_png(buf)
+        back = mm._png_decode([buf])[0]
         assert (back == img).all()
 
     # filter-type coverage: decode the raw scanline stream directly
-    buf = mm._encode_png(rng.randint(0, 256, (mm.PNG_H, mm.PNG_W, 3)).astype(np.uint8))
+    buf = mm._png_encode([rng.randint(0, 256, mm._PNG_BODY_LEN).astype(np.uint8).tobytes()])[0]
     import struct
 
     pos, idat = 8, bytearray()
@@ -2183,21 +2151,76 @@ def test_png_decode_roundtrips_all_five_filters(spark):
     assert fts == {0, 1, 2, 3, 4}
 
     # CRC tamper detection
-    bad = bytearray(mm._encode_png(np.zeros((mm.PNG_H, mm.PNG_W, 3), np.uint8)))
+    png = mm.CODECS["png"]
+    bad = bytearray(png.encode([bytes(mm._PNG_BODY_LEN)])[0])
     bad[40] ^= 0xFF  # flip a byte inside IDAT
-    with pytest.raises(AssertionError, match="CRC"):
-        mm._decode_png(bytes(bad))
+    with pytest.raises(mm.DecodeError, match="CRC"):
+        png.decode([bytes(bad)])
 
     # corpus: PNG means == PPM means (same pixels, different codec)
     png = {
         r["doc_id"]: (r["r_mean_milli"], r["g_mean_milli"], r["b_mean_milli"])
-        for r in mm.png_decode_features(spark, SF_DIR).collect()
+        for r in mm.decode_features(spark, SF_DIR, "png").collect()
     }
     ppm = {
         r["doc_id"]: (r["r_mean_milli"], r["g_mean_milli"], r["b_mean_milli"])
-        for r in mm.ppm_decode_features(spark, SF_DIR).collect()
+        for r in mm.decode_features(spark, SF_DIR, "ppm").collect()
     }
     assert png == ppm and len(png) > 0
+
+
+def _codec_names() -> list:
+    from seamless_sharepoint_etl_spark.llm_ops import multimodal as mm
+
+    return sorted(mm.CODECS)
+
+
+@pytest.mark.parametrize("codec", _codec_names())
+def test_every_codec_rejects_a_cut_or_foreign_payload(codec):
+    """Each codec's decode raises the one labeled DecodeError — never a
+    bare assert (stripped under -O), struct.error or IndexError — on a
+    payload cut in half and on one whose first magic byte is flipped;
+    the intact payload decodes."""
+    import numpy as np
+
+    from seamless_sharepoint_etl_spark.llm_ops import multimodal as mm
+
+    c = mm.CODECS[codec]
+    rng = np.random.RandomState(3)
+    good = c.encode([bytes(rng.randint(32, 127, c.body_len, dtype=np.uint8))])[0]
+    c.stats(c.decode([good]))
+    for bad in (good[: len(good) // 2], bytes([good[0] ^ 0xFF]) + good[1:]):
+        with pytest.raises(mm.DecodeError):
+            c.decode([bad])
+
+
+def test_multimodal_has_one_error_class_and_no_payload_asserts():
+    """One ``DecodeError`` serves every codec, and the module's only
+    ``assert`` statements are the two import-time invariants of
+    ``_jpeg_pattern_constants`` — no payload check can vanish under
+    ``python -O``."""
+    import ast
+
+    from seamless_sharepoint_etl_spark.llm_ops import multimodal as mm
+
+    with open(mm.__file__) as fh:
+        tree = ast.parse(fh.read())
+    errors = [
+        n.name
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ClassDef)
+        and any(getattr(b, "id", None) == "ValueError" for b in n.bases)
+    ]
+    assert errors == ["DecodeError"], errors
+    owners = [
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Assert)
+    ]
+    assert owners == ["_jpeg_pattern_constants"] * 2, owners
+    assert sum(isinstance(n, ast.Assert) for n in ast.walk(tree)) == 2
 
 
 def test_jpeg_decode_is_a_real_baseline_codec(spark):
@@ -2268,29 +2291,25 @@ def test_jpeg_decode_is_a_real_baseline_codec(spark):
     assert stuffed, "no stuffed 0xFF00 produced in 80 random images"
 
     # (d) corruption rejection: EVERY possible truncation point must
-    # raise the decoder's labeled JpegDecodeError — never IndexError /
+    # raise the decoder's labeled DecodeError — never IndexError /
     # struct.error from an unguarded read (incl. cuts right after an
     # 0xFF in the entropy stream and cuts inside marker headers), and
     # never a bare assert (PYTHONOPTIMIZE strips those — ADVICE r6)
     for cut in range(0, len(buf)):
-        with pytest.raises(mm.JpegDecodeError):
+        with pytest.raises(mm.DecodeError):
             mm._decode_jpeg(buf[:cut])
     bad = bytearray(buf)
     bad[3] ^= 0xFF  # corrupt the DQT marker byte
-    with pytest.raises(mm.JpegDecodeError):
+    with pytest.raises(mm.DecodeError):
         mm._decode_jpeg(bytes(bad))
 
     # ZRL coverage: patterns 4/5/6 need 1, 2 and 3 ZRL symbols
     assert {20: 3} in [mm._JPEG_PATTERNS[4]] and 63 in mm._JPEG_PATTERNS[6]
 
     # (e) corpus features match the oracle decomposition per doc
-    rows = mm.jpeg_decode_features(spark, SF_DIR).collect()
+    rows = mm.decode_features(spark, SF_DIR, "jpeg").collect()
     assert rows
-    body_rows = (
-        mm.with_jpeg_payload(spark, SF_DIR)
-        .select("doc_id", "payload")
-        .collect()
-    )
+    body_rows = mm.payload(spark, SF_DIR, "jpeg").collect()
     payloads = {r["doc_id"]: bytes(r["payload"]) for r in body_rows}
     for r in rows[:25]:
         img3, ds3, nz3 = mm._decode_jpeg(payloads[r["doc_id"]])

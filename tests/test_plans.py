@@ -69,11 +69,31 @@ def test_udf_paths_are_arrow_not_pickle(spark):
     for name, marker in (
         ("udf_scalar_pandas", "ArrowEvalPython"),
         ("udf_apply_in_pandas", "FlatMapGroupsInPandas"),
-        ("mm_decode_stub_features", "MapInPandas"),
+        ("mm_png_decode_features", "MapInPandas"),
     ):
         plan = _plan(spark, name)
         assert marker in plan, (name, plan[:500])
         assert "BatchEvalPython" not in plan, name  # no pickled row UDFs
+
+
+def test_codec_queries_fuse_one_python_node_over_the_parallel_body(spark):
+    """Every codec query encodes and decodes inside ONE MapInPandas
+    (two chained Python nodes ship every payload JVM→Python twice), and
+    every one reads the round-robin repartitioned ``documents`` so the
+    decode runs on every core — ADPCM once read a single task."""
+    from seamless_sharepoint_etl_spark.llm_ops import multimodal as mm
+
+    bound = {
+        name: fn.keywords["codec"]
+        for name, (fn, _sql) in mm.QUERIES.items()
+        if getattr(fn, "func", None) is mm.decode_features
+    }
+    assert sorted(bound.values()) == sorted(mm.CODECS) and len(bound) == 10
+    for name in bound:
+        plan = _plan(spark, name)
+        assert plan.count("MapInPandas") == 1, (name, plan)
+        assert "BatchEvalPython" not in plan, name
+        assert "RoundRobinPartitioning" in plan, (name, plan)
 
 
 def test_join_strategy_hints_respected(spark):
