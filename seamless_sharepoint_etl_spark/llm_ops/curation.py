@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io, portable
+from ..operators.windows import running_sums
 from .dedup import _SHINGLES_SQL, _hashed_shingles
 from .text import _token_relation
 
@@ -250,7 +251,6 @@ UNIGRAM_LOGPROB_SQL = _unigram_logprob_sql()
 # ---------------------------------------------------------------------------
 
 CTX_TOKENS = 512
-_PACK_BUCKETS = 64
 
 
 def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -260,12 +260,8 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     and how many windows it spans — what a training-data loader needs
     to build packed sequences without materializing them.
 
-    Scale shape: the global running sum is two-phase — bucket docs by
-    doc_id range (bucket order == concat order), aggregate per-bucket
-    token sums (parallel; result is ``_PACK_BUCKETS`` rows), window
-    over that tiny relation for bucket start offsets, broadcast them
-    back, and run the exact per-doc prefix sum partitioned by bucket.
-    The naive single ``Window.orderBy(doc_id)`` would serialize the
+    The global running token sum is ``windows.running_sums`` over
+    doc_id, not a single ``Window.orderBy(doc_id)`` that would put the
     whole corpus through one task.
     """
     from pyspark import StorageLevel
@@ -274,41 +270,17 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = d.select(
         "doc_id", F.size(F.split(F.col("text"), " ")).alias("n_tokens")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # bucket width from the id range; one tiny agg, broadcast everywhere
-    width = docs.agg(
-        (F.floor(F.max("doc_id") / _PACK_BUCKETS) + 1).alias("bw")
-    )
-    b = docs.crossJoin(F.broadcast(width)).withColumn(
-        "bkt", F.expr("doc_id div bw")
-    )
-    # bucket start offsets WITHOUT a window: the bucket relation is
-    # _PACK_BUCKETS rows at any corpus size, so the strictly-before
-    # prefix sum is a triangular self-join (O(buckets^2) on a 64-row
-    # relation) — no global-ORDER window, so no single-partition
-    # WindowExec appears anywhere in the plan (a partitionBy(lit(0))
-    # decoy does NOT work: Catalyst folds the constant key away and
-    # the warning returns)
-    bt = b.groupBy("bkt").agg(F.sum("n_tokens").alias("bt"))
-    prev = bt.select(F.col("bkt").alias("pbkt"), F.col("bt").alias("pbt"))
-    starts = (
-        bt.join(prev, F.col("pbkt") < F.col("bkt"), "left")
-        .groupBy("bkt")
-        .agg(F.coalesce(F.sum("pbt"), F.lit(0)).alias("bkt_start"))
-    )
-    wd = Window.partitionBy("bkt").orderBy("doc_id")
-    return (
-        b.join(F.broadcast(starts), "bkt")
-        .withColumn("end_off", F.col("bkt_start") + F.sum("n_tokens").over(wd))
-        .select(
-            "doc_id",
-            "n_tokens",
-            (F.col("end_off") - F.col("n_tokens")).alias("offset"),
-            F.expr(f"(end_off - n_tokens) div {CTX_TOKENS}").alias("bin_id"),
-            F.expr(
-                f"((end_off - 1) div {CTX_TOKENS})"
-                f" - ((end_off - n_tokens) div {CTX_TOKENS}) + 1"
-            ).alias("bins_spanned"),
-        )
+    return running_sums(
+        docs, F.col("doc_id"), [], {"end_off": F.col("n_tokens")}
+    ).select(
+        "doc_id",
+        "n_tokens",
+        (F.col("end_off") - F.col("n_tokens")).alias("offset"),
+        F.expr(f"(end_off - n_tokens) div {CTX_TOKENS}").alias("bin_id"),
+        F.expr(
+            f"((end_off - 1) div {CTX_TOKENS})"
+            f" - ((end_off - n_tokens) div {CTX_TOKENS}) + 1"
+        ).alias("bins_spanned"),
     )
 
 

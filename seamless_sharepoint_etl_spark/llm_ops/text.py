@@ -18,11 +18,12 @@ corpora the marker lists would come from per-language frequency tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
 from ..artifacts import artifact
+from ..operators.windows import running_sums
 
 STOPWORDS = ("the", "a", "of")
 
@@ -647,8 +648,6 @@ TOKEN_BUDGET_DEFAULT_SHARE = 0.03
 # full 32-bit range (priority order, not a percent gate). The inner
 # mod keeps the product < 2^63 for any doc_id.
 _ALLOC_HASH = "((doc_id % 1000000) * 2654435761) % 4294967296"
-_ALLOC_BUCKETS = 64
-_ALLOC_BUCKET_WIDTH = 4294967296 // _ALLOC_BUCKETS
 
 
 def token_budget_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -658,34 +657,23 @@ def token_budget_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pretraining mixture turns target weights into an actual document
     manifest.
 
-    Scale shape — the naive form is a running sum over ONE window per
-    language, which serializes each language through a single task (a
-    100 TB corpus is mostly one language). Instead the prefix sum is
-    two-phase: bucket docs by priority-hash range (bucket order ==
-    priority order), aggregate per-bucket token sums (parallel, tiny
-    result: langs × 64 rows), window over THAT to get each bucket's
-    starting offset, broadcast the offsets back, and run the exact
-    per-doc running sum partitioned by (lang, bucket) — 64-way
-    parallel per language, same selection as the global scan.
+    The running sum per language is ``windows.running_sums`` in (pr,
+    doc_id) order: one window per language would put each language
+    (a 100 TB corpus is mostly one) through a single task.
     """
     d = io.load_table_parallel(spark, sf_dir, "documents")
-    # persist the narrow (id, lang, tokens, pr, bkt) relation: it feeds
-    # both the bucket-sum agg and the final scan, and without it each
-    # reference re-reads the wide `text` column from parquet — at
-    # corpus scale that doubles the dominant IO for no reason. ~32
-    # bytes/row, orders of magnitude smaller than the corpus.
+    # persist the narrow (id, lang, tokens, pr) relation: running_sums
+    # and the total read it four times, and without it each read
+    # re-reads the wide `text` column from parquet. ~32 bytes/row,
+    # orders of magnitude smaller than the corpus.
     from pyspark import StorageLevel
 
-    docs = (
-        d.select(
-            "doc_id",
-            "lang",
-            F.size(_tokens()).alias("tokens"),
-            F.expr(_ALLOC_HASH).alias("pr"),
-        )
-        .withColumn("bkt", F.expr(f"pr div {_ALLOC_BUCKET_WIDTH}"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    docs = d.select(
+        "doc_id",
+        "lang",
+        F.size(_tokens()).alias("tokens"),
+        F.expr(_ALLOC_HASH).alias("pr"),
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     total = docs.agg(F.sum("tokens").alias("g_total"))
     share = F.coalesce(
         *[
@@ -694,24 +682,14 @@ def token_budget_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         F.lit(TOKEN_BUDGET_DEFAULT_SHARE),
     )
-    bucket_sums = docs.groupBy("lang", "bkt").agg(
-        F.sum("tokens").alias("bkt_tokens")
-    )
-    wb = (
-        Window.partitionBy("lang")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    starts = bucket_sums.select(
-        "lang",
-        "bkt",
-        F.coalesce(F.sum("bkt_tokens").over(wb), F.lit(0)).alias("bkt_start"),
-    )
-    wd = Window.partitionBy("lang", "bkt").orderBy("pr", "doc_id")
     return (
-        docs.join(F.broadcast(starts), ["lang", "bkt"])
-        .crossJoin(F.broadcast(total))
-        .withColumn("cum_tokens", F.col("bkt_start") + F.sum("tokens").over(wd))
+        running_sums(
+            docs.crossJoin(F.broadcast(total)),
+            F.col("pr"),
+            ["doc_id"],
+            {"cum_tokens": F.col("tokens")},
+            by=["lang"],
+        )
         .withColumn("lang_budget", F.floor(F.col("g_total") * share))
         .filter(F.col("cum_tokens") <= F.col("lang_budget"))
         .select("doc_id", "lang", "tokens", "cum_tokens", "lang_budget")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io, portable
+from .windows import running_sums
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,7 +846,6 @@ GROUP BY 1, 2
 
 
 _ED_BUCKETS = 8
-_ED_RANGE_BINS = 64
 
 
 def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -854,66 +854,19 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every bucket holds the same row count, so bucket edges ARE the
     octiles).
 
-    Needs each row's exact global rank, which is the classic
-    single-task-window trap. Two-phase instead: fetch the 3-scalar
-    bounds (min/max/count) driver-side — the scalar-frontier pattern,
-    one 1-row job — so binning into {_ED_RANGE_BINS} cents-ranges is
-    map-side pure literals (binning is monotone, so bin order == value
-    order); aggregate per-bin counts (≤64 rows), prefix-sum them at the
-    driver (no global-ORDER window anywhere in the plan), broadcast the
-    offsets back, and rank within bins partitioned. bucket =
-    (rank-1)*K div N is pure integer arithmetic on cents, so both
-    engines agree bit-for-bit. At 100 TB: two pruned scans (counts +
-    rank) plus the 1-row bounds pass, one bin-keyed shuffle, one
-    bin-partitioned window — same shape as the sequence-packing prefix
-    sum. (Earlier drafts broadcast the bounds row / triangular-joined
-    the counts instead; Catalyst re-derived the aggregates under every
-    reference — 4 corpus scans and 3 BroadcastNestedLoopJoins for what
-    are ≤65 scalars — the plan golden pins this shape.)
+    Each row's exact global rank is a ``windows.running_sums`` row
+    number over (cents, o_orderkey); bucket = (rank-1)*K div N is pure
+    integer arithmetic on cents, so both engines agree bit-for-bit.
+    Empty input gives zero rows.
     """
     o = io.load_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     c = o.select("o_orderkey", cents.alias("cents"))
-    lo, hi, n_total = c.agg(
-        F.min("cents"), F.max("cents"), F.count(F.lit(1))
-    ).first()
-    if not n_total:  # empty relation: bounds are NULL — emit empty, don't crash
-        return spark.createDataFrame(
-            [],
-            "bucket BIGINT, n_rows BIGINT, lo_cents BIGINT,"
-            " hi_cents BIGINT, sum_cents BIGINT",
-        )
-    span = max(hi - lo + 1, 1)
-    b = c.select(
-        "o_orderkey",
-        "cents",
-        F.lit(int(n_total)).alias("n_total"),
-        F.expr(
-            f"least(((cents - {int(lo)}) * {_ED_RANGE_BINS})"
-            f" div {int(span)}, {_ED_RANGE_BINS - 1})"
-        ).alias("bin"),
-    )
-    # per-bin counts collapse to ≤64 rows — fetch them and take the
-    # strictly-before prefix sum driver-side (a stat frontier, same as
-    # the bounds row): the triangular-self-join alternative made
-    # Catalyst re-derive the bin-count aggregate under each reference
-    # (two extra corpus scans for a 64-row cumsum)
-    bt = sorted(
-        (r[0], r[1])
-        for r in b.groupBy("bin").agg(F.count(F.lit(1)).alias("bn")).collect()
-    )
-    acc, rows = 0, []
-    for bin_id, bn in bt:
-        rows.append((bin_id, acc))
-        acc += bn
-    offsets = spark.createDataFrame(rows, "bin BIGINT, bin_start BIGINT")
-    wd = Window.partitionBy("bin").orderBy("cents", "o_orderkey")
-    ranked = (
-        b.join(F.broadcast(offsets), "bin")
-        .withColumn("grank", F.col("bin_start") + F.row_number().over(wd))
-        .withColumn(
-            "bucket", F.expr(f"((grank - 1) * {_ED_BUCKETS}) div n_total + 1")
-        )
+    n = c.agg(F.count(F.lit(1)).alias("n_total"))
+    ranked = running_sums(
+        c.crossJoin(F.broadcast(n)), F.col("cents"), ["o_orderkey"], {"grank": F.lit(1)}
+    ).withColumn(
+        "bucket", F.expr(f"((grank - 1) * {_ED_BUCKETS}) div n_total + 1")
     )
     return (
         ranked.groupBy("bucket")
@@ -1416,18 +1369,13 @@ ORDER BY r_score, f_score, m_score
 """
 
 
-GINI_BUCKETS = 64
-
-
 def gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of customer lifetime revenue — the
     concentration KPI ("do 20% of customers carry 80% of revenue"),
     computed from the closed rank form G = (2·Σ rank·x − (n+1)·Σx)
     / (n·Σx) over ascending-sorted values.
 
-    The global rank is the same single-task trap as the Pareto prefix;
-    the same two-phase escape applies: value-range bucket → 64-row
-    cumulative COUNT offsets → within-bucket row_number + offset.
+    The ascending rank is a ``windows.running_sums`` row number.
     Everything is BIGINT until the final ppm division (whole dollars,
     not cents, keep Σ rank·x ≤ 1.4e17 at SF 1; beyond SF ~50
     pre-scale the unit again — documented bound, same class as the
@@ -1437,30 +1385,7 @@ def gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = io.load_table(spark, sf_dir, "orders")
     dollars = F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("long")
     cust = o.groupBy("o_custkey").agg(F.sum(dollars).alias("x"))
-    stats = cust.agg(F.max("x").alias("maxx"))
-    b = (
-        cust.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "bucket",
-            F.least(
-                F.lit(GINI_BUCKETS - 1),
-                F.expr(f"x * {GINI_BUCKETS} div (maxx + 1)"),
-            ),
-        )
-        .persist()
-    )
-    bcnt = b.groupBy("bucket").agg(F.count(F.lit(1)).alias("bn"))
-    wb = Window.orderBy(F.asc("bucket")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = bcnt.select(
-        "bucket", F.coalesce(F.sum("bn").over(wb), F.lit(0)).alias("offset")
-    )
-    win = Window.partitionBy("bucket").orderBy(F.asc("x"), F.asc("o_custkey"))
-    ranked = (
-        b.join(F.broadcast(offsets), "bucket")
-        .withColumn("rank", F.row_number().over(win) + F.col("offset"))
-    )
+    ranked = running_sums(cust, F.col("x"), ["o_custkey"], {"rank": F.lit(1)})
     agg = ranked.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),

@@ -33,10 +33,11 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io, portable
+from .windows import running_sums
 
 # (child_table, child_key, parent_table, parent_key) — every FK edge of
 # the schema. Shared by the Spark plan and the generated oracle SQL so
@@ -611,7 +612,6 @@ FROM g
 
 KS_BASE_YEAR = PSI_BASE_YEAR
 KS_CUR_YEAR = PSI_CUR_YEAR
-_KS_BUCKETS = 64
 
 
 def ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -626,78 +626,48 @@ def ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     division — no float ever enters, so the driver hash cannot flap
     (NOTES trap 1).
 
-    Scale shape: the pooled ECDF needs a global prefix sum, which is
-    NEVER a single-task ``Window.orderBy`` here — values are bucketed
-    by fixed-width cent range from a 1-row bounds frontier (the
-    ``psi_drift`` pattern), per-bucket totals form a {_KS_BUCKETS}-row
-    relation whose strictly-before offsets come from a triangular
-    self-join (the ``sequence_packing`` pattern), and the exact
-    cumulative runs per-bucket in parallel.
+    The pooled ECDF's cumulative counts are ``windows.running_sums``
+    over the distinct cent values, both samples in one call. One-sided
+    or empty input has no KS statistic and emits zero rows, matching
+    the oracle's ``WHERE n1 > 0 AND n2 > 0`` guard.
     """
     o = io.load_table(spark, sf_dir, "orders").filter(
         F.year("o_orderdate").isin(KS_BASE_YEAR, KS_CUR_YEAR)
     )
-    c = o.select(
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-        F.year("o_orderdate").alias("y"),
-    )
-    lo, hi, n1, n2 = c.agg(
-        F.min("cents"),
-        F.max("cents"),
-        F.count(F.when(F.col("y") == KS_BASE_YEAR, 1)),
-        F.count(F.when(F.col("y") == KS_CUR_YEAR, 1)),
-    ).first()
-    if lo is None or n1 == 0 or n2 == 0:
-        # one-sided or empty input: KS is undefined — emit ZERO rows,
-        # matching the oracle's `WHERE n1 > 0 AND n2 > 0` guard (a
-        # fabricated row here would diverge from the SQL twin, and the
-        # main path's `div (n1·n2)` would throw under ANSI)
-        return spark.createDataFrame(
-            [], "n1 BIGINT, n2 BIGINT, ks_num BIGINT, ks_d_bp BIGINT"
-        )
-    span = max(hi - lo + 1, 1)
     g = (
-        c.withColumn(
-            "bkt",
-            F.expr(
-                f"least(((cents - {int(lo)}) * {_KS_BUCKETS})"
-                f" div {int(span)}, {_KS_BUCKETS - 1})"
-            ),
+        o.select(
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+            F.year("o_orderdate").alias("y"),
         )
-        .groupBy("bkt", "cents")
+        .groupBy("cents")
         .agg(
             F.count(F.when(F.col("y") == KS_BASE_YEAR, 1)).alias("c1"),
             F.count(F.when(F.col("y") == KS_CUR_YEAR, 1)).alias("c2"),
         )
     )
-    bt = g.groupBy("bkt").agg(F.sum("c1").alias("b1"), F.sum("c2").alias("b2"))
-    prev = bt.select(
-        F.col("bkt").alias("pbkt"), F.col("b1").alias("p1"), F.col("b2").alias("p2")
+    n = g.agg(F.sum("c1").alias("n1"), F.sum("c2").alias("n2"))
+    cum = running_sums(
+        g.crossJoin(F.broadcast(n)),
+        F.col("cents"),
+        [],
+        {"cum1": F.col("c1"), "cum2": F.col("c2")},
     )
-    starts = (
-        bt.join(prev, F.col("pbkt") < F.col("bkt"), "left")
-        .groupBy("bkt")
+    return (
+        cum.filter((F.col("n1") > 0) & (F.col("n2") > 0))
+        .groupBy("n1", "n2")
         .agg(
-            F.coalesce(F.sum("p1"), F.lit(0)).alias("o1"),
-            F.coalesce(F.sum("p2"), F.lit(0)).alias("o2"),
+            F.max(
+                F.abs(F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1"))
+            ).alias("ks_num")
         )
-    )
-    w = Window.partitionBy("bkt").orderBy("cents")
-    cum = g.join(F.broadcast(starts), "bkt").select(
-        (F.col("o1") + F.sum("c1").over(w)).alias("cum1"),
-        (F.col("o2") + F.sum("c2").over(w)).alias("cum2"),
-    )
-    return cum.agg(
-        F.max(
-            F.abs(F.col("cum1") * int(n2) - F.col("cum2") * int(n1))
-        ).alias("ks_num"),
-    ).select(
-        F.lit(int(n1)).cast("long").alias("n1"),
-        F.lit(int(n2)).cast("long").alias("n2"),
-        F.col("ks_num").cast("long").alias("ks_num"),
-        F.expr(f"ks_num * 10000 div {int(n1) * int(n2)}").alias("ks_d_bp"),
+        .select(
+            "n1",
+            "n2",
+            "ks_num",
+            F.expr("ks_num * 10000 div (n1 * n2)").alias("ks_d_bp"),
+        )
     )
 
 

@@ -8,7 +8,8 @@ customer, user) — state per partition is bounded and the single shuffle
 is on the partition key. No global (unpartitioned) windows: those
 serialize the dataset through one task and are forbidden in this
 engine at 100 TB (a global rank is expressed as orderBy+limit instead,
-see sorts_setops).
+see sorts_setops; a running sum or row number over a whole relation is
+``running_sums``).
 
 Determinism policy: any ORDER BY that feeds row_number/ntile/lag gets a
 unique tie-break column so the oracle can't disagree on tie order.
@@ -16,10 +17,97 @@ unique tie-break column so the oracle can't disagree on tie order.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io
+
+RUN_BUCKETS = 64
+
+
+def running_sums(
+    df: DataFrame,
+    key: Column,
+    tiebreak: Sequence[str | Column],
+    sums: dict[str, Column],
+    by: Sequence[str] = (),
+) -> DataFrame:
+    """``df`` plus, for each ``name: expr`` of ``sums``, the inclusive
+    running ``sum(expr)`` over each ``by`` partition in ``(key,
+    *tiebreak)`` order — ``sum(expr) OVER (PARTITION BY by ORDER BY
+    key, tiebreak ROWS UNBOUNDED PRECEDING)`` without the window that
+    puts a whole partition in one task. A row number is ``{"rn":
+    F.lit(1)}``; a descending order passes ``-key``, a timestamp
+    ``F.unix_micros(ts)``.
+
+    ``key`` is a non-null integral column with ``hi - lo < 2^57``
+    (``lo``/``hi`` its min and max), and ``(key, *tiebreak)`` should be
+    unique within a partition for a deterministic order. The sums are
+    exact for integral ``expr``.
+
+    Three steps, none of them a driver-side collect:
+    - buckets: ``least((key - lo) * RUN_BUCKETS div (hi - lo + 1),
+      RUN_BUCKETS - 1)``, equal-width over the key's range, from one
+      broadcast 1-row ``(lo, hi)`` aggregate; bucket order nests inside
+      key order, so ties never straddle a bucket edge;
+    - offsets: each ``(by, bucket)`` total is exploded to every later
+      bucket and summed per ``(by, later)`` — at most ``|by| ·
+      RUN_BUCKETS²`` rows, no non-equi join, no unpartitioned window;
+    - final pass: a broadcast left join of the offsets, then the window
+      partitioned by ``(by, bucket)``.
+
+    The bucketed relation is persisted: the totals and the final pass
+    both read it, and a repeat call on the same plan reads the cache
+    instead of recomputing the bounds. Filling it reads ``df`` twice
+    (bounds, rows); persist ``df`` first when the chain feeding it
+    re-reads a wide source (NOTES trap 22b). A caller that needs a
+    scalar frontier per row (a grand total) cross-joins it into ``df``
+    before the call, so the cache carries it too.
+    """
+    cols = df.columns
+    k = df.withColumn("_rs_key", key.cast("long"))
+    bounds = k.agg(F.min("_rs_key").alias("_rs_lo"), F.max("_rs_key").alias("_rs_hi"))
+    b = (
+        k.crossJoin(F.broadcast(bounds))
+        .select(
+            *cols,
+            "_rs_key",
+            F.expr(
+                f"CAST(least((_rs_key - _rs_lo) * {RUN_BUCKETS} div (_rs_hi - _rs_lo + 1),"
+                f" {RUN_BUCKETS - 1}) AS INT)"
+            ).alias("_rs_bkt"),
+        )
+        .persist()
+    )
+    # sequence(0, N-1) filtered, never sequence(bkt + 1, N-1): Spark
+    # counts DOWN when start > stop, so the last bucket would explode
+    # to [N, N-1]
+    offsets = (
+        b.groupBy(*by, "_rs_bkt")
+        .agg(*[F.sum(e).alias(n) for n, e in sums.items()])
+        .withColumn("_rs_later", F.explode(F.sequence(F.lit(0), F.lit(RUN_BUCKETS - 1))))
+        .filter(F.col("_rs_later") > F.col("_rs_bkt"))
+        .groupBy(*[F.col(c).alias(f"_rs_by{i}") for i, c in enumerate(by)], "_rs_later")
+        .agg(*[F.sum(n).alias(f"_rs_off_{n}") for n in sums])
+    )
+    # null-safe on `by`: groupBy and partitionBy keep a null group
+    on = [F.col("_rs_bkt") == F.col("_rs_later")] + [
+        F.col(c).eqNullSafe(F.col(f"_rs_by{i}")) for i, c in enumerate(by)
+    ]
+    w = (
+        Window.partitionBy(*by, "_rs_bkt")
+        .orderBy("_rs_key", *tiebreak)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return b.join(F.broadcast(offsets), on, "left").select(
+        *cols,
+        *[
+            (F.coalesce(F.col(f"_rs_off_{n}"), F.lit(0)) + F.sum(e).over(w)).alias(n)
+            for n, e in sums.items()
+        ],
+    )
 
 
 def topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -825,7 +913,6 @@ ORDER BY channel, day
 # Pareto / ABC classification (scalable ranked prefix sum)
 # ---------------------------------------------------------------------------
 
-ABC_BUCKETS = 64
 ABC_A_PPM = 800_000  # cumulative share <= 80% → A
 ABC_B_PPM = 950_000  # <= 95% → B, else C
 
@@ -836,51 +923,23 @@ def pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     B, else C), report the class rollup — the inventory-analytics
     80/20 cut.
 
-    The ranked prefix sum is the trap: a naive cumulative window over
-    (revenue DESC) is one task for the whole table. This uses the
-    two-phase bucketed shape (the sequence-packing/token-budget
-    pattern): value-range bucket per part → 64-row bucket-total
-    relation → cumulative bucket offsets on that tiny relation →
-    within-bucket prefix windows (64-way parallel) + offset. The
-    bucket is a pure function of the revenue value, so bucket-desc
-    order nests exactly inside (revenue DESC, partkey) global order.
-    All arithmetic in exact integer WHOLE DOLLARS / ppm — cent units
-    would push cum·10⁶ past BIGINT at SF ≥ ~0.4 (total revenue
-    ~2.3e13 cents at SF 1); dollars keep the product exact to SF ~40,
-    the same magnitude discipline as agg_gini_coefficient.
+    The ranked prefix sum is ``running_sums`` over ``-rev``. All
+    arithmetic in exact integer WHOLE DOLLARS / ppm — cent units would
+    push cum·10⁶ past BIGINT at SF ≥ ~0.4 (total revenue ~2.3e13 cents
+    at SF 1); dollars keep the product exact to SF ~40, the same
+    magnitude discipline as agg_gini_coefficient.
     """
     li = io.load_table(spark, sf_dir, "lineitem")
     dollars = F.floor(F.col("l_extendedprice") + F.lit(0.5)).cast("long")
     parts = li.groupBy("l_partkey").agg(F.sum(dollars).alias("rev"))
-    stats = parts.agg(
-        F.max("rev").alias("maxc"), F.sum("rev").alias("total")
-    )
-    b = parts.crossJoin(F.broadcast(stats)).withColumn(
-        "bucket",
-        F.least(
-            F.lit(ABC_BUCKETS - 1),
-            F.expr(f"rev * {ABC_BUCKETS} div (maxc + 1)"),
-        ),
-    )
-    # persist: both the offsets branch and the ranked join read b;
-    # uncached, Catalyst inlines the lineitem rollup into each branch
-    # and the fact table is scanned twice
-    b = b.persist()
-    btot = b.groupBy("bucket").agg(F.sum("rev").alias("brev"))
-    wb = Window.orderBy(F.desc("bucket")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    # the offsets window runs over ≤64 rows — the documented tiny-
-    # relation exception to the no-global-window rule
-    offsets = btot.select(
-        "bucket", F.coalesce(F.sum("brev").over(wb), F.lit(0)).alias("offset")
-    )
-    win = Window.partitionBy("bucket").orderBy(
-        F.desc("rev"), F.asc("l_partkey")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    total = parts.agg(F.sum("rev").alias("total"))
     ranked = (
-        b.join(F.broadcast(offsets), "bucket")
-        .withColumn("cum", F.sum("rev").over(win) + F.col("offset"))
+        running_sums(
+            parts.crossJoin(F.broadcast(total)),
+            -F.col("rev"),
+            ["l_partkey"],
+            {"cum": F.col("rev")},
+        )
         .withColumn("cum_ppm", F.expr("cum * 1000000 div total"))
         .withColumn(
             "abc_class",

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 keys = st.lists(
     st.one_of(st.none(), st.sampled_from(["a", "b", "c", "U0001D", "U0010D"])),
@@ -300,6 +300,57 @@ def test_token_budget_alloc_matches_naive(spark, docs):
     _run_vs_oracle(
         spark, d, "documents", text.token_budget_alloc, text.TOKEN_BUDGET_SQL
     )
+
+
+# running_sums rows: (group, key, value). Keys mix a small dense range
+# (ties, several per bucket) with two far extremes, so most of the 64
+# buckets between them stay empty.
+running_rows = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b", None]),
+        st.one_of(
+            st.integers(min_value=-20, max_value=20),
+            st.sampled_from([-(2**40), 2**40]),
+        ),
+        st.integers(min_value=-1000, max_value=1000),
+    ),
+    max_size=30,
+)
+
+
+@given(running_rows, st.booleans(), st.booleans())
+@example([], False, False)  # empty input
+@example([("a", 7, 3)], False, False)  # a single row
+@example([("a", 5, 1), ("b", 5, 2), ("a", 5, -4)], True, False)  # hi == lo
+@example([("a", -(2**40), 1), ("a", 2**40, 2), ("a", 0, 3)], False, True)
+@example([(None, -(2**40), 1), ("a", 2**40, 2), (None, 2**40, 3)], True, False)
+@SETTINGS
+def test_running_sums_matches_a_plain_window(spark, rows, grouped, descending):
+    """windows.running_sums equals the single-window running sum it
+    replaces: a row number and a value sum side by side, ascending or
+    negated (descending) keys, with or without ``by`` groups (a null
+    group included)."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    from seamless_sharepoint_etl_spark.operators.windows import running_sums
+
+    df = spark.createDataFrame(
+        [(i, g, k, v) for i, (g, k, v) in enumerate(rows)],
+        "id BIGINT, g STRING, k BIGINT, v BIGINT",
+    )
+    key = -F.col("k") if descending else F.col("k")
+    by = ["g"] if grouped else []
+    sums = {"rn": F.lit(1), "s": F.col("v")}
+    w = (
+        Window.partitionBy(*by)
+        .orderBy(key, "id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    want = df.select("*", *[F.sum(e).over(w).alias(n) for n, e in sums.items()])
+    got = running_sums(df, key, ["id"], sums, by=by)
+    assert got.columns == want.columns
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 @given(

@@ -2026,6 +2026,92 @@ def test_one_fixpoint_loop_lives_in_iterate():
     assert path == iterative.__file__ and start <= line < start + len(src), loops
 
 
+_RUNNING_SUM_SITES = {
+    ("streaming/jobs.py", "prepare_stream_source"),
+    ("llm_ops/curation.py", "sequence_packing"),
+    ("llm_ops/text.py", "token_budget_alloc"),
+    ("operators/quality.py", "ks_drift"),
+    ("operators/windows.py", "pareto_abc"),
+    ("operators/aggregates.py", "gini_coefficient"),
+    ("operators/aggregates.py", "equidepth_histogram"),
+}
+
+
+def test_one_bucketed_prefix_sum_lives_in_running_sums():
+    """Every bucketed running sum runs through ``windows.running_sums``:
+    the package holds no 64-bucket constant but ``RUN_BUCKETS``, no
+    join on a bucket inequality (the triangular strictly-before
+    self-join) and no window ordered by a bucket column (the offsets
+    window over the bucket totals), and the seven callers call it."""
+    import ast
+    import os
+    import re
+
+    import seamless_sharepoint_etl_spark as pkg
+
+    bucketish = re.compile(r"(?i)bkt|bucket|bin")
+
+    def names_bucket(node) -> bool:
+        return any(
+            isinstance(c, ast.Constant)
+            and isinstance(c.value, str)
+            and bucketish.search(c.value)
+            for c in ast.walk(node)
+        )
+
+    def root_name(node) -> str:
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return node.id if isinstance(node, ast.Name) else ""
+
+    root = os.path.dirname(pkg.__file__)
+    found, callers = [], set()
+    for dirpath, _dirs, files in os.walk(root):
+        for f in (f for f in files if f.endswith(".py")):
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and any(
+                    isinstance(c, ast.Name) and c.id == "running_sums"
+                    for c in ast.walk(fn)
+                ):
+                    callers.add((rel, fn.name))
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Assign)
+                    and isinstance(node.value, ast.Constant)
+                    and node.value.value == 64  # RUN_BUCKETS
+                ):
+                    for t in node.targets:
+                        if (
+                            isinstance(t, ast.Name)
+                            and bucketish.search(t.id)
+                            and (rel, t.id) != ("operators/windows.py", "RUN_BUCKETS")
+                        ):
+                            found.append((rel, node.lineno, t.id))
+                if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                    continue
+                if node.func.attr == "join" and any(
+                    isinstance(c, ast.Compare)
+                    and any(isinstance(op, (ast.Lt, ast.LtE, ast.Gt, ast.GtE)) for op in c.ops)
+                    and names_bucket(c)
+                    for a in node.args
+                    for c in ast.walk(a)
+                ):
+                    found.append((rel, node.lineno, "bucket-inequality join"))
+                if (
+                    node.func.attr == "orderBy"
+                    and root_name(node) == "Window"
+                    and node.args
+                    and names_bucket(node.args[0])
+                ):
+                    found.append((rel, node.lineno, "window ordered by a bucket"))
+    assert not found, found
+    assert _RUNNING_SUM_SITES <= callers, _RUNNING_SUM_SITES - callers
+
+
 def test_iterate_raises_at_the_round_cap(spark, monkeypatch):
     """A fixpoint that never converges raises, naming its caller, once
     the round cap is reached — never a silently unconverged state."""
@@ -2056,17 +2142,16 @@ _ITERATIVE_JOB_BUDGETS = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(_ITERATIVE_JOB_BUDGETS))
-def test_iterative_queries_stay_within_job_budget(spark, name):
-    """Each round of an iterative query is a Spark-driver barrier, so
-    its job count is its fixed cost. A warm build + collect (session
-    artifacts filled by a first call) stays within the pinned budget."""
+def _warm_jobs(spark, name: str) -> tuple[list, int]:
+    """(rows, jobs) of a warm build + collect of registry query
+    ``name`` on SF_DIR: a first call fills the session artifacts and
+    caches, the second is counted."""
     from seamless_sharepoint_etl_spark import registry
 
     sc = spark.sparkContext
     fn, _sql = registry._collect()[name]
     fn(spark, SF_DIR).collect()
-    group = f"iter-budget-{name}"
+    group = f"job-budget-{name}"
     sc.setJobGroup(group, group)
     try:
         rows = fn(spark, SF_DIR).collect()
@@ -2074,9 +2159,40 @@ def test_iterative_queries_stay_within_job_budget(spark, name):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", sorted(_ITERATIVE_JOB_BUDGETS))
+def test_iterative_queries_stay_within_job_budget(spark, name):
+    """Each round of an iterative query is a Spark-driver barrier, so
+    its job count is its fixed cost. A warm build + collect (session
+    artifacts filled by a first call) stays within the pinned budget."""
+    rows, n_jobs = _warm_jobs(spark, name)
     assert rows, name
     assert n_jobs <= _ITERATIVE_JOB_BUDGETS[name], (name, n_jobs)
+
+
+# Warm build + collect jobs on SF_DIR of the queries that call
+# windows.running_sums (with hand-written prefix sums they took 12, 7,
+# 10, 8, 6 and 10 in this order).
+_RUNNING_SUM_JOB_BUDGETS = {
+    "text_sequence_packing": 5,
+    "text_token_budget_alloc": 5,
+    "diag_ks_drift": 6,
+    "win_pareto_abc": 8,
+    "agg_gini_coefficient": 6,
+    "agg_equidepth_histogram": 8,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_RUNNING_SUM_JOB_BUDGETS))
+def test_running_sum_queries_stay_within_job_budget(spark, name):
+    """running_sums computes its bounds and offsets inside the plan and
+    caches its bucketed input, so a warm query pays only the bucket
+    totals, the offsets and the window, never a driver round-trip."""
+    rows, n_jobs = _warm_jobs(spark, name)
+    assert rows, name
+    assert n_jobs <= _RUNNING_SUM_JOB_BUDGETS[name], (name, n_jobs)
 
 
 def test_neardup_cc_queries_read_the_shared_labels(spark):

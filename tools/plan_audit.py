@@ -74,10 +74,6 @@ ALLOWLIST: dict[tuple[str, str], str] = {
         "triangular league-table rank joins over the <=|brands|-row "
         "period rollups (bounded by brand cardinality)"
     ),
-    ("diag_ks_drift", "bnlj"): (
-        "triangular strictly-before offsets over the 64-row bucket "
-        "relation (bounded by the bucket constant)"
-    ),
     ("agg_bootstrap_ci", "bnlj"): (
         "triangular rank join over the 32-row bootstrap-replica means "
         "relation (bounded by the N_REPLICAS constant; surfaced by the "
@@ -87,20 +83,9 @@ ALLOWLIST: dict[tuple[str, str], str] = {
         "folds relation: a <=#folds-row driver literal "
         "(createDataFrame), bounded by the CV configuration"
     ),
-    ("text_sequence_packing", "bnlj"): (
-        "two-phase bucketed prefix sum: strictly-before offsets over "
-        "the <=|buckets|-row bucket-totals relation"
-    ),
     ("text_zipf_slope", "bnlj"): (
         "triangular rank join over the top-500 token relation "
         "(bounded by the fit-window constant)"
-    ),
-    ("agg_gini_coefficient", "global_win"): (
-        "ordered global window over the <=64-row bucket-totals "
-        "relation (SinglePartition over a bounded rollup, by design)"
-    ),
-    ("win_pareto_abc", "global_win"): (
-        "ordered global window over the <=64-row bucket-totals relation"
     ),
     ("ts_kaplan_meier", "global_win"): (
         "suffix-sum window over the <=31-row duration relation "

@@ -14,6 +14,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# one Spark core per usable CPU (as the tier-1 command exports `nproc`):
+# session.get_spark defaults to local[32], which on a smaller machine
+# times oversubscription instead of the query
+os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 
 def main() -> None:
